@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.operators.EtlOps
+import graft.operators.{DriftReports, EtlOps}
 
 /** §2.2 of SURVEY.md — the dashboard/analytical surface (the reference's
   * Looker Studio layer) as TPC-H-shaped plans over the testdata.
@@ -36,6 +36,97 @@ object AnalyticQueries {
           sequence(lit(1), length(name)),
           i => concat(name.substr(lit(1), i - 1), name.substr(i + 1, length(name)))))
         .otherwise(array().cast("array<string>")))
+
+  /** The oracles of q_drift_psi and q_drift_chi2. Their streaming
+    * deployments (q_stream_drift, q_stream_chi2) must converge to exactly
+    * the batch report, so they are checked against the same SQL. Defined
+    * above [[all]] so they are initialized before it.
+    */
+  private[graft] val driftPsiOracle: String =
+    """WITH ev AS (
+             |  SELECT event_type, value, epoch_us(ts) AS us FROM events),
+             |med AS (SELECT quantile_cont(us, 0.5) AS med FROM ev),
+             |half AS (
+             |  SELECT event_type, value, us <= (SELECT med FROM med) AS is_ref FROM ev),
+             |cuts AS (
+             |  SELECT event_type,
+             |    list_transform(
+             |      quantile_cont(value, [0.1,0.2,0.3,0.4,0.5,0.6,0.7,0.8,0.9]),
+             |      x -> round(x, 6)) AS cuts
+             |  FROM half WHERE is_ref GROUP BY 1),
+             |counts AS (
+             |  SELECT h.event_type,
+             |    CAST(len(list_filter(c.cuts, x -> x <= h.value)) AS INT) AS bin,
+             |    CAST(SUM(CASE WHEN h.is_ref THEN 1 ELSE 0 END) AS BIGINT) AS c_ref,
+             |    CAST(SUM(CASE WHEN h.is_ref THEN 0 ELSE 1 END) AS BIGINT) AS c_cur
+             |  FROM half h JOIN cuts c USING (event_type)
+             |  GROUP BY 1, 2),
+             |domain AS (
+             |  SELECT c.event_type, CAST(r.range AS INT) AS bin FROM cuts c, range(10) r),
+             |filled AS (
+             |  SELECT d.event_type, d.bin,
+             |    COALESCE(c.c_ref, 0) AS c_ref, COALESCE(c.c_cur, 0) AS c_cur
+             |  FROM domain d LEFT JOIN counts c USING (event_type, bin)),
+             |totals AS (
+             |  SELECT event_type, CAST(SUM(c_ref) AS BIGINT) AS n_ref,
+             |    CAST(SUM(c_cur) AS BIGINT) AS n_cur
+             |  FROM filled GROUP BY 1),
+             |terms AS (
+             |  SELECT f.event_type, t.n_ref, t.n_cur,
+             |    CAST(round(
+             |      ((CAST(f.c_ref AS DOUBLE) + 0.5) / (CAST(t.n_ref AS DOUBLE) + 5.0)
+             |       - (CAST(f.c_cur AS DOUBLE) + 0.5) / (CAST(t.n_cur AS DOUBLE) + 5.0))
+             |      * ln(((CAST(f.c_ref AS DOUBLE) + 0.5) / (CAST(t.n_ref AS DOUBLE) + 5.0))
+             |           / ((CAST(f.c_cur AS DOUBLE) + 0.5) / (CAST(t.n_cur AS DOUBLE) + 5.0)))
+             |      * 1.0e12) AS BIGINT) AS term_fp
+             |  FROM filled f JOIN totals t USING (event_type))
+             |SELECT event_type, n_ref, n_cur,
+             |  round(CAST(CAST(SUM(term_fp) AS BIGINT) AS DOUBLE) / 1.0e12, 6) AS psi,
+             |  CAST(SUM(term_fp) AS BIGINT) > 200000000000 AS drift_alert
+             |FROM terms GROUP BY 1, 2, 3 ORDER BY event_type""".stripMargin
+
+  private[graft] val driftChi2Oracle: String =
+    """WITH ev AS (
+             |  SELECT event_type, epoch_us(ts) AS us FROM events),
+             |med AS (SELECT quantile_cont(us, 0.5) AS med FROM ev),
+             |counts AS (
+             |  SELECT event_type,
+             |    CAST(SUM(CASE WHEN us <= (SELECT med FROM med) THEN 1 ELSE 0 END) AS BIGINT) AS c_ref,
+             |    CAST(SUM(CASE WHEN us > (SELECT med FROM med) THEN 1 ELSE 0 END) AS BIGINT) AS c_cur
+             |  FROM ev GROUP BY 1),
+             |totals AS (
+             |  SELECT CAST(SUM(c_ref) AS BIGINT) AS t_ref,
+             |    CAST(SUM(c_cur) AS BIGINT) AS t_cur,
+             |    CAST(COUNT(*) AS BIGINT) AS k
+             |  FROM counts),
+             |terms AS (
+             |  SELECT t_ref, t_cur, k,
+             |    CAST(round((
+             |      (CAST(c_ref AS DOUBLE)
+             |        - CAST(c_ref + c_cur AS DOUBLE) * CAST(t_ref AS DOUBLE) / CAST(t_ref + t_cur AS DOUBLE))
+             |      * (CAST(c_ref AS DOUBLE)
+             |        - CAST(c_ref + c_cur AS DOUBLE) * CAST(t_ref AS DOUBLE) / CAST(t_ref + t_cur AS DOUBLE))
+             |      / (CAST(c_ref + c_cur AS DOUBLE) * CAST(t_ref AS DOUBLE) / CAST(t_ref + t_cur AS DOUBLE))
+             |      + (CAST(c_cur AS DOUBLE)
+             |        - CAST(c_ref + c_cur AS DOUBLE) * CAST(t_cur AS DOUBLE) / CAST(t_ref + t_cur AS DOUBLE))
+             |      * (CAST(c_cur AS DOUBLE)
+             |        - CAST(c_ref + c_cur AS DOUBLE) * CAST(t_cur AS DOUBLE) / CAST(t_ref + t_cur AS DOUBLE))
+             |      / (CAST(c_ref + c_cur AS DOUBLE) * CAST(t_cur AS DOUBLE) / CAST(t_ref + t_cur AS DOUBLE))
+             |    ) * 1.0e9) AS BIGINT) AS term_fp
+             |  FROM counts, totals),
+             |agg AS (
+             |  SELECT MAX(t_ref) AS n_ref, MAX(t_cur) AS n_cur, MAX(k) AS k,
+             |    CAST(SUM(term_fp) AS BIGINT) AS chi2_fp
+             |  FROM terms)
+             |SELECT n_ref, n_cur, k, k - 1 AS df,
+             |  CASE WHEN n_ref > 0 AND n_cur > 0 THEN round(CAST(chi2_fp AS DOUBLE) / 1.0e9, 6)
+             |    ELSE error('chi2: degenerate median split (an empty half)') END AS chi2,
+             |  chi2_fp > CASE k - 1
+             |    WHEN 1 THEN 3841458821 WHEN 2 THEN 5991464547 WHEN 3 THEN 7814727903
+             |    WHEN 4 THEN 9487729037 WHEN 5 THEN 11070497694 WHEN 6 THEN 12591587244
+             |    WHEN 7 THEN 14067140449 WHEN 8 THEN 15507313056 WHEN 9 THEN 16918977605
+             |    END AS drift_alert
+             |FROM agg""".stripMargin
 
   val all: Seq[Q] = Seq(
     // Q5 shape: revenue by nation for one region + date window.
@@ -971,94 +1062,9 @@ object AnalyticQueries {
           .agg(
             sum(when(col("us") <= col("med"), 1L).otherwise(0L)).as("c_ref"),
             sum(when(col("us") > col("med"), 1L).otherwise(0L)).as("c_cur"))
-        val totals = counts.agg(
-          sum(col("c_ref")).as("t_ref"),
-          sum(col("c_cur")).as("t_cur"),
-          count(lit(1)).as("k"))
-        val crD = col("c_ref").cast("double")
-        val ccD = col("c_cur").cast("double")
-        val ni = (col("c_ref") + col("c_cur")).cast("double")
-        val nTot = (col("t_ref") + col("t_cur")).cast("double")
-        val eRef = ni * col("t_ref").cast("double") / nTot
-        val eCur = ni * col("t_cur").cast("double") / nTot
-        val term = (crD - eRef) * (crD - eRef) / eRef + (ccD - eCur) * (ccD - eCur) / eCur
-        val critFp = when(col("df") === 1, 3841458821L)
-          .when(col("df") === 2, 5991464547L)
-          .when(col("df") === 3, 7814727903L)
-          .when(col("df") === 4, 9487729037L)
-          .when(col("df") === 5, 11070497694L)
-          .when(col("df") === 6, 12591587244L)
-          .when(col("df") === 7, 14067140449L)
-          .when(col("df") === 8, 15507313056L)
-          .when(col("df") === 9, 16918977605L)
-        counts
-          .crossJoin(broadcast(totals))
-          .select(
-            col("t_ref"), col("t_cur"), col("k"),
-            round(term * lit(1.0e9), 0).cast("long").as("term_fp"))
-          .groupBy()
-          .agg(
-            max(col("t_ref")).as("n_ref"),
-            max(col("t_cur")).as("n_cur"),
-            max(col("k")).as("k"),
-            sum(col("term_fp")).as("chi2_fp"))
-          .withColumn("df", col("k") - 1)
-          .select(
-            col("n_ref"), col("n_cur"), col("k"), col("df"),
-            // Zero-expected guard: eRef/eCur are 0 iff a whole HALF is
-            // empty (t_ref or t_cur = 0 — a degenerate median split, e.g.
-            // every timestamp identical). The term then goes NaN, and the
-            // engines DIVERGE instead of failing together: Spark casts NaN
-            // to long as 0 silently while DuckDB errors on the cast. Fail
-            // loudly on both engines instead (the oracle carries the same
-            // CASE→error()).
-            when(col("n_ref") > 0 && col("n_cur") > 0,
-              round(col("chi2_fp").cast("double") / lit(1.0e9), 6))
-              .otherwise(raise_error(lit("chi2: degenerate median split (an empty half)")))
-              .as("chi2"),
-            (col("chi2_fp") > critFp).as("drift_alert"))
+        DriftReports.chi2(counts)
       },
-      Some("""WITH ev AS (
-             |  SELECT event_type, epoch_us(ts) AS us FROM events),
-             |med AS (SELECT quantile_cont(us, 0.5) AS med FROM ev),
-             |counts AS (
-             |  SELECT event_type,
-             |    CAST(SUM(CASE WHEN us <= (SELECT med FROM med) THEN 1 ELSE 0 END) AS BIGINT) AS c_ref,
-             |    CAST(SUM(CASE WHEN us > (SELECT med FROM med) THEN 1 ELSE 0 END) AS BIGINT) AS c_cur
-             |  FROM ev GROUP BY 1),
-             |totals AS (
-             |  SELECT CAST(SUM(c_ref) AS BIGINT) AS t_ref,
-             |    CAST(SUM(c_cur) AS BIGINT) AS t_cur,
-             |    CAST(COUNT(*) AS BIGINT) AS k
-             |  FROM counts),
-             |terms AS (
-             |  SELECT t_ref, t_cur, k,
-             |    CAST(round((
-             |      (CAST(c_ref AS DOUBLE)
-             |        - CAST(c_ref + c_cur AS DOUBLE) * CAST(t_ref AS DOUBLE) / CAST(t_ref + t_cur AS DOUBLE))
-             |      * (CAST(c_ref AS DOUBLE)
-             |        - CAST(c_ref + c_cur AS DOUBLE) * CAST(t_ref AS DOUBLE) / CAST(t_ref + t_cur AS DOUBLE))
-             |      / (CAST(c_ref + c_cur AS DOUBLE) * CAST(t_ref AS DOUBLE) / CAST(t_ref + t_cur AS DOUBLE))
-             |      + (CAST(c_cur AS DOUBLE)
-             |        - CAST(c_ref + c_cur AS DOUBLE) * CAST(t_cur AS DOUBLE) / CAST(t_ref + t_cur AS DOUBLE))
-             |      * (CAST(c_cur AS DOUBLE)
-             |        - CAST(c_ref + c_cur AS DOUBLE) * CAST(t_cur AS DOUBLE) / CAST(t_ref + t_cur AS DOUBLE))
-             |      / (CAST(c_ref + c_cur AS DOUBLE) * CAST(t_cur AS DOUBLE) / CAST(t_ref + t_cur AS DOUBLE))
-             |    ) * 1.0e9) AS BIGINT) AS term_fp
-             |  FROM counts, totals),
-             |agg AS (
-             |  SELECT MAX(t_ref) AS n_ref, MAX(t_cur) AS n_cur, MAX(k) AS k,
-             |    CAST(SUM(term_fp) AS BIGINT) AS chi2_fp
-             |  FROM terms)
-             |SELECT n_ref, n_cur, k, k - 1 AS df,
-             |  CASE WHEN n_ref > 0 AND n_cur > 0 THEN round(CAST(chi2_fp AS DOUBLE) / 1.0e9, 6)
-             |    ELSE error('chi2: degenerate median split (an empty half)') END AS chi2,
-             |  chi2_fp > CASE k - 1
-             |    WHEN 1 THEN 3841458821 WHEN 2 THEN 5991464547 WHEN 3 THEN 7814727903
-             |    WHEN 4 THEN 9487729037 WHEN 5 THEN 11070497694 WHEN 6 THEN 12591587244
-             |    WHEN 7 THEN 14067140449 WHEN 8 THEN 15507313056 WHEN 9 THEN 16918977605
-             |    END AS drift_alert
-             |FROM agg""".stripMargin)
+      Some(driftChi2Oracle)
     ),
 
     Q(
@@ -1089,80 +1095,11 @@ object AnalyticQueries {
           .agg(
             sum(when(col("is_ref"), 1L).otherwise(0L)).as("c_ref"),
             sum(when(!col("is_ref"), 1L).otherwise(0L)).as("c_cur"))
-        val domain = cuts
-          .select("event_type")
-          .crossJoin(s.range(10).select(col("id").cast("int").as("bin")))
-        val full = domain
-          .join(counts, Seq("event_type", "bin"), "left")
-          .select(
-            col("event_type"),
-            col("bin"),
-            coalesce(col("c_ref"), lit(0L)).as("c_ref"),
-            coalesce(col("c_cur"), lit(0L)).as("c_cur"))
-        val totals = full
-          .groupBy("event_type")
-          .agg(sum(col("c_ref")).as("n_ref"), sum(col("c_cur")).as("n_cur"))
-        val p = (col("c_ref").cast("double") + lit(0.5)) /
-          (col("n_ref").cast("double") + lit(5.0))
-        val q = (col("c_cur").cast("double") + lit(0.5)) /
-          (col("n_cur").cast("double") + lit(5.0))
-        full
-          .join(broadcast(totals), Seq("event_type"))
-          .withColumn("term_fp", round((p - q) * log(p / q) * lit(1.0e12), 0).cast("long"))
-          .groupBy("event_type")
-          .agg(
-            max(col("n_ref")).as("n_ref"),
-            max(col("n_cur")).as("n_cur"),
-            sum(col("term_fp")).as("psi_fp"))
-          .select(
-            col("event_type"),
-            col("n_ref"),
-            col("n_cur"),
-            round(col("psi_fp").cast("double") / lit(1.0e12), 6).as("psi"),
-            (col("psi_fp") > lit(200000000000L)).as("drift_alert"))
+        DriftReports.psi(cuts, Seq(counts))
+          .drop("psi_fp")
           .orderBy("event_type")
       },
-      Some("""WITH ev AS (
-             |  SELECT event_type, value, epoch_us(ts) AS us FROM events),
-             |med AS (SELECT quantile_cont(us, 0.5) AS med FROM ev),
-             |half AS (
-             |  SELECT event_type, value, us <= (SELECT med FROM med) AS is_ref FROM ev),
-             |cuts AS (
-             |  SELECT event_type,
-             |    list_transform(
-             |      quantile_cont(value, [0.1,0.2,0.3,0.4,0.5,0.6,0.7,0.8,0.9]),
-             |      x -> round(x, 6)) AS cuts
-             |  FROM half WHERE is_ref GROUP BY 1),
-             |counts AS (
-             |  SELECT h.event_type,
-             |    CAST(len(list_filter(c.cuts, x -> x <= h.value)) AS INT) AS bin,
-             |    CAST(SUM(CASE WHEN h.is_ref THEN 1 ELSE 0 END) AS BIGINT) AS c_ref,
-             |    CAST(SUM(CASE WHEN h.is_ref THEN 0 ELSE 1 END) AS BIGINT) AS c_cur
-             |  FROM half h JOIN cuts c USING (event_type)
-             |  GROUP BY 1, 2),
-             |domain AS (
-             |  SELECT c.event_type, CAST(r.range AS INT) AS bin FROM cuts c, range(10) r),
-             |filled AS (
-             |  SELECT d.event_type, d.bin,
-             |    COALESCE(c.c_ref, 0) AS c_ref, COALESCE(c.c_cur, 0) AS c_cur
-             |  FROM domain d LEFT JOIN counts c USING (event_type, bin)),
-             |totals AS (
-             |  SELECT event_type, CAST(SUM(c_ref) AS BIGINT) AS n_ref,
-             |    CAST(SUM(c_cur) AS BIGINT) AS n_cur
-             |  FROM filled GROUP BY 1),
-             |terms AS (
-             |  SELECT f.event_type, t.n_ref, t.n_cur,
-             |    CAST(round(
-             |      ((CAST(f.c_ref AS DOUBLE) + 0.5) / (CAST(t.n_ref AS DOUBLE) + 5.0)
-             |       - (CAST(f.c_cur AS DOUBLE) + 0.5) / (CAST(t.n_cur AS DOUBLE) + 5.0))
-             |      * ln(((CAST(f.c_ref AS DOUBLE) + 0.5) / (CAST(t.n_ref AS DOUBLE) + 5.0))
-             |           / ((CAST(f.c_cur AS DOUBLE) + 0.5) / (CAST(t.n_cur AS DOUBLE) + 5.0)))
-             |      * 1.0e12) AS BIGINT) AS term_fp
-             |  FROM filled f JOIN totals t USING (event_type))
-             |SELECT event_type, n_ref, n_cur,
-             |  round(CAST(CAST(SUM(term_fp) AS BIGINT) AS DOUBLE) / 1.0e12, 6) AS psi,
-             |  CAST(SUM(term_fp) AS BIGINT) > 200000000000 AS drift_alert
-             |FROM terms GROUP BY 1, 2, 3 ORDER BY event_type""".stripMargin)
+      Some(driftPsiOracle)
     ),
 
     // The drift monitor's 100 TB form (q_drift_psi's registered sketch
@@ -1223,40 +1160,13 @@ object AnalyticQueries {
           .agg(
             sum(when(col("is_ref"), 1L).otherwise(0L)).as("c_ref"),
             sum(when(!col("is_ref"), 1L).otherwise(0L)).as("c_cur"))
-        // Shared fixed-point PSI over either bin axis (the q_drift_psi
-        // pipeline: explicit 0..9 domain, add-half smoothing, 1e-12 terms).
-        def psiFp(binCol: String): org.apache.spark.sql.DataFrame = {
-          val byBin = counts
+        // The q_drift_psi report over either bin axis.
+        def psiOn(binCol: String): org.apache.spark.sql.DataFrame =
+          DriftReports.psi(stats, Seq(counts
             .groupBy(col("event_type"), col(binCol).as("bin"))
-            .agg(sum(col("c_ref")).as("c_ref"), sum(col("c_cur")).as("c_cur"))
-          val domain = stats
-            .select("event_type")
-            .crossJoin(s.range(10).select(col("id").cast("int").as("bin")))
-          val full = domain
-            .join(byBin, Seq("event_type", "bin"), "left")
-            .select(
-              col("event_type"),
-              col("bin"),
-              coalesce(col("c_ref"), lit(0L)).as("c_ref"),
-              coalesce(col("c_cur"), lit(0L)).as("c_cur"))
-          val totals = full
-            .groupBy("event_type")
-            .agg(sum(col("c_ref")).as("n_ref"), sum(col("c_cur")).as("n_cur"))
-          val p = (col("c_ref").cast("double") + lit(0.5)) /
-            (col("n_ref").cast("double") + lit(5.0))
-          val q = (col("c_cur").cast("double") + lit(0.5)) /
-            (col("n_cur").cast("double") + lit(5.0))
-          full
-            .join(broadcast(totals), Seq("event_type"))
-            .withColumn("term_fp", round((p - q) * log(p / q) * lit(1.0e12), 0).cast("long"))
-            .groupBy("event_type")
-            .agg(
-              max(col("n_ref")).as("n_ref"),
-              max(col("n_cur")).as("n_cur"),
-              sum(col("term_fp")).as("psi_fp"))
-        }
-        val exact = psiFp("bin_e")
-        val sketch = psiFp("bin_a").select(col("event_type"), col("psi_fp").as("psi_fp_a"))
+            .agg(sum(col("c_ref")).as("c_ref"), sum(col("c_cur")).as("c_cur"))))
+        val exact = psiOn("bin_e")
+        val sketch = psiOn("bin_a").select(col("event_type"), col("psi_fp").as("psi_fp_a"))
         val inBand = forall(
           sequence(lit(1), lit(9)),
           k =>
@@ -1270,8 +1180,8 @@ object AnalyticQueries {
             col("event_type"),
             col("n_ref"),
             col("n_cur"),
-            round(col("psi_fp").cast("double") / lit(1.0e12), 6).as("psi"),
-            (col("psi_fp") > lit(200000000000L)).as("drift_alert"),
+            col("psi"),
+            col("drift_alert"),
             inBand.as("cuts_in_band"),
             (abs(col("psi_fp_a") - col("psi_fp")) <= lit(50000000000L)).as("psi_in_band"))
           .orderBy("event_type")

@@ -36,7 +36,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // Snapshot the previous record BEFORE the end-of-run overwrite.
     val prev = prevQueryTimes(java.nio.file.Paths.get("bench.json"))
     // Bench temp space on a RAM disk when one exists: the q_stream_*
@@ -59,7 +58,7 @@ object Bench {
     }
     // The engine's tuned session (AQE, UTC, broadcast threshold, bloom
     // pruning, GraftExtensions) IS the measured artifact.
-    val spark = Engine.session(s"local[$cpus]", cpus.toInt)
+    val spark = Engine.localSession()
     // Warm up session machinery (codegen compiler, shuffle system, parquet
     // footer reader) so the alphabetically-first query doesn't absorb ~5s of
     // one-time JVM init into its measurement.
@@ -176,7 +175,7 @@ object Bench {
     // heavy enough to matter clears half a second immediately.
     // Measured-envelope exemption (closes the three-round q_dedup_substrings
     // variance file, r15): its EXCLUSIVE same-code envelope is 1.52-9.17 s
-    // (tools.VarianceProbe, 10 back-to-back runs at sf0.1 — 9.17 s on the
+    // (10 back-to-back runs at sf0.1 — 9.17 s on the
     // FIRST execution, monotone decay to a 1.52-1.73 s steady state). The
     // swing is the one-off codegen/JIT compile of its window-hash +
     // inverted-index stages landing wherever the query falls in the run's

@@ -37,29 +37,53 @@ object Engine {
     spark
   }
 
-  /** Streaming state-store seam (SURVEY.md §5). The default HDFS-backed
-    * provider keeps every live state row ON-HEAP per executor and uploads
-    * full snapshots to the checkpoint — fine for bounded tests, a memory
-    * and upload ceiling for q_stream_join's four state stores per shuffle
-    * partition at 100 TB. RocksDB keeps state on local disk (executor heap
-    * no longer bounds live keys) and, with changelog checkpointing, uploads
-    * only each batch's delta, snapshotting in the background.
-    *
-    * Session-conf scoped: a streaming query binds its provider at START
-    * and the provider is part of the checkpoint's identity, so flip the
-    * seam BEFORE starting a query and never under an existing checkpoint.
+  /** Local thread count of the command-line entry points:
+    * `SPARK_GRAFT_CPUS` when set, else the host's cores.
     */
-  def useRocksDbStateStore(spark: SparkSession, enable: Boolean = true): Unit =
-    if (enable) {
-      spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      spark.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-    } else {
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      spark.conf.unset("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled")
+  def cpus: Int =
+    sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** [[session]] on `local[cpus]`, one shuffle partition per thread. */
+  def localSession(): SparkSession = session(s"local[$cpus]", cpus)
+
+  /** Runs `body` with the session-conf keys set, then gives each key back
+    * its prior value, or unsets it if it had none — also when `body`
+    * throws, so a failed build never leaks a setting to later queries.
+    */
+  def withConf[A](spark: SparkSession, kvs: (String, String)*)(body: => A): A = {
+    val explicit = spark.conf.getAll
+    val prior = kvs.map { case (k, _) => k -> explicit.get(k) }
+    try {
+      kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+      body
+    } finally prior.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
     }
+  }
+
+  /** Streaming state-store seam (SURVEY.md §5): runs `body` under the
+    * RocksDB provider with changelog checkpointing. The default
+    * HDFS-backed provider keeps every live state row ON-HEAP per executor
+    * and uploads full snapshots to the checkpoint — fine for bounded
+    * tests, a memory and upload ceiling for q_stream_join's four state
+    * stores per shuffle partition at 100 TB. RocksDB keeps state on local
+    * disk (executor heap no longer bounds live keys) and uploads only each
+    * batch's delta, snapshotting in the background. Measured on
+    * q_stream_join_outer at sf0.1 (local[32]), RocksDB with changelog
+    * checkpointing runs level with the default provider, so the registry
+    * uses it only where the operator requires it (q_stream_quota's
+    * transformWithState).
+    *
+    * A streaming query binds its provider at START and the provider is
+    * part of the checkpoint's identity, so start the query inside `body`
+    * and never under a checkpoint made with the other provider.
+    */
+  def useRocksDbStateStore[A](spark: SparkSession)(body: => A): A =
+    withConf(spark,
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")(body)
 }
 
 /** Typed loaders for the driver testdata star schema (TESTDATA.md).

@@ -19,7 +19,7 @@ object Explain {
       println(s"total=${all.size} oracled=${all.count(_.oracle.isDefined)}")
       return
     }
-    val spark = Engine.session("local[4]", 8)
+    val spark = Engine.localSession()
     val names = if (rest.nonEmpty) rest else QueryRegistry.all.map(_.name)
     for (n <- names) {
       val df = QueryRegistry.queries(n)(spark, sfDir)

@@ -183,7 +183,7 @@ object ScaleGrowth {
     val targets = args.lift(1)
       .map(_.split(",").toSeq)
       .getOrElse(Seq("q_vocab_build", "q_collocations", "q_lm_quality", "q_oov_rate"))
-    val spark = Engine.session("local[32]", 32)
+    val spark = Engine.localSession()
     val base = java.nio.file.Files.createTempDirectory("graft_growth").toString
     // Growth points: override (e.g. `1,2,4,8`) to push past the
     // fixed-overhead-dominated regime when an exponent needs a longer arm.

@@ -9,8 +9,7 @@ object Verify {
     // Optional third arg: regex over query names — a local iteration aid
     // (the driver always passes two args, running everything).
     val nameFilter = args.lift(2).map(_.r)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Engine.session(s"local[$cpus]", cpus.toInt)
+    val spark = Engine.localSession()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => nameFilter.forall(_.findFirstIn(name).isDefined) }

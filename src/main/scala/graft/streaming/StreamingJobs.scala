@@ -2,8 +2,8 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, StreamingQuery, Trigger}
 
 /** Stateful streaming jobs (SURVEY.md §2.4).
   *
@@ -26,6 +26,41 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
   * state store stays O(active users), independent of history length.
   */
 object StreamingJobs {
+
+  /** `dir/events.parquet` as a file-stream source: the schema is read once
+    * from the table, and `pathGlobFilter` keeps the stream off the other
+    * tables that share its directory.
+    */
+  def eventsStream(spark: SparkSession, dir: String): DataFrame =
+    spark.readStream
+      .schema(spark.read.parquet(s"$dir/events.parquet").schema)
+      .option("pathGlobFilter", "events.parquet")
+      .parquet(dir)
+
+  /** Append-mode parquet file sink at `path`. */
+  def fileSink[T](ds: Dataset[T], path: String): DataStreamWriter[T] =
+    ds.writeStream.format("parquet").option("path", path).outputMode("append")
+
+  /** Complete-mode sink: each micro-batch's full result, passed through
+    * `report`, overwrites `path`, so the directory always holds the latest
+    * result. The write is an executor-side parquet job — nothing collects
+    * to the driver, unlike a memory sink.
+    */
+  def overwriteSink(df: DataFrame, path: String)(report: DataFrame => DataFrame = identity): DataStreamWriter[Row] =
+    df.writeStream
+      .outputMode("complete")
+      .foreachBatch { (batch: DataFrame, _: Long) => report(batch).write.mode("overwrite").parquet(path) }
+
+  /** Starts `writer` as a bounded incremental run: checkpoint at `ckpt`,
+    * `Trigger.AvailableNow` (process every file present at start, then
+    * stop) — the scheduled-load deployment shape.
+    */
+  def start[T](writer: DataStreamWriter[T], ckpt: String): StreamingQuery =
+    writer.option("checkpointLocation", ckpt).trigger(Trigger.AvailableNow()).start()
+
+  /** [[start]], then block until the run has drained its input. */
+  def runBounded[T](writer: DataStreamWriter[T], ckpt: String): Unit =
+    start(writer, ckpt).awaitTermination()
 
   case class SessionEvent(user_id: Long, event_id: Long, ts: Timestamp)
 
@@ -173,7 +208,7 @@ object StreamingJobs {
     * even across checkpoint loss.
     */
   def stagedLoad(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       srcDir: String,
       schema: org.apache.spark.sql.types.StructType,
       stagingPath: String,
@@ -183,19 +218,14 @@ object StreamingJobs {
       clock: org.apache.spark.sql.Column,
       partitionCols: Seq[String] = Nil,
       mainFilter: Option[org.apache.spark.sql.Column] = None
-  ): org.apache.spark.sql.streaming.StreamingQuery =
-    spark.readStream
-      .schema(schema)
-      .parquet(srcDir)
-      .writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+  ): StreamingQuery =
+    start(
+      spark.readStream.schema(schema).parquet(srcDir).writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
         graft.sources.StagingSink.stage(batch, stagingPath)
         graft.sources.StagingSink.mergeToMain(
           batch.sparkSession, stagingPath, mainPath, keyCols, clock, partitionCols, mainFilter)
-      }
-      .start()
+      },
+      checkpoint)
 
   /** One micro-batch of the CDC upsert — the foreachBatch body of
     * [[cdcUpsert]], exposed so a replayed batch (checkpoint loss, driver
@@ -223,7 +253,7 @@ object StreamingJobs {
     * An emptied batch (everything stale) short-circuits before staging.
     */
   def cdcUpsertBatch(
-      batch: org.apache.spark.sql.DataFrame,
+      batch: DataFrame,
       stagingPath: String,
       mainPath: String,
       keyCols: Seq[String],
@@ -269,7 +299,7 @@ object StreamingJobs {
     * end state against the batch MERGE oracle).
     */
   def cdcUpsert(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       srcDir: String,
       schema: org.apache.spark.sql.types.StructType,
       stagingPath: String,
@@ -280,18 +310,14 @@ object StreamingJobs {
       clock: org.apache.spark.sql.Column,
       partitionCols: Seq[String] = Nil,
       maxFilesPerTrigger: Option[Int] = None
-  ): org.apache.spark.sql.streaming.StreamingQuery = {
+  ): StreamingQuery = {
     val reader = spark.readStream.schema(schema)
     maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    reader
-      .parquet(srcDir)
-      .writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+    start(
+      reader.parquet(srcDir).writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
         cdcUpsertBatch(batch, stagingPath, mainPath, keyCols, seqCol, clock, partitionCols)
-      }
-      .start()
+      },
+      checkpoint)
   }
 
   /** Gap-based sessionization with explicit per-user state (batch form). */

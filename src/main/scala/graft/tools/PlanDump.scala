@@ -13,7 +13,7 @@ object PlanDump {
     val outDir = args(1)
     val names = args.drop(2).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = graft.Engine.session("local[32]", 32)
+    val spark = graft.Engine.localSession()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     for (n <- names) {
       val df = graft.QueryRegistry.queries(n)(spark, sfDir)

@@ -65,7 +65,7 @@ object StageProbe {
     val names = args.headOption.getOrElse("q_corr_stats").split(',').toSeq
     val dir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val n = args.lift(2).map(_.toInt).getOrElse(4)
-    val cpus = args.lift(3).map(_.toInt).getOrElse(32)
+    val cpus = args.lift(3).map(_.toInt).getOrElse(graft.Engine.cpus)
     val spark = graft.Engine.session(s"local[$cpus]", cpus)
     val probe = new Probe
     spark.sparkContext.addSparkListener(probe)

@@ -367,19 +367,23 @@ class MultimodalStreamingSpec extends AnyFunSuite with SparkSpec {
       "batch gap-and-island sessions must equal the streaming state machine's at the same gap")
   }
 
-  test("streaming drift monitor equals the batch PSI report on bounded input") {
-    // q_stream_drift restates q_drift_psi per micro-batch from K×10-bounded
-    // streaming bin counts joined to the batch-fitted reference artifact.
-    // On AvailableNow bounded input the final report must be row-identical
-    // to the batch monitor — same cuts (rounded 6 dp), same add-half
-    // smoothing, same 1e-12 fixed-point term sums (order-free by design,
-    // so micro-batch partitioning cannot move a bit).
-    val streamed = QueryRegistry.queries("q_stream_drift")(spark, sfDir)
-    val batch = QueryRegistry.queries("q_drift_psi")(spark, sfDir)
-    assert(streamed.count() == batch.count())
-    assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty,
-      "streamed PSI report must equal the batch drift monitor on bounded input")
-  }
+  // q_stream_drift restates q_drift_psi, and q_stream_chi2 restates
+  // q_drift_chi2, per micro-batch from bounded streaming counts joined to
+  // the batch-fitted reference artifact; each pair shares one report
+  // function (DriftReports). On AvailableNow bounded input the final
+  // report must be row-identical to the batch monitor — same cuts (rounded
+  // 6 dp), same smoothing, same fixed-point term sums (order-free by
+  // design, so micro-batch partitioning cannot move a bit).
+  for ((stream, batchQ, report) <- Seq(
+      ("q_stream_drift", "q_drift_psi", "PSI"),
+      ("q_stream_chi2", "q_drift_chi2", "chi2")))
+    test(s"streaming drift monitor equals the batch $report report on bounded input") {
+      val streamed = QueryRegistry.queries(stream)(spark, sfDir)
+      val batch = QueryRegistry.queries(batchQ)(spark, sfDir)
+      assert(streamed.count() == batch.count())
+      assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty,
+        s"streamed $report report must equal the batch drift monitor on bounded input")
+    }
 
   test("the dual drift monitor: PSI equals the batch monitor; binned KS never exceeds exact KS") {
     // q_stream_drift_ks ships PSI and binned KS from ONE (type, bin) state
@@ -471,9 +475,7 @@ class MultimodalStreamingSpec extends AnyFunSuite with SparkSpec {
     ).toDF("event_id", "user_id", "event_type", "ts")
     phase1.coalesce(1).write.parquet(src)
 
-    val prevNoData = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    try {
+    Engine.withConf(spark, "spark.sql.streaming.noDataMicroBatches.enabled" -> "true") {
       val q1 = StreamQueries.startOuterJoinStream(spark, src, out, ckpt)
       q1.awaitTermination()
       val r1 = spark.read.parquet(out).collect()
@@ -492,7 +494,7 @@ class MultimodalStreamingSpec extends AnyFunSuite with SparkSpec {
       assert(r2.length == 3, s"run 2 must add exactly u3's null row, got ${r2.toSeq}")
       assert(r2.exists(r => r.getLong(0) == 3L && r.isNullAt(2)), "u3 must null-emit once the watermark closes it")
       assert(r2.count(r => r.getLong(0) == 2L) == 1, "u2's null row must NOT re-emit across the restart")
-    } finally spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prevNoData)
+    }
   }
 
   test("bounded-state streaming dedup: dropDuplicatesWithinWatermark matches DISTINCT") {

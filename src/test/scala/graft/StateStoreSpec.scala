@@ -13,11 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class StateStoreSpec extends AnyFunSuite with SparkSpec {
 
-  private def withRocksDb[A](body: => A): A = {
-    Engine.useRocksDbStateStore(spark)
-    try body
-    finally Engine.useRocksDbStateStore(spark, enable = false)
-  }
+  private def withRocksDb[A](body: => A): A = Engine.useRocksDbStateStore(spark)(body)
 
   private def listRec(dir: java.io.File): Seq[java.io.File] = {
     val kids = Option(dir.listFiles()).map(_.toSeq).getOrElse(Seq.empty)
@@ -120,6 +116,26 @@ class StateStoreSpec extends AnyFunSuite with SparkSpec {
     val dedupCount = spark.read.parquet(out.getPath).count()
     val exact = Tables.eventsRaw(spark, sfDir).select("event_id").distinct().count()
     assert(dedupCount == exact, "stateful dedup under RocksDB must match the exact distinct count")
+  }
+
+  test("building q_stream_quota leaves the session's state-store provider as it found it") {
+    // A deployment enables RocksDB for the whole session before building
+    // its queries. q_stream_quota scopes the provider to its own start;
+    // after it, every key must hold the session's value again — not be
+    // unset, which would silently start later stateful queries (and
+    // restarts on RocksDB checkpoints) on the default provider.
+    val keys = Seq(
+      "spark.sql.streaming.stateStore.providerClass",
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled")
+    val before = keys.map(spark.conf.getAll.get)
+    withRocksDb {
+      val enabled = keys.map(spark.conf.getOption)
+      QueryRegistry.queries("q_stream_quota")(spark, sfDir).collect()
+      assert(keys.map(spark.conf.getOption) == enabled,
+        s"building q_stream_quota changed the session's provider: ${keys.map(spark.conf.getOption)}")
+    }
+    assert(keys.map(spark.conf.getAll.get) == before,
+      "the scoped RocksDB seam must give each key back its prior value, or unset it")
   }
 
   test("q_stream_join runs green under RocksDB and matches its batch equivalent") {
