@@ -63,7 +63,7 @@ object Bench {
     // footer reader) so the alphabetically-first query doesn't absorb ~5s of
     // one-time JVM init into its measurement.
     spark.range(1000000).selectExpr("sum(id) s", "count(*) c").write.format("noop").mode("overwrite").save()
-    spark.read.parquet(s"$sfDir/nation.parquet").write.format("noop").mode("overwrite").save()
+    Tables.nation(spark, sfDir).write.format("noop").mode("overwrite").save()
     // noop sink: full evaluation of every output column (count() would let
     // Spark prune the projections and under-measure). Methodology: min-of-3
     // with a GC between runs — single-shot timings in a shared JVM are

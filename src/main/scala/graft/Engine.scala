@@ -1,13 +1,15 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.sources.ParquetRead
 
 /** Session factory with scale-oriented defaults.
   *
-  * Settings are chosen for a large multi-executor cluster and validated on
-  * local[32]: AQE re-plans shuffles at runtime (coalescing + skew-join), a
-  * modest shuffle-partition floor that AQE can grow, and auto broadcast for
-  * dimension tables. See SURVEY.md §5.
+  * Settings are chosen for a large multi-executor cluster: AQE re-plans
+  * shuffles at runtime (coalescing + skew-join), a modest shuffle-partition
+  * floor that AQE can grow, and auto broadcast for dimension tables. See
+  * SURVEY.md §5. The command-line mains and the benchmark run them on
+  * `local[cpus]` (see [[Engine.cpus]]), so a measurement names its host.
   */
 object Engine {
   def session(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession = {
@@ -88,12 +90,14 @@ object Engine {
 
 /** Typed loaders for the driver testdata star schema (TESTDATA.md).
   *
-  * All loads are plain parquet scans so Catalyst column pruning and filter
-  * pushdown apply to every downstream operator.
+  * Every load goes through [[graft.sources.ParquetRead]], which infers a
+  * table's schema once per session and passes it to later reads of the
+  * unchanged table. The result is still a parquet file scan, so Catalyst
+  * column pruning and filter pushdown apply to every downstream operator.
   */
 object Tables {
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    ParquetRead.load(spark, s"$dir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")

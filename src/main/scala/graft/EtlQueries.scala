@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.EtlOps
+import graft.sources.ParquetRead
 
 /** §2.1 of SURVEY.md — the reference's ETL capabilities, re-expressed as
   * declarative Spark plans over the driver testdata.
@@ -381,7 +382,7 @@ object EtlQueries {
           s"$base/staging1")
         graft.sources.StagingSink
           .upsertToMain(s, s"$base/staging1", s"$base/main", Seq("event_id"), clock = t1)
-        s.read.parquet(s"$base/main")
+        ParquetRead.load(s, s"$base/main")
           .select(col("event_id"), col("value"), col("date_added_utc"))
           .orderBy("event_id")
       },
@@ -724,7 +725,7 @@ object EtlQueries {
           .withColumn("valid_to", lead(col("valid_from"), 1).over(w))
           .withColumn("is_current", col("valid_to").isNull)
         build(ev.filter(col("ts") < c)).write.mode("overwrite").parquet(s"$base/dim")
-        val main0 = s.read.parquet(s"$base/dim")
+        val main0 = ParquetRead.load(s, s"$base/dim")
         val batch = build(ev.filter(col("ts") >= c))
         val closes = batch.groupBy("user_id").agg(min(col("valid_from")).as("close_at"))
         main0
@@ -737,7 +738,7 @@ object EtlQueries {
           .unionAll(
             batch.select("user_id", "event_id", "value", "valid_from", "valid_to", "is_current"))
           .write.mode("overwrite").parquet(s"$base/dim2")
-        s.read.parquet(s"$base/dim2").orderBy("user_id", "valid_from", "event_id")
+        ParquetRead.load(s, s"$base/dim2").orderBy("user_id", "valid_from", "event_id")
       },
       Some("""SELECT user_id, event_id, value, ts AS valid_from,
              |  lead(ts, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS valid_to,
@@ -1383,10 +1384,9 @@ object EtlQueries {
       "q_schema_drift",
       (s, d) => {
         import s.implicits._
-        val mainSchema = s.read.parquet(s"$d/events.parquet").schema
+        val mainSchema = ParquetRead.schema(s, s"$d/events.parquet")
         val scratch = scratchDir("graft_drift", d)
-        s.read
-          .parquet(s"$d/events.parquet")
+        eventsRaw(s, d)
           .limit(1000)
           .drop("props")
           .withColumn("value", col("value").cast("float"))
@@ -1394,7 +1394,7 @@ object EtlQueries {
           .write
           .mode("overwrite")
           .parquet(s"$scratch/batch")
-        val batchSchema = s.read.parquet(s"$scratch/batch").schema
+        val batchSchema = ParquetRead.schema(s, s"$scratch/batch")
         val m = mainSchema.fields.map(f => f.name -> f.dataType.simpleString).toMap
         val b = batchSchema.fields.map(f => f.name -> f.dataType.simpleString).toMap
         val rows = (m.keySet ++ b.keySet).toSeq.sorted.map { c =>
@@ -1611,7 +1611,7 @@ object EtlQueries {
         graft.sources.StagingSink.stage(transformed, s"$base/staging")
         graft.sources.StagingSink
           .mergeToMain(s, s"$base/staging", s"$base/main", Seq("event_id"), clock = t0)
-        s.read.parquet(s"$base/main")
+        ParquetRead.load(s, s"$base/main")
           .select("event_id", "user_id", "station", "event_type", "value", "value_f",
             "date_added_utc")
           .orderBy("event_id")
@@ -1767,7 +1767,7 @@ object EtlQueries {
         graft.sources.StagingSink.stage(typed, s"$base/staging")
         graft.sources.StagingSink
           .mergeToMain(s, s"$base/staging", s"$base/main", Seq("location", "lst_datetime"), clock = t0)
-        s.read.parquet(s"$base/main")
+        ParquetRead.load(s, s"$base/main")
           .select("location", "lst_datetime", "utc_datetime", "temperature_f", "gust_mph",
             "wind_chill_f", "last_update_nws", "date_added_utc")
           .orderBy("location", "lst_datetime")
@@ -1844,7 +1844,7 @@ object EtlQueries {
           s, s"$base/staging0", s"$base/main", Seq("station", "wbanno", "utc_hour"), clock = t0)
         // get_update_cutoff: ONE row read back from main itself — the
         // reference's exact "SELECT utc_datetime ... ORDER BY ... LIMIT 1".
-        val cutoff = s.read.parquet(s"$base/main")
+        val cutoff = ParquetRead.load(s, s"$base/main")
           .agg(max(col("utc_hour"))).head().getTimestamp(0)
         // Incremental extract: only rows past main's own max hour.
         graft.sources.StagingSink.stage(
@@ -1852,7 +1852,7 @@ object EtlQueries {
           s"$base/staging1")
         graft.sources.StagingSink.mergeToMain(
           s, s"$base/staging1", s"$base/main", Seq("station", "wbanno", "utc_hour"), clock = t1)
-        s.read.parquet(s"$base/main")
+        ParquetRead.load(s, s"$base/main")
           .select("station", "wbanno", "utc_hour", "lst_hour", "wind_hr_avg", "date_added_utc")
           .orderBy("station", "wbanno", "utc_hour")
       },

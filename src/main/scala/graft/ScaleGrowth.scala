@@ -56,7 +56,7 @@ object ScaleGrowth {
       tables: Set[String] = allTables
   ): Unit = {
     if (tables("documents")) {
-      val docs = spark.read.parquet(s"$src/documents.parquet")
+      val docs = Tables.documents(spark, src)
       // Copy offset derived from the observed id range, never a fixed 1e7:
       // on a source with more documents than the constant, copy i's high ids
       // would collide with copy i+1's low ids — merged documents, silently
@@ -81,7 +81,7 @@ object ScaleGrowth {
     // (interval durations = f(orderkey)) decorrelate across copies. Dates
     // and measures stay verbatim.
     if (tables("lineitem") && new java.io.File(s"$src/lineitem.parquet").exists()) {
-      val li = spark.read.parquet(s"$src/lineitem.parquet")
+      val li = Tables.lineitem(spark, src)
       val ids = li.agg(max(col("l_orderkey")), max(col("l_suppkey"))).head()
       if (ids.isNullAt(0) || ids.isNullAt(1))
         throw new IllegalStateException(s"$src/lineitem.parquet is empty — cannot grow lineitem")
@@ -106,7 +106,7 @@ object ScaleGrowth {
     // trip preserves whichever ts footer flavor the source carries.
     val evPath = new java.io.File(s"$src/events.parquet")
     if (tables("events") && evPath.exists()) {
-      val ev = spark.read.parquet(s"$src/events.parquet")
+      val ev = Tables.eventsRaw(spark, src)
       val ids = ev.agg(max(col("event_id")), max(col("user_id"))).head()
       // An empty events source leaves both maxes NULL — fail with a clear
       // message instead of getLong's NullPointerException (r13 advice).
@@ -145,7 +145,7 @@ object ScaleGrowth {
     // regime) and synthesized per-key coordinates decorrelate across
     // copies (they are key arithmetic).
     if (tables("customer") && new java.io.File(s"$src/customer.parquet").exists()) {
-      val c = spark.read.parquet(s"$src/customer.parquet")
+      val c = Tables.customer(spark, src)
       val id = c.agg(max(col("c_custkey"))).head()
       if (id.isNullAt(0))
         throw new IllegalStateException(s"$src/customer.parquet is empty — cannot grow customer")
@@ -158,11 +158,11 @@ object ScaleGrowth {
     // Dimensions stay fixed-size at any scale — copy nation verbatim for
     // the enrichment queries' broadcast side.
     if (tables("nation") && new java.io.File(s"$src/nation.parquet").exists())
-      spark.read.parquet(s"$src/nation.parquet")
+      Tables.nation(spark, src)
         .write.mode("overwrite").parquet(s"$dst/nation.parquet")
     val embPath = new java.io.File(s"$src/embeddings.parquet")
     if (tables("embeddings") && embPath.exists()) {
-      val emb = spark.read.parquet(s"$src/embeddings.parquet")
+      val emb = Tables.embeddings(spark, src)
       val dims = emb.select(size(col("embedding"))).head().getInt(0)
       val eoff = math.max(10000000L, emb.agg(max(col("vec_id"))).head().getLong(0) + 1L)
       val ecopies = (0 until k).map { i =>

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.SimilarityFunctions._
+import graft.sources.ParquetRead
 
 /** §2.3 dedup / similarity-search operators (SURVEY.md).
   *
@@ -1878,7 +1879,7 @@ object SimilarityQueries {
           .write
           .mode("overwrite")
           .parquet(s"$scratch/edges")
-        val e = s.read.parquet(s"$scratch/edges")
+        val e = ParquetRead.load(s, s"$scratch/edges")
         // Degrees via ONE explode pass; n_edges = Σdeg/2 exactly (every
         // edge contributes two endpoint entries), so no separate count
         // pass over e.

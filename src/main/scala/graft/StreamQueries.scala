@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 import graft.operators.DriftReports
+import graft.sources.ParquetRead
 import graft.streaming.StreamingJobs._
 
 /** §2.4 streaming over `events` (SURVEY.md).
@@ -42,7 +43,7 @@ object StreamQueries {
   private def bounded[T](s: SparkSession, d: String, name: String)(sink: String => DataStreamWriter[T]): DataFrame = {
     val out = tmpDir(s"graft_${name}_out", d)
     runBounded(sink(out), tmpDir(s"graft_${name}_ckpt", d))
-    s.read.parquet(out)
+    ParquetRead.load(s, out)
   }
 
   /** The reference artifact q_stream_drift and q_stream_drift_ks monitor
@@ -87,7 +88,7 @@ object StreamQueries {
     * restatement of the same join.
     */
   private[graft] def startEnrichStream(s: SparkSession, d: String, out: String, ckpt: String): StreamingQuery = {
-    val dim = s.read.parquet(s"$d/nation.parquet").select("n_nationkey", "n_name")
+    val dim = nation(s, d).select("n_nationkey", "n_name")
     val enriched = eventsStream(s, d)
       .select(col("user_id"), col("value"))
       .withColumn("nkey", col("user_id") % 25)
@@ -140,7 +141,7 @@ object StreamQueries {
     * flush file under the same checkpoint → emitted exactly once).
     */
   private[graft] def startOuterJoinStream(s: SparkSession, src: String, out: String, ckpt: String): StreamingQuery = {
-    val schema = s.read.parquet(src).schema
+    val schema = ParquetRead.schema(s, src)
     def base = s.readStream.schema(schema).parquet(src)
     val clicks = base
       .filter(col("event_type").isin("click", "flush"))
@@ -309,7 +310,7 @@ object StreamQueries {
         }
         // Drop the sentinel self-pair on the batch read-back (see
         // startOuterJoinStream for why it can't be filtered in-stream).
-        s.read.parquet(out).filter(col("click_id") =!= lit(-1L))
+        ParquetRead.load(s, out).filter(col("click_id") =!= lit(-1L))
       },
       Some("""SELECT c.user_id, c.event_id AS click_id, p.event_id AS purchase_id,
              |  c.ts AS click_ts, p.ts AS purchase_ts
@@ -504,7 +505,7 @@ object StreamQueries {
       (s, d) => {
         val out = tmpDir("graft_senrich_out", d)
         startEnrichStream(s, d, out, tmpDir("graft_senrich_ckpt", d)).awaitTermination()
-        s.read.parquet(out).orderBy("n_name")
+        ParquetRead.load(s, out).orderBy("n_name")
       },
       Some("""SELECT n_name, COUNT(*) AS n,
              |  CAST(SUM(CAST(value AS DECIMAL(25,10))) AS DOUBLE) AS total_value
@@ -712,7 +713,7 @@ object StreamQueries {
           }
         val dim = nation(s, d).select(col("n_nationkey"), col("n_name").as("station"))
         val stream = s.readStream
-          .schema(s.read.parquet(src).schema)
+          .schema(ParquetRead.schema(s, src))
           .option("maxFilesPerTrigger", "1")
           .parquet(src)
           .select(col("line"))
@@ -739,7 +740,7 @@ object StreamQueries {
               .mergeToMain(s, stg, main, Seq("user_id", "event_type"), clock = t0)
           }
         runBounded(stream, ckpt)
-        s.read.parquet(main)
+        ParquetRead.load(s, main)
           .select("event_id", "user_id", "station", "event_type", "value", "value_f",
             "date_added_utc")
           .orderBy("event_id")
@@ -824,7 +825,7 @@ object StreamQueries {
         stageFile("f2", col("us") > t2, 2) // C: the newest third
         stageFile("f3", col("us") <= t1 && col("event_id") % 2 === 1, 3) // D: old AND late
         val stream = s.readStream
-          .schema(s.read.parquet(s"$src/f0.parquet").schema)
+          .schema(ParquetRead.schema(s, s"$src/f0.parquet"))
           .option("maxFilesPerTrigger", "1")
           .parquet(src)
           .withWatermark("ts", s"$delayHours hours")
@@ -838,7 +839,7 @@ object StreamQueries {
               .write.mode("append").parquet(out)
           }
         runBounded(stream, ckpt)
-        s.read.parquet(out).orderBy("window_start")
+        ParquetRead.load(s, out).orderBy("window_start")
       },
       Some("""WITH ev AS (
              |  SELECT event_id, epoch_us(ts) AS us FROM events),
@@ -896,8 +897,7 @@ object StreamQueries {
         val staging = tmpDir("graft_scdc_stg", d)
         val main = tmpDir("graft_scdc_main", d)
         val ckpt = tmpDir("graft_scdc_ckpt", d)
-        val ev = s.read
-          .parquet(s"$d/events.parquet")
+        val ev = eventsRaw(s, d)
           .select(col("user_id"), col("event_id"), col("event_type"), col("value"))
         // Four range files on the SEQ column: realistic arrival (change
         // batches roughly ordered by sequence) while the seq guard, not
@@ -915,8 +915,7 @@ object StreamQueries {
           lit("2026-01-01 00:00:00").cast("timestamp"),
           maxFilesPerTrigger = Some(1)
         ).awaitTermination()
-        s.read
-          .parquet(main)
+        ParquetRead.load(s, main)
           .select("user_id", "event_id", "event_type", "value")
           .orderBy("user_id")
       },

@@ -101,7 +101,7 @@ object StagingSink {
 
     val bytes = fs.getContentSummary(p).getLength
     val nFiles = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
-    val base = spark.read.parquet(path)
+    val base = ParquetRead.load(spark, path)
     def subFiles(b: Long): Int = math.max(1, math.ceil(b.toDouble / targetFileBytes).toInt)
 
     // Salt source: hash the hashable data columns (hash() rejects maps;
@@ -192,8 +192,8 @@ object StagingSink {
       keyCols: Seq[String],
       partitionCols: Seq[String]
   ): DataFrame =
-    spark.read.parquet(mainPath)
-      .join(spark.read.parquet(stagingPath).select(keyCols.map(col): _*), keyCols, "left_semi")
+    ParquetRead.load(spark, mainPath)
+      .join(ParquetRead.load(spark, stagingPath).select(keyCols.map(col): _*), keyCols, "left_semi")
       .select(partitionCols.map(col): _*)
       .distinct()
 
@@ -286,7 +286,7 @@ object StagingSink {
     }
     if (fs.exists(tmpP)) require(fs.delete(tmpP, true), s"could not delete stale $tmpP")
 
-    val staged0 = spark.read.parquet(stagingPath)
+    val staged0 = ParquetRead.load(spark, stagingPath)
     if (staged0.isEmpty) return
     val staged = staged0.withColumn("date_added_utc", clock)
     def writeOut(df: DataFrame, path: String): Unit = {
@@ -309,7 +309,7 @@ object StagingSink {
           .reduce(_ && _))
         .reduceOption(_ || _)
         .getOrElse(lit(false))
-      val main = spark.read.parquet(mainPath)
+      val main = ParquetRead.load(spark, mainPath)
       val survivors = main
         .where(pruning)
         .join(staged.select(keyCols.map(col): _*), keyCols, "left_anti")
@@ -352,7 +352,7 @@ object StagingSink {
       fs.delete(tmpP, true)
     } else {
       // Recovery and stale-dir cleanup already ran at entry.
-      val survivors = spark.read.parquet(mainPath)
+      val survivors = ParquetRead.load(spark, mainPath)
         .join(staged.select(keyCols.map(col): _*), keyCols, "left_anti")
       writeOut(survivors.unionByName(staged), tmpP.toString)
       require(fs.rename(p, oldP), s"rename $p -> $oldP failed; table untouched")
@@ -375,7 +375,7 @@ object StagingSink {
     if (!exists(spark, mainPath)) None
     else
       Option(
-        spark.read.parquet(mainPath)
+        ParquetRead.load(spark, mainPath)
           .agg(max(col("date_added_utc")))
           .head().getTimestamp(0)
       )
@@ -397,9 +397,9 @@ object StagingSink {
       keyCols: Seq[String],
       mainFilter: Option[Column] = None
   ): DataFrame = {
-    val staged = spark.read.parquet(stagingPath)
+    val staged = ParquetRead.load(spark, stagingPath)
     if (exists(spark, mainPath)) {
-      val main = spark.read.parquet(mainPath)
+      val main = ParquetRead.load(spark, mainPath)
       val bounded = mainFilter.fold(main)(main.where)
       staged.join(bounded.select(keyCols.map(col).toIndexedSeq: _*), keyCols, "left_anti")
     } else staged

@@ -4,6 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, StreamingQuery, Trigger}
+import graft.sources.ParquetRead
 
 /** Stateful streaming jobs (SURVEY.md §2.4).
   *
@@ -33,7 +34,7 @@ object StreamingJobs {
     */
   def eventsStream(spark: SparkSession, dir: String): DataFrame =
     spark.readStream
-      .schema(spark.read.parquet(s"$dir/events.parquet").schema)
+      .schema(ParquetRead.schema(spark, s"$dir/events.parquet"))
       .option("pathGlobFilter", "events.parquet")
       .parquet(dir)
 
@@ -272,7 +273,7 @@ object StreamingJobs {
     val guarded =
       if (!graft.sources.StagingSink.mainExists(spark, mainPath)) latest
       else {
-        val matchedMaxSeq = spark.read.parquet(mainPath)
+        val matchedMaxSeq = ParquetRead.load(spark, mainPath)
           .select((keyCols :+ seqCol).map(col): _*)
           .join(broadcast(latest.select(keyCols.map(col): _*)), keyCols, "left_semi")
           .groupBy(keyCols.map(col): _*)
