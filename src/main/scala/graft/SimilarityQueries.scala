@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.SimilarityFunctions._
+import graft.operators.{DedupOps, GraphOps}
 import graft.sources.ParquetRead
 
 /** §2.3 dedup / similarity-search operators (SURVEY.md).
@@ -265,59 +266,6 @@ object SimilarityQueries {
       |  WHERE a.vec_id < 10 AND a.vec_id <> b.vec_id) p
       |GROUP BY query_id
       |ORDER BY query_id""".stripMargin
-
-  /** Candidate pairs that co-occupy any LSH band bucket: input must have
-    * (doc_id, bands: array<long>). One shuffle on (band_idx, band_hash):
-    * the merge hint forces a sort-merge self-join whose two shuffle
-    * subtrees are identical, so ReuseExchange computes the sketch+explode
-    * once (a broadcast self-join would rebuild it per side).
-    *
-    * HOT-BUCKET GUARD: a pathological corpus (thousands of byte-identical
-    * docs that exact-dedup should have removed first — the composed
-    * pipeline orders it so, see LlmPipelineSpec) puts k copies into ONE
-    * band bucket, and all-pairs enumeration there is O(k²) no matter how
-    * well the LSH is sized. Buckets above `maxBucket` occupancy therefore
-    * switch to STAR linking — every member pairs with the bucket's minimum
-    * doc_id, O(k) — which preserves exactly what a dedup/clustering
-    * consumer needs (connectivity: all members reach one representative,
-    * and the verify stage still scores each star pair exactly). Occupancy
-    * comes from a count-over-window on the join keys, so its hash
-    * partitioning is the one the self-join reuses — no extra shuffle. The
-    * default cap (4096) is 16-64× the target bucket occupancy of every
-    * caller: it can only fire on pathology, never on a healthy corpus.
-    *
-    * RECALL CAVEAT: star linking only emits (bucket-min, member) pairs. If
-    * an over-cap bucket ever held docs that are mutually similar but
-    * DISSIMILAR to the bucket minimum, those pairs fail downstream verify
-    * and that connectivity is lost — a broader loss than the
-    * byte-identical pathology the guard targets. That shape requires a
-    * bucket where >4096 docs collide on a band without sharing similarity
-    * to its min (i.e., a badly undersized LSH, not a duplicate burst);
-    * recall-sensitive callers should raise `maxBucket` (it is a parameter,
-    * not a constant) or resize the banding instead.
-    */
-  private[graft] def bandedPairs(withBands: DataFrame, maxBucket: Int = 4096): DataFrame = {
-    val wb = Window.partitionBy(col("band_idx"), col("band_hash"))
-    val exploded = withBands
-      .select(col("doc_id"), posexplode(col("bands")).as(Seq("band_idx", "band_hash")))
-      .withColumn("occ", count(lit(1)).over(wb))
-      .withColumn("mn", min(col("doc_id")).over(wb))
-    val cold = exploded.filter(col("occ") <= maxBucket).select("doc_id", "band_idx", "band_hash")
-    val allPairs = cold
-      .as("a")
-      .hint("merge")
-      .join(
-        cold.as("b").hint("merge"),
-        col("a.band_idx") === col("b.band_idx") &&
-          col("a.band_hash") === col("b.band_hash") &&
-          col("a.doc_id") < col("b.doc_id")
-      )
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-    val starPairs = exploded
-      .filter(col("occ") > maxBucket && col("doc_id") =!= col("mn"))
-      .select(col("mn").as("doc_a"), col("doc_id").as("doc_b"))
-    allPairs.unionAll(starPairs).distinct()
-  }
 
   /** Embedding cell → Seq[Double], tolerant of FLOAT or DOUBLE element
     * parquet/derived types (spec corpora built with `transform` promote to
@@ -968,87 +916,7 @@ object SimilarityQueries {
     * report over this table.
     */
   private[graft] def simhashPairs(s: SparkSession, d: String): DataFrame =
-    byteBandPairs(simhashSigs(s, d))
-
-  /** Shared byte-band near-dup self-join over any (doc_id, sig) 64-bit
-    * sketch table — the machinery behind simhash, image dHash/pHash, AND
-    * audio energy-contour pairing: 8 byte-bands via posexplode (pigeonhole-
-    * complete for hamming ≤ 7), merge-hinted self-join so ReuseExchange
-    * computes the sketch+explode once, hamming cut INSIDE the band join
-    * (hot buckets stream through the verify instead of materializing an
-    * unfiltered candidate set).
-    *
-    * IDENTICAL-SIG GUARD (the bandedPairs hot-bucket guard's sketch-space
-    * twin): a real corpus carries mass-identical sketches — silence clips,
-    * solid-color thumbnails, boilerplate pages — and an m-member
-    * identical-sig group makes the pair OUTPUT itself m²/2 rows; no join
-    * strategy fixes a quadratic result set. Groups above `maxGroup`
-    * therefore collapse to STAR links (every member → the group's min
-    * doc_id, hamming 0) and send ONLY that min into the band join as the
-    * group's representative. Unlike LSH-bucket star links this is
-    * LOSSLESS for the hamming ≤ 7 relation: members of one group are
-    * byte-identical, so doc-to-doc hamming is exactly sig-to-sig hamming
-    * and every collapsed pair is reachable through the representative
-    * (member —0— min —h— other). The cap only fires on pathology: every
-    * fixture here keys sketches off per-doc content (seed-keyed envelopes
-    * / dense spectra), so groups stay 1-2 at any test SF and the output
-    * is byte-identical to the unguarded form — which is what lets the
-    * exhaustive ball-equality specs keep their pairwise contract.
-    *
-    * CAVEAT the audits inherit (r13 advice): once the cap DOES fire, the
-    * table is complete only TRANSITIVELY — a non-representative member of
-    * a collapsed group reaches its hamming ≤ 7 neighbors through the
-    * representative (member —0— min —h— other), not by a direct row. Any
-    * consumer that counts DIRECT pairs — the planted-recall bands'
-    * doc_b == doc_a + offset counting in q_dedup_images / q_phash_images /
-    * q_dedup_audio — therefore assumes identical-sig groups stay ≤
-    * maxGroup, which the seed-keyed fixtures guarantee by construction
-    * (ByteBandGuardSpec pins both: the collapsed form's reachability on a
-    * synthetic mega-group, and that the registered fixtures never trip the
-    * cap). A production recall audit over a corpus with real mega-groups
-    * must count reachability (one hop through gmn), not direct rows.
-    */
-  private[graft] def byteBandPairsUnsorted(sigs: DataFrame, maxGroup: Int = 256): DataFrame = {
-    val wg = Window.partitionBy(col("sig"))
-    val grouped = sigs
-      .withColumn("gocc", count(lit(1)).over(wg))
-      .withColumn("gmn", min(col("doc_id")).over(wg))
-    val star = grouped
-      .filter(col("gocc") > maxGroup && col("doc_id") =!= col("gmn"))
-      .select(col("gmn").as("doc_a"), col("doc_id").as("doc_b"),
-        lit(0).cast("int").as("hamming"))
-    val joinSide = grouped
-      .filter(col("gocc") <= maxGroup || col("doc_id") === col("gmn"))
-      .select(col("doc_id"), col("sig"))
-    val exploded = joinSide
-      .select(col("doc_id"), col("sig"), posexplode(simhashByteBands(col("sig"))).as(Seq("band_idx", "band_hash")))
-    exploded
-      .as("a")
-      .hint("merge")
-      .join(
-        exploded.as("b").hint("merge"),
-        col("a.band_idx") === col("b.band_idx") &&
-          col("a.band_hash") === col("b.band_hash") &&
-          col("a.doc_id") < col("b.doc_id") &&
-          hammingPacked(col("a.sig"), col("b.sig")) <= 7
-      )
-      .select(
-        col("a.doc_id").as("doc_a"),
-        col("b.doc_id").as("doc_b"),
-        hammingPacked(col("a.sig"), col("b.sig")).as("hamming")
-      )
-      .unionAll(star)
-      .distinct()
-  }
-
-  /** [[byteBandPairsUnsorted]] plus the (doc_a, doc_b) output ordering — the
-    * production pair-table contract the specs consume. The registered
-    * AUDITS consume the unsorted form instead (r17): they only aggregate
-    * over the pairs, so the sort — a range exchange plus its sampling job,
-    * paid once per report branch — was pure overhead there.
-    */
-  private[graft] def byteBandPairs(sigs: DataFrame, maxGroup: Int = 256): DataFrame =
-    byteBandPairsUnsorted(sigs, maxGroup).orderBy(col("doc_a"), col("doc_b"))
+    DedupOps.byteBandPairs(simhashSigs(s, d))
 
   /** dHash signatures for the given base documents' rendered test images
     * plus their planted ±3-luma ripple variants at doc_id+1e6 — the real
@@ -1082,7 +950,7 @@ object SimilarityQueries {
     * q_dedup_images is the banded audit report over this table.
     */
   private[graft] def imageDedupPairs(s: SparkSession, d: String): DataFrame =
-    byteBandPairs(imageSigs(s, d))
+    DedupOps.byteBandPairs(imageSigs(s, d))
 
   /** Energy-contour fingerprint signatures for the given base documents'
     * synthesized audio clips plus their planted HALF-VOLUME re-levelled
@@ -1128,7 +996,7 @@ object SimilarityQueries {
     audioSigsFrom(documents(s, d), plantedOffset(s, d))(s)
 
   /** The production audio near-dup pair table: the volume-invariant 64-bit
-    * energy-contour fingerprint through the shared [[byteBandPairs]]
+    * energy-contour fingerprint through the shared [[DedupOps.byteBandPairs]]
     * machinery (8 byte-bands, pigeonhole-complete for hamming ≤ 7 — wider
     * than the proven ≤ 4 re-levelling drift, so re-levelled copies band
     * together). The registered q_dedup_audio is the banded audit report
@@ -1137,7 +1005,7 @@ object SimilarityQueries {
     * corpus-size-bounded banding, identical to the image family.
     */
   private[graft] def audioDedupPairs(s: SparkSession, d: String): DataFrame =
-    byteBandPairs(audioSigs(s, d))
+    DedupOps.byteBandPairs(audioSigs(s, d))
 
   /** DCT pHash signatures for the given base documents' rendered test
     * images plus their planted RE-FRAMED-REPOST variants at
@@ -1184,14 +1052,14 @@ object SimilarityQueries {
     phashSigsFrom(documents(s, d), plantedOffset(s, d))(s)
 
   /** The production noise-robust image near-dup pair table: 8 byte-bands
-    * over the 64-bit DCT pHash through the shared [[byteBandPairs]]
+    * over the 64-bit DCT pHash through the shared [[DedupOps.byteBandPairs]]
     * machinery (pigeonhole-complete for hamming ≤ 7). The registered
     * q_phash_images is the banded audit report over this table — the
     * crop+dither (re-framed repost) arm next to q_dedup_images' dHash
     * re-encode/ripple arm.
     */
   private[graft] def phashDedupPairs(s: SparkSession, d: String): DataFrame =
-    byteBandPairs(phashSigs(s, d))
+    DedupOps.byteBandPairs(phashSigs(s, d))
 
   /** The production per-vector topic-assignment table: spherical k-means
     * trained on a bounded deterministic sample (trainIvfCentroids — driver
@@ -1269,48 +1137,14 @@ object SimilarityQueries {
       .orderBy("vec_id")
   }
 
-  /** The shared minhash-banded candidate+verify pipeline: shingle, band
-    * with (b × r) LSH, pair up docs sharing any band bucket, join back to
-    * the full shingle sets and score EXACT Jaccard (plus both set sizes,
-    * for containment-style algebra). (b, r) picks the banding regime: a
-    * band fires with probability J^r, so 16×4 targets Jaccard ≥ ~0.5
-    * (the near-dup regime minhashPairs uses); fewer rows per band would
-    * push the floor lower (32×2 fires at J = 0.3 with ≈ 95% probability
-    * where 16×4 manages ≈ 12%).
+  /** Verified MinHash near-dup pairs (doc_a < doc_b, exact Jaccard ≥ 0.5)
+    * over the planted-duplicate corpus: the pair table behind
+    * q_dedup_minhash.
     */
-  private def verifiedJaccardPairs(
-      s: SparkSession,
-      d: String,
-      keepFrac: Double,
-      b: Int,
-      r: Int,
-      jaccardMin: Double
-  ): DataFrame = {
-    val withSig = corpusWithDups(s, d, keepFrac)
-      .withColumn("sh", hashedShingles(col("text")))
-      .withColumn("bands", minhashBands(col("sh"), k = 64, b = b, r = r))
-    val cand = bandedPairs(withSig.select("doc_id", "bands"))
-    val sh = withSig.select(col("doc_id"), col("sh"), size(col("sh")).as("n_sh"))
-    cand
-      .join(sh.as("sa"), col("doc_a") === col("sa.doc_id"))
-      .join(sh.as("sb"), col("doc_b") === col("sb.doc_id"))
-      .select(
-        col("doc_a"),
-        col("doc_b"),
-        jaccard(col("sa.sh"), col("sb.sh")).as("jaccard"),
-        col("sa.n_sh").as("na"),
-        col("sb.n_sh").as("nb")
-      )
-      .filter(col("jaccard") >= jaccardMin)
+  private[graft] def minhashPairs(s: SparkSession, d: String): DataFrame = {
+    val sig = DedupOps.minhashSketch(corpusWithDups(s, d))
+    DedupOps.verifiedJaccard(DedupOps.bandedPairs(sig), sig, minJ = 0.5).select("doc_a", "doc_b", "jaccard")
   }
-
-  /** Verified MinHash near-dup pairs (doc_a < doc_b, exact Jaccard ≥ 0.5):
-    * the shared pair generator behind q_dedup_minhash and the
-    * connected-components clustering.
-    */
-  private[graft] def minhashPairs(s: SparkSession, d: String): DataFrame =
-    verifiedJaccardPairs(s, d, keepFrac = 0.85, b = 16, r = 4, jaccardMin = 0.5)
-      .select("doc_a", "doc_b", "jaccard")
 
   /** Today's batch for the incremental near-dup shape
     * (q_dedup_incremental_ngram): the ≡4 (mod 5) docs are genuinely new
@@ -1336,36 +1170,19 @@ object SimilarityQueries {
     * shingle sets, StagingSink-style, and appends each day's batch to it).
     * The day's batch is shingled + banded, probes the index by bucket
     * equi-join (never |batch|·|index|; over-occupied index buckets are
-    * df-capped like [[bandedPairs]]'s cold path), and only candidates
+    * df-capped like [[DedupOps.bandedPairs]]'s cold path), and only candidates
     * fetch shingle sets for the exact Jaccard ≥ 0.5 verify. Returns the
     * verified (batch_id, match_id, jaccard) matches; survivors are the
     * batch anti-join. IncrementalDedupSpec pins recall ≥ 0.95 of the exact
     * inverted-index match set and zero sub-threshold matches.
     */
   private[graft] def incrementalMinhashMatches(s: SparkSession, d: String): DataFrame = {
-    val batchSig = incrementalNearBatch(s, d)
-      .withColumn("sh", hashedShingles(col("text")))
-      .withColumn("bands", minhashBands(col("sh")))
-    val idxSig = incrementalNearIndex(s, d)
-      .withColumn("sh", hashedShingles(col("text")))
-      .withColumn("bands", minhashBands(col("sh")))
-    val wb = Window.partitionBy(col("band_idx"), col("band_hash"))
-    val idxBands = idxSig
-      .select(col("doc_id").as("match_id"), posexplode(col("bands")).as(Seq("band_idx", "band_hash")))
-      .withColumn("occ", count(lit(1)).over(wb))
-      .filter(col("occ") <= 4096)
-      .select("match_id", "band_idx", "band_hash")
-    val batchBands = batchSig
-      .select(col("doc_id").as("batch_id"), posexplode(col("bands")).as(Seq("band_idx", "band_hash")))
-    val cand = batchBands
-      .join(idxBands, Seq("band_idx", "band_hash"))
-      .select("batch_id", "match_id")
-      .distinct()
-    cand
-      .join(batchSig.select(col("doc_id"), col("sh")).as("sa"), col("batch_id") === col("sa.doc_id"))
-      .join(idxSig.select(col("doc_id"), col("sh")).as("sb"), col("match_id") === col("sb.doc_id"))
-      .select(col("batch_id"), col("match_id"), jaccard(col("sa.sh"), col("sb.sh")).as("jaccard"))
-      .filter(col("jaccard") >= 0.5)
+    val batchSig = DedupOps.minhashSketch(incrementalNearBatch(s, d))
+    val idxSig = DedupOps.minhashSketch(incrementalNearIndex(s, d))
+    val idxBands = DedupOps.cappedIndex(DedupOps.bandPostings(idxSig), DedupOps.BandKey, maxDf = 4096)
+    val cand = DedupOps.probePairs(DedupOps.bandPostings(batchSig), idxBands, DedupOps.BandKey, minShared = 1)
+    DedupOps.verifiedJaccard(cand, batchSig.unionAll(idxSig), minJ = 0.5)
+      .select(col("doc_a").as("batch_id"), col("doc_b").as("match_id"), col("jaccard"))
   }
 
   /** Exact n-gram Jaccard pairs (doc_a < doc_b, J ≥ 0.4) over the planted-
@@ -1392,34 +1209,9 @@ object SimilarityQueries {
   ): DataFrame = {
     val sh64 = corpusWithDups(s, d, keepFrac)
       .select(col("doc_id"), hashedShingles64(col("text")).as("sh"))
-    val w = Window.partitionBy(col("sh_key"))
-    val idx = sh64
-      .select(col("doc_id"), explode(col("sh")).as("sh_key"))
-      .withColumn("df", count(lit(1)).over(w))
-      .filter(col("df") <= 50)
-      .select("doc_id", "sh_key")
-    val cand = idx
-      .as("a")
-      .hint("merge")
-      .join(
-        idx.as("b").hint("merge"),
-        col("a.sh_key") === col("b.sh_key") && col("a.doc_id") < col("b.doc_id")
-      )
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("n_common_lowdf"))
-      .filter(col("n_common_lowdf") >= 3)
-      .select("doc_a", "doc_b")
-    cand
-      .join(sh64.as("sa"), col("doc_a") === col("sa.doc_id"))
-      .join(sh64.as("sb"), col("doc_b") === col("sb.doc_id"))
-      .select(
-        col("doc_a"),
-        col("doc_b"),
-        jaccard(col("sa.sh"), col("sb.sh")).as("jaccard"),
-        size(col("sa.sh")).as("na"),
-        size(col("sb.sh")).as("nb")
-      )
-      .filter(col("jaccard") >= jaccardMin)
+    val key = Seq("sh_key")
+    val idx = DedupOps.cappedIndex(sh64.select(col("doc_id"), explode(col("sh")).as("sh_key")), key, maxDf = 50)
+    DedupOps.verifiedJaccard(DedupOps.sharedKeyPairs(idx, key, minShared = 3), sh64, jaccardMin)
   }
 
   /** The DuckDB replica of [[ngramJaccardPairs]] as named CTEs ending in
@@ -1461,106 +1253,6 @@ object SimilarityQueries {
       |  JOIN sz sa ON sa.doc_id = doc_a
       |  JOIN sz sb ON sb.doc_id = doc_b
       |  WHERE CAST(nc AS DOUBLE) / (sa.n + sb.n - nc) >= $jaccardMin)""".stripMargin
-
-  /** Connected components by min-label propagation over an undirected edge
-    * set — the canonical "fuzzy dedup" clustering step: every document gets
-    * the smallest doc_id reachable through the near-dup graph as its
-    * cluster id. Each iteration is two shuffles (neighbor-min groupBy +
-    * label join); near-dup graphs have tiny diameter (a cluster is a
-    * handful of variants of one document), so convergence takes a couple
-    * of rounds — the loop runs Spark JOBS per round (a convergence count,
-    * exactly like Pregel supersteps), never row-level driver work, and
-    * the growing lineage truncates each round: to DURABLE storage when
-    * the session has a checkpoint dir configured
-    * (`sc.setCheckpointDir(...)` — the cluster deployment, where a lost
-    * executor must not re-derive round k from round 0), else
-    * `localCheckpoint` (the single-JVM test/bench shape). The durable
-    * write persists the round first so the reliable-checkpoint write job
-    * reads the cache instead of recomputing the round's lineage (the
-    * standard persist-then-checkpoint pattern). Superseded rounds' files
-    * remain on storage until context shutdown unless
-    * `spark.cleaner.referenceTracking.cleanCheckpoints=true`; a
-    * long-lived driver should enable that or prune round k−1 after
-    * round k materializes (GraphX's PeriodicCheckpointer shape).
-    */
-  private[graft] def connectedComponents(
-      nodes: DataFrame, // one column: id
-      edges: DataFrame, // columns: src, dst
-      maxIters: Int = 20
-  ): DataFrame = {
-    val durable = edges.sparkSession.sparkContext.getCheckpointDir.isDefined
-    // `eager = false` (r17): a LAZY localCheckpoint materializes inside the
-    // first action that reads it — for the per-round label tables that is
-    // the convergence labelSum aggregate, so each round costs ONE Spark job
-    // instead of a materialization job plus the aggregate (measured: ~2
-    // jobs/round → 1 at identical results; job count is the dominant cost
-    // of the loop at bench scale). Only safe when the frame's FIRST
-    // consumer is a single sequential action — the edge list stays EAGER
-    // because its first consumer (round 1) reads it through two union
-    // branches at once, which would race to compute the un-materialized
-    // pipeline twice. The durable arm keeps the standard
-    // persist→checkpoint→unpersist shape (reliable checkpoints are a
-    // cluster-faul-tolerance write; eagerness is the point there).
-    def truncate(df: DataFrame, eager: Boolean = true): DataFrame =
-      if (durable) {
-        df.persist()
-        val out = df.checkpoint() // eager: safe to drop the cache after
-        df.unpersist()
-        out
-      } else df.localCheckpoint(eager)
-    // Truncate the edge pipeline BEFORE the symmetric union: the union's
-    // two branches are different projections of the same (expensive) pair
-    // pipeline, so truncating the union evaluated that pipeline twice in
-    // one job (StageProbe r17: the shingle+verify stages ran once per
-    // branch in q_dedup_clusters / q_survivorship). Materialize the raw
-    // edge list once; the swapped branch is then a free re-scan of the
-    // checkpointed rows, and the union itself needs no second checkpoint.
-    val e0 = truncate(edges.select(col("src"), col("dst")))
-    val bi = e0.unionAll(e0.select(col("dst").as("src"), col("src").as("dst")))
-    // Only nodes that touch an edge can ever change label — in a dedup
-    // graph that is a small fraction of the corpus, so the iteration works
-    // on the edge-connected subset and the (dominant) singleton mass joins
-    // back untouched at the end. At 100 TB this is the difference between
-    // iterating over near-dup clusters and iterating over the internet.
-    val connected = bi.select(col("src").as("id")).distinct()
-    // Lazy: materialized by the labelSum aggregate below, one job.
-    var labels = truncate(connected.select(col("id"), col("id").as("comp")), eager = false)
-    // Convergence detection: labels only ever DECREASE under min-label
-    // propagation, so the label sum is strictly monotone — equal sums
-    // between rounds ⟺ no label changed. One aggregate job over the new
-    // labels per round, replacing a join + filter + isEmpty job over both
-    // rounds' checkpoints — one fewer Spark job per superstep, and the
-    // aggregate reads a single checkpoint instead of joining two.
-    // DECIMAL(38,0): exact at any id scale (a 1e9-node graph of 1e12-range
-    // ids overflows a long sum).
-    // sum() over zero rows is SQL NULL — a clean corpus (no near-dup pairs)
-    // has an empty edge-connected subset, so guard to ZERO: equal zero sums
-    // then converge on the first round, which is correct (nothing to label).
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      Option(df.agg(sum(col("comp").cast("decimal(38,0)"))).head().getDecimal(0))
-        .getOrElse(java.math.BigDecimal.ZERO)
-    var prevSum = labelSum(labels)
-    var converged = false
-    var it = 0
-    while (!converged && it < maxIters) {
-      val nbrMin = bi
-        .join(labels, bi("dst") === labels("id"))
-        .groupBy(col("src"))
-        .agg(min(col("comp")).as("nmin"))
-      val next = labels
-        .join(nbrMin, labels("id") === nbrMin("src"), "left")
-        .select(labels("id"), least(col("comp"), coalesce(col("nmin"), col("comp"))).as("comp"))
-        .transform(d => truncate(d, eager = false)) // materialized by labelSum: one job/round
-      val nextSum = labelSum(next)
-      converged = nextSum.compareTo(prevSum) == 0
-      prevSum = nextSum
-      labels = next
-      it += 1
-    }
-    nodes
-      .join(labels, nodes("id") === labels("id"), "left")
-      .select(nodes("id"), coalesce(col("comp"), nodes("id")).as("comp"))
-  }
 
   /** Product-quantization codebooks: per-subspace k-means (Lloyd) trained
     * driver-side on a bounded deterministic sample — the faiss shape:
@@ -1696,8 +1388,8 @@ object SimilarityQueries {
     Q(
       "q_dedup_minhash",
       // Registered form = the banded recall/precision report (the pair
-      // table itself is minhashPairs, spec-consumed and shared with the
-      // clustering query): the reference set is the EXACT J ≥ 0.5 pair
+      // table itself is minhashPairs, spec-consumed): the reference set
+      // is the EXACT J ≥ 0.5 pair
       // set from the deterministic inverted-index pipeline
       // (ngramJaccardPairs — the same machinery q_ngram_jaccard's oracle
       // hash-checks against DuckDB, re-parameterized to minhash's
@@ -1786,41 +1478,16 @@ object SimilarityQueries {
     Q(
       "q_dedup_substrings",
       (s, d) => {
-        val wins = corpusWithDups(s, d)
-          .select(col("doc_id"), explode(charWindowHashes64(col("text"), w = 32)).as("win"))
-        // df-cap form: measured HEAD-TO-HEAD at sf0.1 (r9, exclusive
-        // interleaved runs) the window count beats both agg alternatives —
-        //   count().over(partitionBy(win)):      median 1.06s spread 0.11s
-        //   groupBy(win).count + semi-join(SMJ): median 1.89s spread 0.08s
-        //   groupBy(win).count + semi-join(SHJ): median 2.42s spread 0.37s
-        // — because the pair join below is a sort-merge join ON THE SAME
-        // KEY: the window's shuffle+sort is the exact exchange+ordering
-        // the SMJ needs, so the "extra" window sort is free (one sorted
-        // exchange, reused for both join sides — PlanAuditSpec pins the
-        // reuse and the single-sort shape), while any agg form pays a
-        // second pass over the index before the join can start. r7/r8's
-        // flagged variance was host load, not this plan: both forms
-        // measured ≈10% spread under exclusive runs.
         // Bucket occupancy at sf0.1 (df = docs per 32-char-window key):
         //   df=1: 205k keys; df=2: 1.01M (the planted 85%-truncation
         //   dups); df=3..8: ~51k tail; max df = 8 — the ≤50 cap is pure
         //   adversarial armor (boilerplate windows at 100 TB), it drops
-        //   nothing on organic data, and Σ df² stays linear in n.
-        val w = Window.partitionBy(col("win"))
-        val idx = wins
-          .withColumn("df", count(lit(1)).over(w))
-          .filter(col("df") <= 50)
-          .select("doc_id", "win")
-        idx
-          .as("a")
-          .hint("merge")
-          .join(
-            idx.as("b").hint("merge"),
-            col("a.win") === col("b.win") && col("a.doc_id") < col("b.doc_id")
-          )
-          .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-          .agg(count(lit(1)).as("n_shared_windows"))
-          .filter(col("n_shared_windows") >= 8)
+        //   nothing on organic data.
+        val wins = corpusWithDups(s, d)
+          .select(col("doc_id"), explode(charWindowHashes64(col("text"), w = 32)).as("win"))
+        val key = Seq("win")
+        DedupOps.sharedKeyPairs(DedupOps.cappedIndex(wins, key, maxDf = 50), key, minShared = 8)
+          .withColumnRenamed("n_shared", "n_shared_windows")
           .orderBy(col("doc_a"), col("doc_b"))
       },
       Some("""WITH corpus AS (
@@ -1939,7 +1606,7 @@ object SimilarityQueries {
       (s, d) => {
         val pairs = ngramJaccardPairs(s, d)
         val nodes = corpusWithDups(s, d).select(col("doc_id").as("id"))
-        connectedComponents(nodes, pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")))
+        GraphOps.connectedComponents(nodes, pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")))
           .select(
             col("id").as("doc_id"),
             col("comp").as("cluster_id"),
@@ -1988,7 +1655,7 @@ object SimilarityQueries {
         val corpus = corpusWithDups(s, d)
           .select(col("doc_id"), length(col("text")).cast("long").as("len"))
         val pairs = ngramJaccardPairs(s, d)
-        val comp = connectedComponents(
+        val comp = GraphOps.connectedComponents(
           corpus.select(col("doc_id").as("id")),
           pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")))
         val labeled = corpus
@@ -2052,7 +1719,7 @@ object SimilarityQueries {
         // only aggregates, so the production table's output sort (and the
         // sketch pipeline's re-evaluation per report branch) was overhead.
         val sigs = simhashSigs(s, d).localCheckpoint()
-        val pairs = byteBandPairsUnsorted(sigs)
+        val pairs = DedupOps.byteBandPairsUnsorted(sigs)
         val mod = sampleModulus(documentsCount(s, d))
         val mismatch =
           sampledBallAudit(sigs.filter(inSampleBase(mod)(col("doc_id"))), pairs, mod)
@@ -2223,7 +1890,7 @@ object SimilarityQueries {
         )
         val corpus = base.unionAll(planted)
           .select(col("vec_id").as("doc_id"), col("embedding"), bands.as("bands"))
-        val cand = bandedPairs(corpus.select("doc_id", "bands"))
+        val cand = DedupOps.bandedPairs(corpus.select("doc_id", "bands"))
         val vecs = corpus.select(col("doc_id"), col("embedding"))
         cand
           .join(vecs.as("va"), col("doc_a") === col("va.doc_id"))
@@ -2753,7 +2420,7 @@ object SimilarityQueries {
         // differently, so no exchange reuse is possible across them and
         // without this the whole render→ImageIO-decode→dHash pass ran
         // TWICE (StageProbe r17: two identical full-corpus codec stages).
-        val pairs = byteBandPairsUnsorted(imageSigs(s, d).localCheckpoint())
+        val pairs = DedupOps.byteBandPairsUnsorted(imageSigs(s, d).localCheckpoint())
         // Render only the fixed-size sample for the ball branch (base-id
         // sampling via inSampleBase keeps each sampled original's
         // planted variant, and the second render pass costs ~500 docs
@@ -2815,7 +2482,7 @@ object SimilarityQueries {
         // different pushed filters, so without the localCheckpoint the
         // synth→encode→decode→fingerprint pass ran TWICE (StageProbe r17:
         // two identical ~4 s 32-task codec stages at sf0.1).
-        val pairs = byteBandPairsUnsorted(audioSigs(s, d).localCheckpoint())
+        val pairs = DedupOps.byteBandPairsUnsorted(audioSigs(s, d).localCheckpoint())
         // Synthesize only the fixed-size sample for the ball branch —
         // base-id sampling keeps each sampled original's planted variant,
         // and the second codec pass costs ~500 docs at ANY corpus size.
@@ -2874,7 +2541,7 @@ object SimilarityQueries {
         // render→encode→decode→crop→dither→re-encode→decode→DCT pass ran
         // TWICE (StageProbe r17: two identical ~12 s 32-task codec stages
         // at sf0.1 — the query's entire cost, doubled).
-        val pairs = byteBandPairsUnsorted(phashSigs(s, d).localCheckpoint())
+        val pairs = DedupOps.byteBandPairsUnsorted(phashSigs(s, d).localCheckpoint())
         // Render only the fixed-size sample for the ball branch — the
         // second render+crop pass costs ~500 docs at ANY corpus size.
         val off = plantedOffset(s, d)
@@ -2967,35 +2634,19 @@ object SimilarityQueries {
         val idxDocs = incrementalNearIndex(s, d).withColumn("side", lit("i"))
         val sh64 = batch.unionAll(idxDocs)
           .select(col("doc_id"), col("side"), hashedShingles64(col("text")).as("sh"))
-        val w = Window.partitionBy(col("sh_key"))
-        val inv = sh64
-          .select(col("doc_id"), col("side"), explode(col("sh")).as("sh_key"))
-          .withColumn("df", count(lit(1)).over(w))
-          .filter(col("df") <= 50)
-          .select("doc_id", "side", "sh_key")
-        val cand = inv.filter(col("side") === "b").as("a")
-          .hint("merge")
-          .join(inv.filter(col("side") === "i").as("b").hint("merge"),
-            col("a.sh_key") === col("b.sh_key"))
-          .groupBy(col("a.doc_id").as("batch_id"), col("b.doc_id").as("match_id"))
-          .agg(count(lit(1)).as("n_common_lowdf"))
-          .filter(col("n_common_lowdf") >= 3)
-          .select("batch_id", "match_id")
-        val matched = cand
-          .join(sh64.as("sa"), col("batch_id") === col("sa.doc_id"))
-          .join(sh64.as("sb"), col("match_id") === col("sb.doc_id"))
-          .select(
-            col("batch_id"),
-            col("match_id"),
-            jaccard(col("sa.sh"), col("sb.sh")).as("jaccard"))
-          .filter(col("jaccard") >= 0.5)
+        val key = Seq("sh_key")
+        val inv = DedupOps.cappedIndex(
+          sh64.select(col("doc_id"), col("side"), explode(col("sh")).as("sh_key")), key, maxDf = 50)
+        val cand = DedupOps.probePairs(
+          inv.filter(col("side") === "b"), inv.filter(col("side") === "i"), key, minShared = 3)
+        val matched = DedupOps.verifiedJaccard(cand, sh64, minJ = 0.5)
         batch
-          .join(matched, col("doc_id") === col("batch_id"), "left")
+          .join(matched, col("doc_id") === col("doc_a"), "left")
           .select(
             col("doc_id"),
-            col("match_id"),
+            col("doc_b").as("match_id"),
             col("jaccard"),
-            col("match_id").isNull.as("is_new"))
+            col("doc_b").isNull.as("is_new"))
       },
       Some(raw"""WITH idx_docs AS (
            |  SELECT doc_id, text FROM documents WHERE doc_id % 5 <> 4),

@@ -3,9 +3,10 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Link-graph centrality (PageRank) in the fixed-point integer form.
+/** The engine's iterative graph loops: link-graph centrality (PageRank)
+  * in the fixed-point integer form, and [[connectedComponents]].
   *
-  * Why integer: float PageRank sums partial contributions in partition
+  * Why integer PageRank: float PageRank sums partial contributions in partition
   * order, so ranks drift by ulps per iteration per engine/run — the
   * truncating-DIV fixed-point recurrence (ranks in parts-per-R) is
   * bit-identical across Spark, DuckDB, retries, and partitionings, which
@@ -127,5 +128,91 @@ object GraphOps {
         .localCheckpoint(true)
     }
     ranks
+  }
+
+  /** Connected components by min-label propagation over an undirected edge
+    * set — the "fuzzy dedup" clustering step: every node gets the smallest
+    * id reachable through the graph as its component id. `nodes` has one
+    * column `id`, `edges` has (src, dst); returns (id, comp).
+    *
+    * Each round is two shuffles (neighbor-min groupBy + label join) and
+    * moves a label one hop, so the loop runs (diameter + 1) rounds; near-dup
+    * graphs have tiny diameter (a cluster is a handful of variants of one
+    * document). The loop runs Spark JOBS per round (a convergence check,
+    * like Pregel supersteps), never row-level driver work.
+    *
+    * The growing lineage truncates each round: to DURABLE storage when the
+    * session has a checkpoint dir configured (`sc.setCheckpointDir(...)` —
+    * the cluster deployment, where a lost executor must not re-derive round
+    * k from round 0), else `localCheckpoint` (the single-JVM test/bench
+    * shape). The durable write persists the round first so the
+    * reliable-checkpoint write job reads the cache instead of recomputing
+    * the round's lineage. Superseded rounds' files remain on storage until
+    * context shutdown unless
+    * `spark.cleaner.referenceTracking.cleanCheckpoints=true`; a long-lived
+    * driver should enable that or prune round k−1 after round k
+    * materializes (GraphX's PeriodicCheckpointer shape).
+    */
+  def connectedComponents(nodes: DataFrame, edges: DataFrame): DataFrame = {
+    val durable = edges.sparkSession.sparkContext.getCheckpointDir.isDefined
+    // `eager = false`: a LAZY localCheckpoint materializes inside the first
+    // action that reads it — for the per-round label tables that is the
+    // convergence labelSum aggregate, so each round costs ONE Spark job
+    // instead of a materialization job plus the aggregate. Only safe when
+    // the frame's FIRST consumer is a single sequential action — the edge
+    // list stays EAGER because its first consumer (round 1) reads it
+    // through two union branches at once, which would race to compute the
+    // un-materialized pipeline twice. The durable arm keeps the standard
+    // persist→checkpoint→unpersist shape (reliable checkpoints are a
+    // cluster fault-tolerance write; eagerness is the point there).
+    def truncate(df: DataFrame, eager: Boolean = true): DataFrame =
+      if (durable) {
+        df.persist()
+        val out = df.checkpoint() // eager: safe to drop the cache after
+        df.unpersist()
+        out
+      } else df.localCheckpoint(eager)
+    // Truncate the edge pipeline BEFORE the symmetric union: the union's
+    // two branches are different projections of the same (expensive) pair
+    // pipeline, so truncating the union would evaluate that pipeline twice
+    // in one job. Materialize the raw edge list once; the swapped branch is
+    // then a free re-scan of the checkpointed rows.
+    val e0 = truncate(edges.select(col("src"), col("dst")))
+    val bi = e0.unionAll(e0.select(col("dst").as("src"), col("src").as("dst")))
+    // Only nodes that touch an edge can ever change label — in a dedup
+    // graph that is a small fraction of the corpus, so the iteration works
+    // on the edge-connected subset and the (dominant) singleton mass joins
+    // back untouched at the end.
+    val connected = bi.select(col("src").as("id")).distinct()
+    var labels = truncate(connected.select(col("id"), col("id").as("comp")), eager = false)
+    // Convergence: labels only ever DECREASE, so equal label sums between
+    // rounds ⟺ no label changed. DECIMAL(38,0) is exact at any id scale (a
+    // long sum of 1e12-range ids over 1e9 nodes overflows); sum() over zero
+    // rows is NULL, so an empty edge set reads as ZERO and converges at once.
+    def labelSum(df: DataFrame): java.math.BigDecimal =
+      Option(df.agg(sum(col("comp").cast("decimal(38,0)"))).head().getDecimal(0))
+        .getOrElse(java.math.BigDecimal.ZERO)
+    var prevSum = labelSum(labels)
+    var converged = false
+    // Terminates: every label is a node id and only decreases, so the sum
+    // falls strictly each round until it stops, after at most diameter + 1
+    // rounds.
+    while (!converged) {
+      val nbrMin = bi
+        .join(labels, bi("dst") === labels("id"))
+        .groupBy(col("src"))
+        .agg(min(col("comp")).as("nmin"))
+      val next = labels
+        .join(nbrMin, labels("id") === nbrMin("src"), "left")
+        .select(labels("id"), least(col("comp"), coalesce(col("nmin"), col("comp"))).as("comp"))
+        .transform(d => truncate(d, eager = false)) // materialized by labelSum: one job/round
+      val nextSum = labelSum(next)
+      converged = nextSum.compareTo(prevSum) == 0
+      prevSum = nextSum
+      labels = next
+    }
+    nodes
+      .join(labels, nodes("id") === labels("id"), "left")
+      .select(nodes("id"), coalesce(col("comp"), nodes("id")).as("comp"))
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the two halves of byteBandPairs' identical-sig star collapse
-  * (SimilarityQueries.scala — the mass-identical-sketch guard):
+  * (DedupOps.scala — the mass-identical-sketch guard):
   *
   *  1. When a group DOES exceed maxGroup, the collapsed output is linear in
   *     the group size (never m²/2) and the hamming ≤ 7 relation stays
@@ -23,7 +23,7 @@ class ByteBandGuardSpec extends AnyFunSuite with SparkSpec {
     // from the group; doc 200 is far (hamming 64 from the group, 62 from 100).
     val sigs = ((0L until 20L).map(i => (i, 0L)) :+ (100L, 3L) :+ (200L, -1L))
       .toDF("doc_id", "sig")
-    val pairs = SimilarityQueries
+    val pairs = graft.operators.DedupOps
       .byteBandPairs(sigs, maxGroup = 8)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1)))

@@ -574,7 +574,7 @@ class DedupRecallSpec extends AnyFunSuite with SparkSpec {
     try {
       val nodes = Seq(1L, 2L, 3L, 4L, 5L).toDF("id")
       val edges = Seq((1L, 2L), (2L, 3L), (4L, 5L)).toDF("src", "dst")
-      val comp = SimilarityQueries
+      val comp = graft.operators.GraphOps
         .connectedComponents(nodes, edges)
         .as[(Long, Long)]
         .collect()
@@ -591,6 +591,44 @@ class DedupRecallSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
+  test("connected components converge on a 50-node path, however many rounds it takes") {
+    // Min-label propagation moves a label one hop per round, so node 50
+    // needs 49 rounds to learn label 1.
+    val nodes = (1L to 50L).toDF("id")
+    val edges = (1L until 50L).map(i => (i, i + 1)).toDF("src", "dst")
+    val comp = graft.operators.GraphOps.connectedComponents(nodes, edges).as[(Long, Long)].collect().toMap
+    assert(comp == (1L to 50L).map(_ -> 1L).toMap, s"node 50 ended with label ${comp(50L)}")
+  }
+
+  test("minhash pairs skip documents too short to shingle, without error") {
+    // Three 2-word documents have no word 3-grams; their planted copies
+    // neither. Doc 5's planted copy is the one near-dup pair.
+    val dir = java.nio.file.Files.createTempDirectory("short_docs").toString
+    val text = "the quick brown fox jumps over the lazy dog while seven wise owls count the silver stars above"
+    Seq((1L, "alpha beta"), (2L, "gamma delta"), (4L, "epsilon zeta"), (5L, text))
+      .toDF("doc_id", "text")
+      .withColumn("n_chars", length(col("text")).cast("long"))
+      .write.parquet(s"$dir/documents.parquet")
+    val pairs = SimilarityQueries.minhashPairs(spark, dir).select("doc_a", "doc_b").as[(Long, Long)].collect()
+    assert(pairs.toSeq == Seq((5L, 1000005L)))
+    // The incremental twin: batch = doc 4 + doc 5's copy, index = docs 1, 2, 5.
+    val matches = SimilarityQueries.incrementalMinhashMatches(spark, dir)
+      .select("batch_id", "match_id").as[(Long, Long)].collect()
+    assert(matches.toSeq == Seq((1000005L, 5L)))
+  }
+
+  test("q_dedup_clusters and q_survivorship run no more Spark jobs than the baseline") {
+    // Baseline: the job counts before the pair family moved into DedupOps
+    // (27 and 32, a warm second run at sf0.001). A warm run leaves out the
+    // first read's schema inference.
+    for ((q, budget) <- Seq("q_dedup_clusters" -> 27, "q_survivorship" -> 32)) {
+      QueryRegistry.queries(q)(spark, sfDir).collect()
+      val (_, jobs) = jobsDuring(QueryRegistry.queries(q)(spark, sfDir).collect())
+      info(s"$q: $jobs jobs")
+      assert(jobs <= budget, s"$q ran $jobs jobs, over its budget of $budget")
+    }
+  }
+
   test("bandedPairs hot-bucket guard: 1,000 identical docs link in O(k), not O(k²)") {
     // Pathology the composed pipeline normally prevents by running exact
     // dedup FIRST (LlmPipelineSpec): k byte-identical docs share every band
@@ -602,7 +640,7 @@ class DedupRecallSpec extends AnyFunSuite with SparkSpec {
     val cold = spark
       .range(2000, 2005)
       .select(col("id").as("doc_id"), array(lit(99L), col("id") + 100L).as("bands"))
-    val pairs = SimilarityQueries
+    val pairs = graft.operators.DedupOps
       .bandedPairs(hot.unionAll(cold), maxBucket = 8)
       .as[(Long, Long)]
       .collect()
@@ -619,6 +657,6 @@ class DedupRecallSpec extends AnyFunSuite with SparkSpec {
     // 100 docs in one bucket is far under the 4096 default: output must be
     // the exact all-pairs set.
     val df = spark.range(100).select(col("id").as("doc_id"), array(lit(5L)).as("bands"))
-    assert(SimilarityQueries.bandedPairs(df).count() == 100L * 99 / 2)
+    assert(graft.operators.DedupOps.bandedPairs(df).count() == 100L * 99 / 2)
   }
 }

@@ -2,15 +2,13 @@ package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.security.MessageDigest
-import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.{CountDownLatch, Executors}
 
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.SparkThrowable
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -19,39 +17,6 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.{ParquetRead, StagingSink}
 
 class ParquetReadSpec extends AnyFunSuite with SparkSpec {
-  private val tagKey = "graft.spec.jobTag"
-
-  /** `body`'s result and the number of Spark jobs it started. A marker job
-    * follows `body` through the same listener queue, so once the listener
-    * has seen the marker it has seen every job `body` started.
-    */
-  private def jobsDuring[A](body: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    val tag = java.util.UUID.randomUUID().toString
-    val started = new AtomicInteger
-    val markerSeen = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty(tagKey)) match {
-          case Some(`tag`)                    => started.incrementAndGet()
-          case Some(t) if t == s"$tag-marker" => markerSeen.countDown()
-          case _                              =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(tagKey, tag)
-      val out = body
-      sc.setLocalProperty(tagKey, s"$tag-marker")
-      sc.parallelize(Seq(1), 1).count()
-      assert(markerSeen.await(60, TimeUnit.SECONDS), "listener never saw the marker job")
-      (out, started.get)
-    } finally {
-      sc.setLocalProperty(tagKey, null)
-      sc.removeSparkListener(listener)
-    }
-  }
-
   private def freshDir(prefix: String): String = Files.createTempDirectory(prefix).toString
 
   /** `df` as ONE parquet file at `file`, replacing whatever is there. */
