@@ -1,12 +1,19 @@
 package graft
 
-/** Ad-hoc plan inspector: prints the executed physical plan of the named
-  * queries (all of them with no args) — the quick companion to
-  * [[Plans]]' committed PLANS.md for the "explain, then iterate until
-  * it's the plan you'd want" loop.
+import org.apache.spark.sql.execution.FormattedMode
+
+/** Plan inspector: prints the formatted physical plan
+  * (`explainString(FormattedMode)`: the operator tree, then each operator's
+  * inputs, outputs and arguments) of the named queries, all of them with
+  * no args — the quick companion to [[Plans]]' committed PLANS.md for the
+  * "explain, then iterate until it's the plan you'd want" loop, and the
+  * before/after plan artifact of a change (redirect stdout to a file and
+  * diff two checkouts).
   * `sbt "runMain graft.Explain q_oov_rate q_corr_stats"`; pass `-x` to
   * EXECUTE each query first and print the final adaptive plan (stage
-  * reuse and AQE re-plans only appear there).
+  * reuse and AQE re-plans only appear there); `-l` alone lists the
+  * registry without starting Spark. Reads `$SPARK_GRAFT_SF_DIR` (default
+  * sf0.01).
   */
 object Explain {
   def main(args: Array[String]): Unit = {
@@ -28,7 +35,7 @@ object Explain {
       // isFinalPlan/stage-reuse markers to appear below.
       if (execute) df.collect()
       println(s"===== $n =====")
-      println(df.queryExecution.executedPlan.toString)
+      println(df.queryExecution.explainString(FormattedMode))
     }
     spark.stop()
   }

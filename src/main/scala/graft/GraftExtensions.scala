@@ -15,43 +15,41 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   import GraftExtensions._
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    register(ext, "simhash64", es => SimHash64(one(es, "simhash64")))
-    register(ext, "shingles", es => ShingleNGrams(one(es, "shingles"), 3))
-    register(ext, "hashed_shingles", es => HashedShingles(one(es, "hashed_shingles"), 3))
-    register(ext, "minhash_signature", es => MinHashSignature(one(es, "minhash_signature"), 64))
-    register(ext, "minhash_bands", es => MinHashBands(one(es, "minhash_bands"), 64, 16, 4))
-    register(ext, "cosine_sim", es => CosineSim(two(es, "cosine_sim")._1, two(es, "cosine_sim")._2))
-    register(ext, "word_rep_stats", es => WordRepStats(one(es, "word_rep_stats")))
-    register(ext, "normalize_text", es => NormalizeText(one(es, "normalize_text")))
-    register(ext, "char_entropy", es => CharEntropy(one(es, "char_entropy")))
-    register(ext, "char_window_hashes64", es => CharWindowHashes64(one(es, "char_window_hashes64"), 32))
-    register(ext, "bpe_token_count", es => BpeTokenCount(one(es, "bpe_token_count"), TextFunctions.demoBpeMerges))
-    register(ext, "bpe_segments", es => BpeSegments(one(es, "bpe_segments"), TextFunctions.demoBpeMerges))
-    register(ext, "deflate_ratio", es => DeflateRatio(one(es, "deflate_ratio")))
+    unary.foreach { case (name, build) => register(ext, name, 1)(es => build(es.head)) }
+    register(ext, "cosine_sim", 2)(es => CosineSim(es(0), es(1)))
   }
 }
 
 object GraftExtensions {
-  private def one(es: Seq[Expression], name: String): Expression = {
-    require(es.length == 1, s"$name expects 1 argument, got ${es.length}")
-    es.head
-  }
+  /** The one-argument SQL functions; parameters a kernel takes beyond its
+    * argument are pinned here.
+    */
+  private val unary: Seq[(String, Expression => Expression)] = Seq(
+    "simhash64" -> (SimHash64(_)),
+    "shingles" -> (ShingleNGrams(_, 3)),
+    "hashed_shingles" -> (HashedShingles(_, 3)),
+    "minhash_signature" -> (MinHashSignature(_, 64)),
+    "minhash_bands" -> (MinHashBands(_, 64, 16, 4)),
+    "word_rep_stats" -> (WordRepStats(_)),
+    "normalize_text" -> (NormalizeText(_)),
+    "char_entropy" -> (CharEntropy(_)),
+    "char_window_hashes64" -> (CharWindowHashes64(_, 32)),
+    "bpe_token_count" -> (BpeTokenCount(_, TextFunctions.demoBpeMerges)),
+    "bpe_segments" -> (BpeSegments(_, TextFunctions.demoBpeMerges)),
+    "deflate_ratio" -> (DeflateRatio(_))
+  )
 
-  private def two(es: Seq[Expression], name: String): (Expression, Expression) = {
-    require(es.length == 2, s"$name expects 2 arguments, got ${es.length}")
-    (es(0), es(1))
-  }
-
-  private def register(
-      ext: SparkSessionExtensions,
-      name: String,
-      builder: Seq[Expression] => Expression
-  ): Unit =
+  private def register(ext: SparkSessionExtensions, name: String, arity: Int)(
+      build: Seq[Expression] => Expression): Unit =
     ext.injectFunction(
       (
         FunctionIdentifier(name),
         new ExpressionInfo(classOf[GraftExtensions].getName, name),
-        builder
+        es => {
+          require(es.length == arity,
+            s"$name expects $arity argument${if (arity == 1) "" else "s"}, got ${es.length}")
+          build(es)
+        }
       )
     )
 }

@@ -1210,7 +1210,7 @@ object SimilarityQueries {
     val sh64 = corpusWithDups(s, d, keepFrac)
       .select(col("doc_id"), hashedShingles64(col("text")).as("sh"))
     val key = Seq("sh_key")
-    val idx = DedupOps.cappedIndex(sh64.select(col("doc_id"), explode(col("sh")).as("sh_key")), key, maxDf = 50)
+    val idx = DedupOps.cappedIndex(DedupOps.setPostings(sh64, "doc_id"), key, maxDf = 50)
     DedupOps.verifiedJaccard(DedupOps.sharedKeyPairs(idx, key, minShared = 3), sh64, jaccardMin)
   }
 
@@ -2635,8 +2635,7 @@ object SimilarityQueries {
         val sh64 = batch.unionAll(idxDocs)
           .select(col("doc_id"), col("side"), hashedShingles64(col("text")).as("sh"))
         val key = Seq("sh_key")
-        val inv = DedupOps.cappedIndex(
-          sh64.select(col("doc_id"), col("side"), explode(col("sh")).as("sh_key")), key, maxDf = 50)
+        val inv = DedupOps.cappedIndex(DedupOps.setPostings(sh64, "doc_id", "side"), key, maxDf = 50)
         val cand = DedupOps.probePairs(
           inv.filter(col("side") === "b"), inv.filter(col("side") === "i"), key, minShared = 3)
         val matched = DedupOps.verifiedJaccard(cand, sh64, minJ = 0.5)

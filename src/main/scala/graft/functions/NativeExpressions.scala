@@ -15,30 +15,101 @@ import org.apache.spark.sql.catalyst.util.ArrayData
   * higher-order-function lambdas, no per-element array churn. This is the
   * "custom Expression beats UDF beats HOF" tier of the design (SURVEY.md §3):
   * per row, one virtual-call-free static invoke over unsafe memory.
+  *
+  * The null policy and the argument checks live once, in [[Kernel]] and its
+  * one-argument bases; each case class below keeps only its own parameters,
+  * result type and kernel call.
   */
 object NativeExpressions {
   private[functions] def isStr(dt: DataType): Boolean = dt.isInstanceOf[StringType]
 
-  private[functions] def arrayElem(dt: DataType): DataType =
-    dt.asInstanceOf[ArrayType].elementType
+  /** The vector kernels read either element width. */
+  private[functions] def isVector(dt: DataType): Boolean = dt match {
+    case ArrayType(FloatType | DoubleType, _) => true
+    case _                                    => false
+  }
 
   /** ARRAY<BIGINT> gate for the minhash kernels: UnsafeArrayData.getLong
     * on an int-packed array reads across element slots — plausible-looking
     * but garbage hashes — so reject anything else at analysis time.
     */
-  private[functions] def requireLongArray(fn: String, dt: DataType): TypeCheckResult = dt match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(s"$fn requires ARRAY<BIGINT>, got ${other.sql}")
+  private[functions] def isLongArray(dt: DataType): Boolean = dt match {
+    case ArrayType(LongType, _) => true
+    case _                      => false
+  }
+
+  /** True when a vector argument holds FLOATs, false for DOUBLEs. */
+  private[functions] def floatElems(dt: DataType): Boolean =
+    dt.asInstanceOf[ArrayType].elementType == FloatType
+}
+
+/** What every native kernel shares. NULL in any argument gives NULL out
+  * (`nullIntolerant`: the kernel never sees a NULL, and the optimizer may
+  * infer IS NOT NULL on the arguments). The argument types are checked
+  * once, at analysis; a mismatch fails with
+  * `<fn> requires <argTypes>, got <actual types>`.
+  *
+  * `Serializable` here, so that task deserialization skips the one-argument
+  * constructors of the bases below and calls UnaryExpression's or
+  * BinaryExpression's no-argument one.
+  */
+trait Kernel extends Expression with Serializable {
+  /** The SQL name, as the type-check message spells it. */
+  protected def fn: String
+  /** The accepted argument types, as the type-check message spells them. */
+  protected def argTypes: String
+  /** One test per argument, in argument order. */
+  protected def argChecks: Seq[DataType => Boolean]
+  override def nullIntolerant: Boolean = true
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (children.zip(argChecks).forall { case (c, ok) => ok(c.dataType) }) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(s"$fn requires $argTypes, got ${children.map(_.dataType.sql).mkString(", ")}")
+}
+
+/** A one-argument kernel over STRING text. */
+abstract class StringKernel(protected val fn: String) extends UnaryExpression with Kernel {
+  protected def argTypes: String = "STRING"
+  protected def argChecks: Seq[DataType => Boolean] = Seq(NativeExpressions.isStr)
+}
+
+/** A one-argument kernel over an ARRAY<BIGINT> of hashed shingles. */
+abstract class LongArrayKernel(protected val fn: String) extends UnaryExpression with Kernel {
+  protected def argTypes: String = "ARRAY<BIGINT>"
+  protected def argChecks: Seq[DataType => Boolean] = Seq(NativeExpressions.isLongArray)
+}
+
+/** A one-argument kernel over an ARRAY<FLOAT|DOUBLE> vector; `isFloat`
+  * tells the kernel which element width to read.
+  */
+abstract class VectorKernel(protected val fn: String) extends UnaryExpression with Kernel {
+  protected def argTypes: String = "ARRAY<FLOAT|DOUBLE>"
+  protected def argChecks: Seq[DataType => Boolean] = Seq(NativeExpressions.isVector)
+  protected lazy val isFloat: Boolean = NativeExpressions.floatElems(child.dataType)
+}
+
+/** A STRING kernel under a BPE merge table. The table is a REAL parameter:
+  * any rank-ordered "left right" list (e.g. a tokenizer's merges.txt via
+  * TextFunctions.loadBpeMerges), shipped as a plan constant
+  * (addReferenceObj) — the task-binary broadcast path a production job uses
+  * for its tokenizer assets. Size-bounded: vocab-scale tables (GPT-2 ships
+  * 50k merges) are plan-constant territory; anything larger belongs in a
+  * join, not an expression.
+  */
+abstract class BpeKernel(fn: String) extends StringKernel(fn) {
+  def merges: Seq[String]
+  require(merges.length <= 200000,
+    s"merge table must stay vocab-scale (<= 200k pairs, got ${merges.length}) — " +
+      "a plan constant is broadcast to every task")
+  @transient protected lazy val ranks: java.util.HashMap[String, Integer] = {
+    val m = new java.util.HashMap[String, Integer]()
+    merges.zipWithIndex.foreach { case (p, i) => m.put(p, Integer.valueOf(i)) }
+    m
   }
 }
 
 /** `simhash64(text)` → 64-bit packed SimHash of the whitespace tokens. */
-case class SimHash64(child: Expression) extends UnaryExpression {
+case class SimHash64(child: Expression) extends StringKernel("simhash64") {
   override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (NativeExpressions.isStr(child.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"simhash64 requires STRING, got ${child.dataType.sql}")
   override protected def nullSafeEval(input: Any): Any =
     SketchImpl.simhash64(input.asInstanceOf[UTF8String])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -47,12 +118,8 @@ case class SimHash64(child: Expression) extends UnaryExpression {
 }
 
 /** `shingles(text, n)` → distinct word n-grams, first-occurrence order. */
-case class ShingleNGrams(child: Expression, n: Int) extends UnaryExpression {
+case class ShingleNGrams(child: Expression, n: Int) extends StringKernel("shingles") {
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (NativeExpressions.isStr(child.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"shingles requires STRING, got ${child.dataType.sql}")
   override protected def nullSafeEval(input: Any): Any =
     SketchImpl.shingleNGrams(input.asInstanceOf[UTF8String], n)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -63,12 +130,8 @@ case class ShingleNGrams(child: Expression, n: Int) extends UnaryExpression {
 /** `hashed_shingles(text, n)` → distinct `xxhash64(shingle) mod P` longs —
   * the join-key form of [[ShingleNGrams]].
   */
-case class HashedShingles(child: Expression, n: Int) extends UnaryExpression {
+case class HashedShingles(child: Expression, n: Int) extends StringKernel("hashed_shingles") {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (NativeExpressions.isStr(child.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"hashed_shingles requires STRING, got ${child.dataType.sql}")
   override protected def nullSafeEval(input: Any): Any =
     SketchImpl.hashedShingles(input.asInstanceOf[UTF8String], n)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -81,12 +144,8 @@ case class HashedShingles(child: Expression, n: Int) extends UnaryExpression {
   * collision bound ~n²/2⁶⁴, for exact-intersection verifies and membership
   * joins where the minhash [0, P) domain is not needed.
   */
-case class HashedShingles64(child: Expression, n: Int) extends UnaryExpression {
+case class HashedShingles64(child: Expression, n: Int) extends StringKernel("hashed_shingles64") {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (NativeExpressions.isStr(child.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"hashed_shingles64 requires STRING, got ${child.dataType.sql}")
   override protected def nullSafeEval(input: Any): Any =
     SketchImpl.hashedShingles64(input.asInstanceOf[UTF8String], n)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -98,17 +157,12 @@ case class HashedShingles64(child: Expression, n: Int) extends UnaryExpression {
   * all w-code-point character windows (stride 1), first-occurrence order —
   * the exact-substring membership form for character-level decontamination.
   * O(len) per row: the roll is O(1) per window. The SQL registration pins
-  * w = 32 (house style — shingles/minhash_bands pin their parameters the
-  * same way); the Column API (`TextFunctions.charWindowHashes64`) exposes
-  * w as a real parameter.
+  * w = 32 (as shingles/minhash_bands pin their parameters); the Column API
+  * (`TextFunctions.charWindowHashes64`) exposes w as a real parameter.
   */
-case class CharWindowHashes64(child: Expression, w: Int) extends UnaryExpression {
+case class CharWindowHashes64(child: Expression, w: Int) extends StringKernel("char_window_hashes64") {
   require(w >= 2, s"window must be >= 2 code points, got $w")
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (NativeExpressions.isStr(child.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"char_window_hashes64 requires STRING, got ${child.dataType.sql}")
   override protected def nullSafeEval(input: Any): Any =
     SketchImpl.charWindowHashes64(input.asInstanceOf[UTF8String], w)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -117,11 +171,8 @@ case class CharWindowHashes64(child: Expression, w: Int) extends UnaryExpression
 }
 
 /** `minhash_signature(hashedShingles, k)` → k-seat MinHash signature. */
-case class MinHashSignature(child: Expression, k: Int) extends UnaryExpression {
+case class MinHashSignature(child: Expression, k: Int) extends LongArrayKernel("minhash_signature") {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult =
-    NativeExpressions.requireLongArray("minhash_signature", child.dataType)
   override protected def nullSafeEval(input: Any): Any =
     SketchImpl.minhashSignature(input.asInstanceOf[ArrayData], k)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -132,12 +183,9 @@ case class MinHashSignature(child: Expression, k: Int) extends UnaryExpression {
 /** `minhash_bands(hashedShingles, k, b, r)` → b LSH band hashes (fused
   * signature + banding, one kernel call per row).
   */
-case class MinHashBands(child: Expression, k: Int, b: Int, r: Int) extends UnaryExpression {
+case class MinHashBands(child: Expression, k: Int, b: Int, r: Int) extends LongArrayKernel("minhash_bands") {
   require(b * r == k, s"bands($b) * rows($r) must equal signature size($k)")
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult =
-    NativeExpressions.requireLongArray("minhash_bands", child.dataType)
   override protected def nullSafeEval(input: Any): Any =
     SketchImpl.minhashBands(input.asInstanceOf[ArrayData], k, b, r)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -149,12 +197,8 @@ case class MinHashBands(child: Expression, k: Int, b: Int, r: Int) extends Unary
   * whitespace tokens, every set counted in one compiled tokenization pass.
   * Backs language-ID scoring and stopword ratios.
   */
-case class MarkerCounts(child: Expression, markerSets: Seq[Seq[String]]) extends UnaryExpression {
+case class MarkerCounts(child: Expression, markerSets: Seq[Seq[String]]) extends StringKernel("marker_counts") {
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (NativeExpressions.isStr(child.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"marker_counts requires STRING, got ${child.dataType.sql}")
   @transient private lazy val sets: Array[java.util.HashSet[UTF8String]] =
     markerSets.map { ms =>
       val h = new java.util.HashSet[UTF8String]()
@@ -179,12 +223,8 @@ case class MarkerCounts(child: Expression, markerSets: Seq[Seq[String]]) extends
   * lowercased whitespace tokens, one compiled pass per row (Gopher
   * repetition signals without an explode/shuffle pipeline).
   */
-case class WordRepStats(child: Expression) extends UnaryExpression {
+case class WordRepStats(child: Expression) extends StringKernel("word_rep_stats") {
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (NativeExpressions.isStr(child.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"word_rep_stats requires STRING, got ${child.dataType.sql}")
   override protected def nullSafeEval(input: Any): Any =
     SketchImpl.wordRepStats(input.asInstanceOf[UTF8String])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -195,27 +235,9 @@ case class WordRepStats(child: Expression) extends UnaryExpression {
 /** `bpe_token_count(text)` → token count under a BPE merge table: GPT-2
   * pre-tokenization (contraction suffixes, letter/number/punctuation runs —
   * SketchImpl.bpeTokenCount) then greedy lowest-rank merges per segment.
-  * The merge table is a REAL parameter: any rank-ordered "left right" list
-  * (e.g. a tokenizer's merges.txt via TextFunctions.loadBpeMerges), shipped
-  * as a plan constant (addReferenceObj) — the task-binary broadcast path a
-  * production job uses for its tokenizer assets. Size-bounded: vocab-scale
-  * tables (GPT-2 ships 50k merges) are plan-constant territory; anything
-  * larger belongs in a join, not an expression.
   */
-case class BpeTokenCount(child: Expression, merges: Seq[String]) extends UnaryExpression {
-  require(merges.length <= 200000,
-    s"merge table must stay vocab-scale (<= 200k pairs, got ${merges.length}) — " +
-      "a plan constant is broadcast to every task")
+case class BpeTokenCount(child: Expression, merges: Seq[String]) extends BpeKernel("bpe_token_count") {
   override def dataType: DataType = IntegerType
-  override def nullIntolerant: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (NativeExpressions.isStr(child.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"bpe_token_count requires STRING, got ${child.dataType.sql}")
-  @transient private lazy val ranks: java.util.HashMap[String, Integer] = {
-    val m = new java.util.HashMap[String, Integer]()
-    merges.zipWithIndex.foreach { case (p, i) => m.put(p, Integer.valueOf(i)) }
-    m
-  }
   override protected def nullSafeEval(input: Any): Any =
     SketchImpl.bpeTokenCount(input.asInstanceOf[UTF8String], ranks)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
@@ -227,23 +249,11 @@ case class BpeTokenCount(child: Expression, merges: Seq[String]) extends UnaryEx
 
 /** `bpe_segments(text)` → the tokenized form itself: the merged BPE symbol
   * sequence, space-joined (symbols never contain whitespace, so the join is
-  * unambiguous and engine-portable). Same pre-tokenizer + merge loop and
-  * the same bounded merge-table parameter as [[BpeTokenCount]].
+  * unambiguous and engine-portable). Same pre-tokenizer + merge loop as
+  * [[BpeTokenCount]].
   */
-case class BpeSegments(child: Expression, merges: Seq[String]) extends UnaryExpression {
-  require(merges.length <= 200000,
-    s"merge table must stay vocab-scale (<= 200k pairs, got ${merges.length}) — " +
-      "a plan constant is broadcast to every task")
+case class BpeSegments(child: Expression, merges: Seq[String]) extends BpeKernel("bpe_segments") {
   override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (NativeExpressions.isStr(child.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"bpe_segments requires STRING, got ${child.dataType.sql}")
-  @transient private lazy val ranks: java.util.HashMap[String, Integer] = {
-    val m = new java.util.HashMap[String, Integer]()
-    merges.zipWithIndex.foreach { case (p, i) => m.put(p, Integer.valueOf(i)) }
-    m
-  }
   override protected def nullSafeEval(input: Any): Any =
     SketchImpl.bpeSegments(input.asInstanceOf[UTF8String], ranks)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
@@ -259,12 +269,8 @@ case class BpeSegments(child: Expression, merges: Seq[String]) extends UnaryExpr
   * learned over these words apply through those kernels with zero
   * segmentation drift between training and tokenization.
   */
-case class BpeWords(child: Expression) extends UnaryExpression {
+case class BpeWords(child: Expression) extends StringKernel("bpe_words") {
   override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (NativeExpressions.isStr(child.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"bpe_words requires STRING, got ${child.dataType.sql}")
   override protected def nullSafeEval(input: Any): Any =
     SketchImpl.preTokens(input.asInstanceOf[UTF8String])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -275,12 +281,8 @@ case class BpeWords(child: Expression) extends UnaryExpression {
 /** `char_entropy(text)` → Shannon entropy (nats) of the code-point
   * distribution, one compiled pass per row — the binary-junk detector.
   */
-case class CharEntropy(child: Expression) extends UnaryExpression {
+case class CharEntropy(child: Expression) extends StringKernel("char_entropy") {
   override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (NativeExpressions.isStr(child.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"char_entropy requires STRING, got ${child.dataType.sql}")
   override protected def nullSafeEval(input: Any): Any =
     SketchImpl.charEntropy(input.asInstanceOf[UTF8String])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -292,12 +294,8 @@ case class CharEntropy(child: Expression) extends UnaryExpression {
   * collapse + trim, one compiled pass per row (with an isNormalized fast
   * path for the already-composed ASCII majority).
   */
-case class NormalizeText(child: Expression) extends UnaryExpression {
+case class NormalizeText(child: Expression) extends StringKernel("normalize_text") {
   override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (NativeExpressions.isStr(child.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"normalize_text requires STRING, got ${child.dataType.sql}")
   override protected def nullSafeEval(input: Any): Any =
     SketchImpl.normalizeText(input.asInstanceOf[UTF8String])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -315,12 +313,8 @@ case class NormalizeText(child: Expression) extends UnaryExpression {
   * static invoke; byte-identical to the builtin formulation (SketchImpl
   * applies the same java.util.regex patterns in the same order).
   */
-case class CanonicalizeUrl(child: Expression) extends UnaryExpression {
+case class CanonicalizeUrl(child: Expression) extends StringKernel("canonicalize_url") {
   override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (NativeExpressions.isStr(child.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"canonicalize_url requires STRING, got ${child.dataType.sql}")
   override protected def nullSafeEval(input: Any): Any =
     SketchImpl.canonicalizeUrl(input.asInstanceOf[UTF8String])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -331,19 +325,13 @@ case class CanonicalizeUrl(child: Expression) extends UnaryExpression {
 /** `cosine_sim(a, b)` over float/double arrays, double accumulation in
   * element order (bit-matches the DuckDB oracle fold).
   */
-case class CosineSim(left: Expression, right: Expression) extends BinaryExpression {
+case class CosineSim(left: Expression, right: Expression) extends BinaryExpression with Kernel {
+  protected def fn: String = "cosine_sim"
+  protected def argTypes: String = "ARRAY<FLOAT|DOUBLE>"
+  protected def argChecks: Seq[DataType => Boolean] = Seq(NativeExpressions.isVector, NativeExpressions.isVector)
   override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  private def okElem(dt: DataType): Boolean = dt match {
-    case ArrayType(FloatType | DoubleType, _) => true
-    case _                                    => false
-  }
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (okElem(left.dataType) && okElem(right.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"cosine_sim requires ARRAY<FLOAT|DOUBLE>, got ${left.dataType.sql}, ${right.dataType.sql}")
-  private lazy val aFloat = NativeExpressions.arrayElem(left.dataType) == FloatType
-  private lazy val bFloat = NativeExpressions.arrayElem(right.dataType) == FloatType
+  private lazy val aFloat = NativeExpressions.floatElems(left.dataType)
+  private lazy val bFloat = NativeExpressions.floatElems(right.dataType)
   override protected def nullSafeEval(a: Any, b: Any): Any =
     SketchImpl.cosine(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], aFloat, bFloat)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -357,19 +345,10 @@ case class CosineSim(left: Expression, right: Expression) extends BinaryExpressi
   * m=8, ksub=16 — the memory form a billion-vector index actually holds.
   */
 case class PqEncode(child: Expression, codebooks: Seq[Double], m: Int, ksub: Int, dsub: Int)
-    extends UnaryExpression {
+    extends VectorKernel("pq_encode") {
   require(codebooks.length == m * ksub * dsub, "codebooks must be m*ksub*dsub doubles")
   override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  private def okElem(dt: DataType): Boolean = dt match {
-    case ArrayType(FloatType | DoubleType, _) => true
-    case _                                    => false
-  }
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (okElem(child.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"pq_encode requires ARRAY<FLOAT|DOUBLE>, got ${child.dataType.sql}")
   @transient private lazy val flat: Array[Double] = codebooks.toArray
-  private lazy val isFloat = NativeExpressions.arrayElem(child.dataType) == FloatType
   override protected def nullSafeEval(input: Any): Any =
     SketchImpl.pqEncode(input.asInstanceOf[ArrayData], flat, m, ksub, dsub, isFloat)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
@@ -383,20 +362,14 @@ case class PqEncode(child: Expression, codebooks: Seq[Double], m: Int, ksub: Int
   * side against the PQ reconstruction of the coded vector.
   */
 case class PqCosine(left: Expression, right: Expression, codebooks: Seq[Double], m: Int, ksub: Int, dsub: Int)
-    extends BinaryExpression {
+    extends BinaryExpression with Kernel {
   require(codebooks.length == m * ksub * dsub, "codebooks must be m*ksub*dsub doubles")
+  protected def fn: String = "pq_cosine"
+  protected def argTypes: String = "(ARRAY<FLOAT|DOUBLE>, BIGINT)"
+  protected def argChecks: Seq[DataType => Boolean] = Seq(NativeExpressions.isVector, _ == LongType)
   override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  private def okElem(dt: DataType): Boolean = dt match {
-    case ArrayType(FloatType | DoubleType, _) => true
-    case _                                    => false
-  }
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (okElem(left.dataType) && right.dataType == LongType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"pq_cosine requires (ARRAY<FLOAT|DOUBLE>, BIGINT), got ${left.dataType.sql}, ${right.dataType.sql}")
   @transient private lazy val flat: Array[Double] = codebooks.toArray
-  private lazy val isFloat = NativeExpressions.arrayElem(left.dataType) == FloatType
+  private lazy val isFloat = NativeExpressions.floatElems(left.dataType)
   override protected def nullSafeEval(q: Any, code: Any): Any =
     SketchImpl.pqCosine(q.asInstanceOf[ArrayData], code.asInstanceOf[Long], flat, m, ksub, dsub, isFloat)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
@@ -412,20 +385,11 @@ case class PqCosine(left: Expression, right: Expression, codebooks: Seq[Double],
   * a fixed, seeded hyperplane matrix. 2^nPlanes buckets bound every
   * downstream candidate join.
   */
-case class LshBucket(child: Expression, planes: Seq[Seq[Double]]) extends UnaryExpression {
+case class LshBucket(child: Expression, planes: Seq[Seq[Double]]) extends VectorKernel("lsh_bucket") {
   override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
   private val nPlanes = planes.length
   private val dim = planes.head.length
   @transient private lazy val flat: Array[Double] = planes.flatten.toArray
-  private def okElem(dt: DataType): Boolean = dt match {
-    case ArrayType(FloatType | DoubleType, _) => true
-    case _                                    => false
-  }
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (okElem(child.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"lsh_bucket requires ARRAY<FLOAT|DOUBLE>, got ${child.dataType.sql}")
-  private lazy val isFloat = NativeExpressions.arrayElem(child.dataType) == FloatType
   override protected def nullSafeEval(input: Any): Any =
     SketchImpl.lshBucket(input.asInstanceOf[ArrayData], flat, nPlanes, dim, isFloat)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
@@ -449,7 +413,7 @@ case class LshBucket(child: Expression, planes: Seq[Seq[Double]]) extends UnaryE
   * for ReuseExchange (the semdedup self-join pin depends on it).
   */
 case class IvfAssign(child: Expression, coarse: Seq[Seq[Double]], fine: Seq[Seq[Seq[Double]]])
-    extends UnaryExpression {
+    extends VectorKernel("ivf_assign") {
   require(coarse.nonEmpty, "ivf_assign needs at least one coarse centroid")
   require(coarse.length == fine.length, "one sub-centroid group per coarse cell")
   require(fine.forall(_.nonEmpty), "every coarse cell needs >= 1 sub-centroid")
@@ -458,15 +422,6 @@ case class IvfAssign(child: Expression, coarse: Seq[Seq[Double]], fine: Seq[Seq[
   require((coarse ++ fine.flatten).forall(_.length == coarse.head.length),
     "ivf_assign: every centroid (coarse and fine) must share one dimension")
   override def dataType: DataType = IntegerType
-  override def nullIntolerant: Boolean = true
-  private def okElem(dt: DataType): Boolean = dt match {
-    case ArrayType(FloatType | DoubleType, _) => true
-    case _                                    => false
-  }
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (okElem(child.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"ivf_assign requires ARRAY<FLOAT|DOUBLE>, got ${child.dataType.sql}")
-  private lazy val isFloat = NativeExpressions.arrayElem(child.dataType) == FloatType
   // The centroid forest is plan DATA, not plan STRUCTURE: the default
   // product-based rendering would inline k·dim doubles into every plan
   // string, blowing past Spark's plan-string truncation limit (which then
@@ -489,10 +444,10 @@ case class IvfAssign(child: Expression, coarse: Seq[Seq[Double]], fine: Seq[Seq[
     val cf = ctx.addReferenceObj("ivfCoarse", coarseFlat, "double[]")
     val cn = ctx.addReferenceObj("ivfCoarseNorm", coarseNorm, "double[]")
     val ff = ctx.addReferenceObj("ivfFine", fineFlat, "double[]")
-    val fn = ctx.addReferenceObj("ivfFineNorm", fineNorm, "double[]")
+    val fnorm = ctx.addReferenceObj("ivfFineNorm", fineNorm, "double[]")
     val fs = ctx.addReferenceObj("ivfFineStart", fineStart, "int[]")
     defineCodeGen(ctx, ev, c =>
-      s"graft.functions.SketchImpl.ivfAssign($c, $dim, $cf, $cn, $ff, $fn, $fs, $isFloat)")
+      s"graft.functions.SketchImpl.ivfAssign($c, $dim, $cf, $cn, $ff, $fnorm, $fs, $isFloat)")
   }
   override protected def withNewChildInternal(newChild: Expression): IvfAssign = copy(child = newChild)
 }
@@ -503,19 +458,10 @@ case class IvfAssign(child: Expression, coarse: Seq[Seq[Double]], fine: Seq[Seq[
   * (k·dim doubles are plan DATA, not structure — see [[IvfAssign]]).
   */
 case class PcaProject(child: Expression, mean: Seq[Double], basis: Seq[Seq[Double]])
-    extends UnaryExpression {
+    extends VectorKernel("pca_project") {
   require(basis.nonEmpty && basis.forall(_.length == mean.length),
     "basis rows must match the mean's dimensionality")
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  private def okElem(dt: DataType): Boolean = dt match {
-    case ArrayType(FloatType | DoubleType, _) => true
-    case _                                    => false
-  }
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (okElem(child.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"pca_project requires ARRAY<FLOAT|DOUBLE>, got ${child.dataType.sql}")
-  private lazy val isFloat = NativeExpressions.arrayElem(child.dataType) == FloatType
   override def stringArgs: Iterator[Any] =
     Iterator(child, s"k=${basis.length}", s"dim=${mean.length}")
   @transient private lazy val dim = mean.length
@@ -537,12 +483,8 @@ case class PcaProject(child: Expression, mean: Seq[Double], basis: Seq[Seq[Doubl
   * (SketchImpl.deflateRatio) — the compression-ratio junk signal. One
   * kernel call per row inside whole-stage codegen.
   */
-case class DeflateRatio(child: Expression) extends UnaryExpression {
+case class DeflateRatio(child: Expression) extends StringKernel("deflate_ratio") {
   override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (NativeExpressions.isStr(child.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"deflate_ratio requires STRING, got ${child.dataType.sql}")
   override protected def nullSafeEval(input: Any): Any =
     SketchImpl.deflateRatio(input.asInstanceOf[UTF8String])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -558,14 +500,10 @@ case class DeflateRatio(child: Expression) extends UnaryExpression {
   * vocabulary); rendering is compacted like the PQ/PCA constants.
   */
 case class LinearTextScore(child: Expression, weights: Seq[Double], bias: Double)
-    extends UnaryExpression {
+    extends StringKernel("linear_text_score") {
   require(weights.nonEmpty && (weights.length & (weights.length - 1)) == 0,
     "weights length must be a power of two (mask-folded hash buckets)")
   override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (NativeExpressions.isStr(child.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"linear_text_score requires STRING, got ${child.dataType.sql}")
   override def stringArgs: Iterator[Any] =
     Iterator(child, s"dim=${weights.length}")
   @transient private lazy val flat: Array[Double] = weights.toArray
@@ -591,6 +529,10 @@ case class LinearTextScore(child: Expression, weights: Seq[Double], bias: Double
   * which is the robots decision's real cost on a 100 TB frontier. Election
   * semantics are spec-pinned identical to TextQueries.robotsBestMatchRx:
   * longest raw pattern, allow wins ties, then greatest prefix.
+  *
+  * Not a [[Kernel]]: it keeps Spark's default null handling (no inferred
+  * IS NOT NULL on its arguments) and its own message, which spells the
+  * rule struct.
   */
 case class RobotsMatch(rules: Expression, path: Expression) extends BinaryExpression {
   override def left: Expression = rules

@@ -17,6 +17,13 @@ import graft.functions.SimilarityFunctions._
   * are then identical shuffle subtrees, so exchange reuse computes the
   * sketch and its explode once instead of once per side (PlanAuditSpec
   * pins the reuse).
+  *
+  * Postings come from an OUTER explode plus a not-null filter on the
+  * exploded key, which drops empty and NULL arrays as a plain explode
+  * does. A plain explode of a computed array makes Spark infer
+  * `size(arr) > 0 AND isnotnull(arr)` and push it below the projection
+  * that computes the array, which then runs the sketch kernel once more
+  * per document (DedupOpsSpec counts the calls).
   */
 object DedupOps {
 
@@ -24,22 +31,29 @@ object DedupOps {
     * mod-P hashed word-3-gram set and its 16 × 4 LSH band hashes. A band
     * fires with probability J⁴, so candidates target J ≥ ~0.5.
     *
-    * Documents with fewer than 3 tokens have no shingles and are dropped:
-    * every empty set gets the same signature, so they would share every
-    * band bucket and their Jaccard would be 0/0.
+    * Documents with fewer than 3 tokens have no shingles and get NULL
+    * bands, so they post no band and never pair: every empty set gets the
+    * same signature, so they would share every band bucket and their
+    * Jaccard would be 0/0. (Filtering them out instead would push
+    * `size(sh) > 0` below the projection and run the shingle kernel twice.)
     */
   def minhashSketch(docs: DataFrame): DataFrame =
     docs
       .select(col("doc_id"), hashedShingles(col("text")).as("sh"))
-      .filter(size(col("sh")) > 0)
-      .withColumn("bands", minhashBands(col("sh")))
+      .withColumn("bands", when(size(col("sh")) > 0, minhashBands(col("sh"))))
 
   /** The key of band postings. */
   val BandKey: Seq[String] = Seq("band_idx", "band_hash")
 
   /** Band postings (doc_id, band_idx, band_hash) of a (doc_id, bands) table. */
   def bandPostings(withBands: DataFrame): DataFrame =
-    withBands.select(col("doc_id"), posexplode(col("bands")).as(BandKey))
+    withBands
+      .select(col("doc_id"), posexplode_outer(col("bands")).as(BandKey))
+      .filter(col("band_idx").isNotNull)
+
+  /** Key postings (keep…, sh_key) of a (…, sh) set table, one per element. */
+  def setPostings(sets: DataFrame, keep: String*): DataFrame =
+    sets.select(keep.map(col) :+ explode_outer(col("sh")).as("sh_key"): _*).filter(col("sh_key").isNotNull)
 
   /** Postings plus `df`, the number of postings that share the key. The
     * window form, not an aggregate joined back: the window's hash

@@ -104,18 +104,6 @@ object EtlOps {
     df.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
   }
 
-  /** Floor-to-hour + group mean, rounded — the wind hourly rollup.
-    *
-    * Reference: uscrn_wind_dag.py:197-211 (floor("H"), groupby.mean().round(3)).
-    * Partial aggregation (map-side combine) means the shuffle carries one row
-    * per (key, hour) per partition, not per input row.
-    */
-  def hourlyRollup(df: DataFrame, tsCol: String, keyCols: Seq[String], valueCol: String, outName: String): DataFrame = {
-    val hour = date_trunc("hour", col(tsCol)).as(tsCol)
-    df.groupBy((keyCols.map(col) :+ hour): _*)
-      .agg(round(avg(col(valueCol)), 3).as(outName))
-  }
-
   /** Sentinel-guarded unit conversion (Celsius→Fahrenheit when > -90).
     *
     * Reference: uscrn_dag.py:208-209 (`np.where(celsius > -90, celsius*9/5+32,

@@ -120,7 +120,9 @@ object SourceRegistry {
   /** The warehouse-target section of the same config text, when declared.
     * Throws if the section exists without its one mandatory field (`url`) —
     * a half-declared warehouse should fail at parse time like a
-    * half-declared source does.
+    * half-declared source does. Throws on `audit_column` too: both sinks
+    * always stamp `date_added_utc`, so a config naming another column would
+    * otherwise be silently ignored.
     */
   def warehouse(text: String): Option[WarehouseConfig] = {
     val fields = loadFlat(text).collect {
@@ -131,11 +133,13 @@ object SourceRegistry {
     else {
       val url = fields.getOrElse("url",
         throw new IllegalArgumentException("warehouse section declared without warehouse.url"))
-      val reserved = Set("url", "table", "audit_column", "credentials")
+      if (fields.contains("audit_column"))
+        throw new IllegalArgumentException(
+          "warehouse.audit_column is not a setting: the load timestamp is always date_added_utc")
+      val reserved = Set("url", "table", "credentials")
       Some(WarehouseConfig(
         url = url,
         table = fields.get("table"),
-        auditColumn = fields.getOrElse("audit_column", "date_added_utc"),
         credentials = fields.get("credentials"),
         extra = fields.filterNot { case (k, _) => reserved(k) }
       ))
@@ -160,8 +164,8 @@ object SourceRegistry {
   * points at a properties file of JDBC connection properties
   * (user/password — the service-account-keyfile analogue, kept OUT of the
   * config text itself exactly as the reference keeps its keyfile out of
-  * the yaml), and `auditColumn` names the load-timestamp column
-  * `mergeToMain` stamps on every appended row.
+  * the yaml). The load-timestamp column `mergeToMain` stamps on every
+  * appended row is always `date_added_utc`.
   *
   * Declared in the same `section.field = value` properties text as the
   * sources (one file, both of the reference's config shapes):
@@ -169,14 +173,12 @@ object SourceRegistry {
   * {{{
   * warehouse.url          = jdbc:derby:memory:wh;create=true
   * warehouse.table        = uscrn_main
-  * warehouse.audit_column = date_added_utc
   * warehouse.credentials  = /etc/graft/warehouse-creds.properties
   * }}}
   */
 final case class WarehouseConfig(
     url: String,
     table: Option[String],
-    auditColumn: String,
     credentials: Option[String],
     extra: Map[String, String]
 ) {

@@ -51,24 +51,6 @@ object WarehouseSink {
       } finally DriverManager.setLoginTimeout(prevTimeout)
     }
 
-  /** DAG-level retry policy (the reference's Airflow default_args retries):
-    * run `f`, retrying up to `retries` times with a fixed delay between
-    * attempts (Airflow's retry_delay is likewise constant).
-    */
-  def withRetries[T](retries: Int, backoffMs: Long = 1000L)(f: () => T): T = {
-    var left = retries
-    while (true) {
-      try return f()
-      catch {
-        case e: Exception if left > 0 =>
-          System.err.println(s"[warehouse] attempt failed (${e.getMessage}); $left retries left")
-          Thread.sleep(backoffMs)
-          left -= 1
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
-
   /** Load a batch into the staging table (full overwrite — staging is
     * transient by contract, exactly like the reference's `_staging` load).
     */

@@ -80,4 +80,26 @@ class DedupOpsSpec extends AnyFunSuite with SparkSpec {
     val offenders = Seq("count(lit(1)).over(", "jaccard(").filter(text.contains)
     assert(offenders.isEmpty, s"use graft.operators.DedupOps instead of: ${offenders.mkString(", ")}")
   }
+
+  test("the near-dup index builds run each sketch kernel once per document") {
+    // Counted on every root-to-leaf path of the optimized plan, so a kernel
+    // call that a pushed-down filter repeats under its projection shows up
+    // as a second call on the same path.
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    def paths(p: LogicalPlan): Seq[Seq[LogicalPlan]] =
+      if (p.children.isEmpty) Seq(Seq(p)) else p.children.flatMap(c => paths(c).map(p +: _))
+    for (q <- Seq("q_ngram_jaccard", "q_dedup_minhash")) {
+      val plan = QueryRegistry.queries(q)(spark, sfDir).queryExecution.optimizedPlan
+      val perPath = paths(plan).map { path =>
+        path
+          .flatMap(_.expressions.flatMap(_.collect {
+            case e if e.getClass.getPackage.getName == "graft.functions" => e.prettyName
+          }))
+          .groupBy(identity).map { case (k, calls) => k -> calls.size }
+      }
+      assert(perPath.exists(_.nonEmpty), s"$q: no sketch kernel in the plan")
+      val repeated = perPath.flatMap(_.filter(_._2 > 1)).distinct
+      assert(repeated.isEmpty, s"$q: kernel calls repeated on one path: $repeated\n$plan")
+    }
+  }
 }

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan audit (SURVEY.md §5): these assertions pin the *plan shape*
@@ -181,39 +183,139 @@ class PlanAuditSpec extends AnyFunSuite with SparkSpec {
       s"repetition stats must not shuffle or explode:\n$p")
   }
 
-  test("sketch expressions stay inside whole-stage codegen (no Janino fallback)") {
+  /** A fixed sample over every argument type the native kernels take,
+    * read back from Parquet so projections over it run in whole-stage
+    * codegen (a local relation would be folded at optimization time).
+    * Row 4 is NULL in every column but `id`.
+    */
+  private lazy val kernelSample: DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(
+      StructField("id", LongType, nullable = false),
+      StructField("text", StringType),
+      StructField("url", StringType),
+      StructField("vec", ArrayType(FloatType)),
+      StructField("dvec", ArrayType(DoubleType)),
+      StructField("hs", ArrayType(LongType)),
+      StructField("code", LongType),
+      StructField("rules", ArrayType(StructType(Seq(
+        StructField("prefix", StringType), StructField("allow", BooleanType), StructField("rx", StringType))))),
+      StructField("path", StringType),
+      StructField("bad", IntegerType)))
+    def vec(seed: Int): Seq[Float] = Seq.tabulate(8)(j => ((seed * 7 + j * 3) % 11 - 5) / 4.0f)
+    val rules = Seq(Row("/private", false, "^/private"), Row("/private/ok", true, "^/private/ok"))
+    val rows = Seq(
+      Row(1L, "The quick brown fox jumps over the lazy dog and the cat sat on the mat",
+        "HTTP://WWW.Example.COM:80/a/./b/../c?utm_source=x&q=1#frag", vec(1), vec(2).map(_.toDouble),
+        Seq(3L, 17L, 99L, 123456789L), 0L, rules, "/private/ok/page", 1),
+      Row(2L, "data data data table scan fast slow key row data the end",
+        "https://x.org/~u/%7Ep?ref=y&a=b", vec(3), vec(4).map(_.toDouble), Seq(5L, 8L), 5L, rules, "/private/x", 2),
+      Row(3L, "Cafe\u0301  na\u00efve\ttext  \u00fcber", "relative/path", vec(5), vec(6).map(_.toDouble),
+        Seq.empty[Long], 10L, Seq.empty[Row], "/public", 3),
+      Row(4L, null, null, null, null, null, null, null, null, null))
+    val dir = java.nio.file.Files.createTempDirectory("kernel_sample").resolve("t").toString
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema).write.parquet(dir)
+    spark.read.parquet(dir)
+  }
+
+  /** One native kernel: its SQL name, a call over [[kernelSample]], the
+    * same kernel over a wrong-typed argument, and the analysis message
+    * that argument must fail with.
+    */
+  private case class KernelCase(fn: String, call: Column, wrongTyped: Column, message: String)
+
+  /** All 24 native kernels of graft.functions.NativeExpressions. */
+  private lazy val kernelCases: Seq[KernelCase] = {
     import graft.functions.SimilarityFunctions._
-    import org.apache.spark.sql.functions.col
+    import graft.functions.TextFunctions._
+    import graft.functions.UrlFunctions.canonicalizeUrl
+    val (text, vec, bad) = (col("text"), col("vec"), col("bad"))
+    val books = Seq.tabulate(2 * 4 * 4)(i => (i % 7).toDouble / 7.0)
+    val coarse = Seq.tabulate(2, 8)((c, j) => if (j % 2 == c) 1.0 else 0.1)
+    val fine = coarse.map(c => Seq(c, c.map(_ * 0.5 + 0.2)))
+    val basis = Seq.tabulate(3, 8)((k, j) => if (j == k) 1.0 else 0.0)
+    def str(fn: String, f: Column => Column) = KernelCase(fn, f(text), f(bad), s"$fn requires STRING, got INT")
+    def longs(fn: String, f: Column => Column) =
+      KernelCase(fn, f(col("hs")), f(bad), s"$fn requires ARRAY<BIGINT>, got INT")
+    def vector(fn: String, f: Column => Column) =
+      KernelCase(fn, f(vec), f(bad), s"$fn requires ARRAY<FLOAT|DOUBLE>, got INT")
+    Seq(
+      str("simhash64", simhash64),
+      str("shingles", shingles(_)),
+      str("hashed_shingles", hashedShingles(_)),
+      str("hashed_shingles64", hashedShingles64(_)),
+      str("char_window_hashes64", charWindowHashes64(_, 4)),
+      longs("minhash_signature", minhashSignature(_)),
+      longs("minhash_bands", minhashBands(_)),
+      str("marker_counts", markerCounts(_, langMarkers.map(_._2))),
+      str("word_rep_stats", wordRepStats),
+      str("bpe_token_count", bpeTokenCount(_)),
+      str("bpe_segments", bpeSegments(_)),
+      str("bpe_words", bpeWords),
+      str("char_entropy", charEntropy),
+      str("normalize_text", normalizeText),
+      KernelCase("canonicalize_url", canonicalizeUrl(col("url")), canonicalizeUrl(bad),
+        "canonicalize_url requires STRING, got INT"),
+      KernelCase("cosine_sim", cosine(vec, col("dvec")), cosine(bad, vec),
+        "cosine_sim requires ARRAY<FLOAT|DOUBLE>, got INT, ARRAY<FLOAT>"),
+      vector("pq_encode", pqEncode(_, books, 2, 4, 4)),
+      KernelCase("pq_cosine", pqCosine(vec, col("code"), books, 2, 4, 4), pqCosine(vec, bad, books, 2, 4, 4),
+        "pq_cosine requires (ARRAY<FLOAT|DOUBLE>, BIGINT), got ARRAY<FLOAT>, INT"),
+      vector("lsh_bucket", lshBucket(_, hyperplanes(6, 8))),
+      vector("ivf_assign", ivfAssign(_, coarse, fine)),
+      vector("pca_project", pcaProject(_, Seq.fill(8)(0.1), basis)),
+      str("deflate_ratio", deflateRatio),
+      str("linear_text_score", linearTextScore(_, Seq.tabulate(16)(i => (i - 8) / 10.0), -0.5)),
+      KernelCase("robots_match", robotsMatch(col("rules"), col("path")), robotsMatch(col("rules"), bad),
+        "robots_match requires (ARRAY<STRUCT<STRING, BOOLEAN, STRING>>, STRING), " +
+          "got (ARRAY<STRUCT<prefix: STRING, allow: BOOLEAN, rx: STRING>>, INT)")
+    )
+  }
+
+  test("sketch expressions stay inside whole-stage codegen (no Janino fallback)") {
     // A shuffle-free projection is not AQE-wrapped, so the "*(n)" codegen
     // markers are visible in the plan string; disabling codegen fallback
     // makes a Janino compile error of the generated kernel calls fatal
-    // instead of silently interpreting.
-    val prev = spark.conf.get("spark.sql.codegen.fallback")
-    spark.conf.set("spark.sql.codegen.fallback", "false")
-    try {
-      val df = Tables
-        .documents(spark, sfDir)
-        .select(
-          simhash64(col("text")).as("sig"),
-          minhashBands(hashedShingles(col("text"))).as("bands"),
-          shingles(col("text")).as("sh"),
-          hashedShingles64(col("text")).as("sh64"),
-          graft.functions.TextFunctions.wordRepStats(col("text")).as("rep")
-        )
-      assert(df.queryExecution.executedPlan.toString.contains("*("), "projection not codegen'd")
-      assert(df.count() > 0)
-
-      // PQ kernels likewise: encode + ADC must codegen with fallback off.
-      val books = Seq.tabulate(8 * 16 * 8)(i => (i % 7).toDouble / 7.0)
-      val pq = Tables
-        .embeddings(spark, sfDir)
-        .select(col("embedding"), pqEncode(col("embedding"), books, 8, 16, 8).as("code"))
-        .select(pqCosine(col("embedding"), col("code"), books, 8, 16, 8).as("adc"))
-      assert(pq.queryExecution.executedPlan.toString.contains("*("), "pq projection not codegen'd")
-      assert(pq.count() > 0)
-    } finally spark.conf.set("spark.sql.codegen.fallback", prev)
+    // instead of silently interpreting. Each kernel must then return the
+    // same values as interpreted evaluation, and NULL for the NULL row.
+    assert(kernelCases.map(_.fn).distinct.size == 24)
+    for (k <- kernelCases) {
+      val compiled = Engine.withConf(spark, "spark.sql.codegen.fallback" -> "false") {
+        val df = kernelSample.select(col("id"), k.call.as("out"))
+        assert(df.queryExecution.executedPlan.toString.contains("*("), s"${k.fn}: projection not codegen'd")
+        df.collect().sortBy(_.getLong(0)).map(_.toString).toSeq
+      }
+      val interpreted = Engine.withConf(spark,
+        "spark.sql.codegen.wholeStage" -> "false", "spark.sql.codegen.factoryMode" -> "NO_CODEGEN") {
+        kernelSample.select(col("id"), k.call.as("out")).collect().sortBy(_.getLong(0)).map(_.toString).toSeq
+      }
+      assert(compiled == interpreted, s"${k.fn}: codegen and interpreted evaluation differ")
+      assert(compiled.size == 4 && compiled.last == "[4,null]", s"${k.fn}: NULL in must give NULL out: $compiled")
+    }
   }
 
+  test("every native kernel rejects a wrong-typed argument at analysis with its message") {
+    for (k <- kernelCases) {
+      val e = intercept[org.apache.spark.sql.AnalysisException](kernelSample.select(k.wrongTyped).schema)
+      assert(e.getMessage.contains(k.message), s"${k.fn}: expected '${k.message}' in: ${e.getMessage}")
+    }
+  }
+
+  test("NativeExpressions states the null policy and each argument check once") {
+    val src = java.nio.file.Files.readString(
+      java.nio.file.Paths.get("src/main/scala/graft/functions/NativeExpressions.scala"))
+    def count(needle: String): Int = src.sliding(needle.length).count(_ == needle)
+    assert(count("override def nullIntolerant") == 1)
+    // The shared kernel check, plus robots_match's struct-argument check.
+    assert(count("override def checkInputDataTypes") == 2)
+    assert(count("TypeCheckResult.TypeCheckFailure(") == 2)
+    assert(count("case ArrayType(FloatType | DoubleType") == 1)
+    assert(count("case ArrayType(LongType") == 1)
+    assert(count("isInstanceOf[StringType]") == 3) // isStr, and robots_match's two struct fields
+    assert(count("lazy val ranks") == 1)
+    assert(count("require(merges.length") == 1)
+  }
 
   test("q_cap_per_source: two-stage cap — map-side pre-cap before the one hot-key shuffle") {
     // A mega-domain must shuffle ≤ N rows per input partition, not its

@@ -71,12 +71,10 @@ class SourceConfigSpec extends AnyFunSuite {
       text +
         """warehouse.url          = jdbc:derby:memory:graft_wh;create=true
           |warehouse.table        = uscrn_main
-          |warehouse.audit_column = date_added_utc
           |warehouse.batchsize    = 500
           |""".stripMargin).get
     assert(wh.url == "jdbc:derby:memory:graft_wh;create=true")
     assert(wh.table.contains("uscrn_main"))
-    assert(wh.auditColumn == "date_added_utc")
     assert(wh.credentials.isEmpty)
     // Non-reserved fields become JDBC connection properties.
     assert(wh.jdbcProps.getProperty("batchsize") == "500")
@@ -84,6 +82,16 @@ class SourceConfigSpec extends AnyFunSuite {
     // a config without the section simply has no warehouse.
     assert(!SourceRegistry.parse(text + "warehouse.url = jdbc:x\n").contains("warehouse"))
     assert(SourceRegistry.warehouse(text).isEmpty)
+  }
+
+  test("warehouse.audit_column fails at parse time, naming the key") {
+    // Both sinks always stamp date_added_utc; a config asking for another
+    // column must not be silently ignored, nor become a JDBC property.
+    val e = intercept[IllegalArgumentException](SourceRegistry.warehouse(
+      """warehouse.url          = jdbc:derby:memory:graft_wh;create=true
+        |warehouse.audit_column = loaded_at
+        |""".stripMargin))
+    assert(e.getMessage.contains("warehouse.audit_column"))
   }
 
   test("a half-declared warehouse (no url) fails at parse time") {
