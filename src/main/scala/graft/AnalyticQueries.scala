@@ -42,91 +42,39 @@ object AnalyticQueries {
     * the batch report, so they are checked against the same SQL. Defined
     * above [[all]] so they are initialized before it.
     */
-  private[graft] val driftPsiOracle: String =
-    """WITH ev AS (
-             |  SELECT event_type, value, epoch_us(ts) AS us FROM events),
-             |med AS (SELECT quantile_cont(us, 0.5) AS med FROM ev),
-             |half AS (
-             |  SELECT event_type, value, us <= (SELECT med FROM med) AS is_ref FROM ev),
-             |cuts AS (
-             |  SELECT event_type,
-             |    list_transform(
-             |      quantile_cont(value, [0.1,0.2,0.3,0.4,0.5,0.6,0.7,0.8,0.9]),
-             |      x -> round(x, 6)) AS cuts
-             |  FROM half WHERE is_ref GROUP BY 1),
-             |counts AS (
-             |  SELECT h.event_type,
-             |    CAST(len(list_filter(c.cuts, x -> x <= h.value)) AS INT) AS bin,
-             |    CAST(SUM(CASE WHEN h.is_ref THEN 1 ELSE 0 END) AS BIGINT) AS c_ref,
-             |    CAST(SUM(CASE WHEN h.is_ref THEN 0 ELSE 1 END) AS BIGINT) AS c_cur
-             |  FROM half h JOIN cuts c USING (event_type)
-             |  GROUP BY 1, 2),
-             |domain AS (
-             |  SELECT c.event_type, CAST(r.range AS INT) AS bin FROM cuts c, range(10) r),
-             |filled AS (
-             |  SELECT d.event_type, d.bin,
-             |    COALESCE(c.c_ref, 0) AS c_ref, COALESCE(c.c_cur, 0) AS c_cur
-             |  FROM domain d LEFT JOIN counts c USING (event_type, bin)),
-             |totals AS (
-             |  SELECT event_type, CAST(SUM(c_ref) AS BIGINT) AS n_ref,
-             |    CAST(SUM(c_cur) AS BIGINT) AS n_cur
-             |  FROM filled GROUP BY 1),
-             |terms AS (
-             |  SELECT f.event_type, t.n_ref, t.n_cur,
-             |    CAST(round(
-             |      ((CAST(f.c_ref AS DOUBLE) + 0.5) / (CAST(t.n_ref AS DOUBLE) + 5.0)
-             |       - (CAST(f.c_cur AS DOUBLE) + 0.5) / (CAST(t.n_cur AS DOUBLE) + 5.0))
-             |      * ln(((CAST(f.c_ref AS DOUBLE) + 0.5) / (CAST(t.n_ref AS DOUBLE) + 5.0))
-             |           / ((CAST(f.c_cur AS DOUBLE) + 0.5) / (CAST(t.n_cur AS DOUBLE) + 5.0)))
-             |      * 1.0e12) AS BIGINT) AS term_fp
-             |  FROM filled f JOIN totals t USING (event_type))
-             |SELECT event_type, n_ref, n_cur,
-             |  round(CAST(CAST(SUM(term_fp) AS BIGINT) AS DOUBLE) / 1.0e12, 6) AS psi,
-             |  CAST(SUM(term_fp) AS BIGINT) > 200000000000 AS drift_alert
-             |FROM terms GROUP BY 1, 2, 3 ORDER BY event_type""".stripMargin
+  private[graft] val driftPsiOracle: String = DriftReports.Sql.psi()
 
   private[graft] val driftChi2Oracle: String =
-    """WITH ev AS (
-             |  SELECT event_type, epoch_us(ts) AS us FROM events),
-             |med AS (SELECT quantile_cont(us, 0.5) AS med FROM ev),
-             |counts AS (
-             |  SELECT event_type,
-             |    CAST(SUM(CASE WHEN us <= (SELECT med FROM med) THEN 1 ELSE 0 END) AS BIGINT) AS c_ref,
-             |    CAST(SUM(CASE WHEN us > (SELECT med FROM med) THEN 1 ELSE 0 END) AS BIGINT) AS c_cur
-             |  FROM ev GROUP BY 1),
-             |totals AS (
-             |  SELECT CAST(SUM(c_ref) AS BIGINT) AS t_ref,
-             |    CAST(SUM(c_cur) AS BIGINT) AS t_cur,
-             |    CAST(COUNT(*) AS BIGINT) AS k
-             |  FROM counts),
-             |terms AS (
-             |  SELECT t_ref, t_cur, k,
-             |    CAST(round((
-             |      (CAST(c_ref AS DOUBLE)
-             |        - CAST(c_ref + c_cur AS DOUBLE) * CAST(t_ref AS DOUBLE) / CAST(t_ref + t_cur AS DOUBLE))
-             |      * (CAST(c_ref AS DOUBLE)
-             |        - CAST(c_ref + c_cur AS DOUBLE) * CAST(t_ref AS DOUBLE) / CAST(t_ref + t_cur AS DOUBLE))
-             |      / (CAST(c_ref + c_cur AS DOUBLE) * CAST(t_ref AS DOUBLE) / CAST(t_ref + t_cur AS DOUBLE))
-             |      + (CAST(c_cur AS DOUBLE)
-             |        - CAST(c_ref + c_cur AS DOUBLE) * CAST(t_cur AS DOUBLE) / CAST(t_ref + t_cur AS DOUBLE))
-             |      * (CAST(c_cur AS DOUBLE)
-             |        - CAST(c_ref + c_cur AS DOUBLE) * CAST(t_cur AS DOUBLE) / CAST(t_ref + t_cur AS DOUBLE))
-             |      / (CAST(c_ref + c_cur AS DOUBLE) * CAST(t_cur AS DOUBLE) / CAST(t_ref + t_cur AS DOUBLE))
-             |    ) * 1.0e9) AS BIGINT) AS term_fp
-             |  FROM counts, totals),
-             |agg AS (
-             |  SELECT MAX(t_ref) AS n_ref, MAX(t_cur) AS n_cur, MAX(k) AS k,
-             |    CAST(SUM(term_fp) AS BIGINT) AS chi2_fp
-             |  FROM terms)
-             |SELECT n_ref, n_cur, k, k - 1 AS df,
-             |  CASE WHEN n_ref > 0 AND n_cur > 0 THEN round(CAST(chi2_fp AS DOUBLE) / 1.0e9, 6)
-             |    ELSE error('chi2: degenerate median split (an empty half)') END AS chi2,
-             |  chi2_fp > CASE k - 1
-             |    WHEN 1 THEN 3841458821 WHEN 2 THEN 5991464547 WHEN 3 THEN 7814727903
-             |    WHEN 4 THEN 9487729037 WHEN 5 THEN 11070497694 WHEN 6 THEN 12591587244
-             |    WHEN 7 THEN 14067140449 WHEN 8 THEN 15507313056 WHEN 9 THEN 16918977605
-             |    END AS drift_alert
-             |FROM agg""".stripMargin
+    DriftReports.Sql.typeCounts("c_ref", "c_cur") +
+      """,
+        |terms AS (
+        |  SELECT t_ref, t_cur, k,
+        |    CAST(round((
+        |      (CAST(c_ref AS DOUBLE)
+        |        - CAST(c_ref + c_cur AS DOUBLE) * CAST(t_ref AS DOUBLE) / CAST(t_ref + t_cur AS DOUBLE))
+        |      * (CAST(c_ref AS DOUBLE)
+        |        - CAST(c_ref + c_cur AS DOUBLE) * CAST(t_ref AS DOUBLE) / CAST(t_ref + t_cur AS DOUBLE))
+        |      / (CAST(c_ref + c_cur AS DOUBLE) * CAST(t_ref AS DOUBLE) / CAST(t_ref + t_cur AS DOUBLE))
+        |      + (CAST(c_cur AS DOUBLE)
+        |        - CAST(c_ref + c_cur AS DOUBLE) * CAST(t_cur AS DOUBLE) / CAST(t_ref + t_cur AS DOUBLE))
+        |      * (CAST(c_cur AS DOUBLE)
+        |        - CAST(c_ref + c_cur AS DOUBLE) * CAST(t_cur AS DOUBLE) / CAST(t_ref + t_cur AS DOUBLE))
+        |      / (CAST(c_ref + c_cur AS DOUBLE) * CAST(t_cur AS DOUBLE) / CAST(t_ref + t_cur AS DOUBLE))
+        |    ) * 1.0e9) AS BIGINT) AS term_fp
+        |  FROM counts, totals),
+        |agg AS (
+        |  SELECT MAX(t_ref) AS n_ref, MAX(t_cur) AS n_cur, MAX(k) AS k,
+        |    CAST(SUM(term_fp) AS BIGINT) AS chi2_fp
+        |  FROM terms)
+        |SELECT n_ref, n_cur, k, k - 1 AS df,
+        |  CASE WHEN n_ref > 0 AND n_cur > 0 THEN round(CAST(chi2_fp AS DOUBLE) / 1.0e9, 6)
+        |    ELSE error('chi2: degenerate median split (an empty half)') END AS chi2,
+        |  chi2_fp > CASE k - 1
+        |    WHEN 1 THEN 3841458821 WHEN 2 THEN 5991464547 WHEN 3 THEN 7814727903
+        |    WHEN 4 THEN 9487729037 WHEN 5 THEN 11070497694 WHEN 6 THEN 12591587244
+        |    WHEN 7 THEN 14067140449 WHEN 8 THEN 15507313056 WHEN 9 THEN 16918977605
+        |    END AS drift_alert
+        |FROM agg""".stripMargin
 
   val all: Seq[Q] = Seq(
     // Q5 shape: revenue by nation for one region + date window.
@@ -978,14 +926,9 @@ object AnalyticQueries {
     Q(
       "q_drift_categorical",
       (s, d) => {
-        val ev = events(s, d).select(col("event_type"), unix_micros(col("ts")).as("us"))
-        val med = ev.agg(expr("percentile(us, 0.5)").as("med"))
-        val counts = ev
-          .crossJoin(broadcast(med))
-          .groupBy("event_type")
-          .agg(
-            sum(when(col("us") <= col("med"), 1L).otherwise(0L)).as("n_ref"),
-            sum(when(col("us") > col("med"), 1L).otherwise(0L)).as("n_cur"))
+        val counts = DriftReports
+          .refCurCounts(DriftReports.halves(events(s, d), "event_type"), "event_type")
+          .select(col("event_type"), col("c_ref").as("n_ref"), col("c_cur").as("n_cur"))
         val totals = counts.agg(
           sum(col("n_ref")).as("t_ref"),
           sum(col("n_cur")).as("t_cur"),
@@ -1009,31 +952,20 @@ object AnalyticQueries {
             (col("n_cur") === 0L).as("is_gone"))
           .orderBy("event_type")
       },
-      Some("""WITH ev AS (
-             |  SELECT event_type, epoch_us(ts) AS us FROM events),
-             |med AS (SELECT quantile_cont(us, 0.5) AS med FROM ev),
-             |counts AS (
-             |  SELECT event_type,
-             |    CAST(SUM(CASE WHEN us <= (SELECT med FROM med) THEN 1 ELSE 0 END) AS BIGINT) AS n_ref,
-             |    CAST(SUM(CASE WHEN us > (SELECT med FROM med) THEN 1 ELSE 0 END) AS BIGINT) AS n_cur
-             |  FROM ev GROUP BY 1),
-             |totals AS (
-             |  SELECT CAST(SUM(n_ref) AS BIGINT) AS t_ref,
-             |    CAST(SUM(n_cur) AS BIGINT) AS t_cur,
-             |    CAST(COUNT(*) AS BIGINT) AS k
-             |  FROM counts)
-             |SELECT event_type, n_ref, n_cur,
-             |  round(CAST(n_ref AS DOUBLE) / t_ref, 6) AS share_ref,
-             |  round(CAST(n_cur AS DOUBLE) / t_cur, 6) AS share_cur,
-             |  round(CAST(CAST(round(
-             |    ((CAST(n_ref AS DOUBLE) + 0.5) / (CAST(t_ref AS DOUBLE) + 0.5 * k)
-             |     - (CAST(n_cur AS DOUBLE) + 0.5) / (CAST(t_cur AS DOUBLE) + 0.5 * k))
-             |    * ln(((CAST(n_ref AS DOUBLE) + 0.5) / (CAST(t_ref AS DOUBLE) + 0.5 * k))
-             |         / ((CAST(n_cur AS DOUBLE) + 0.5) / (CAST(t_cur AS DOUBLE) + 0.5 * k)))
-             |    * 1.0e12) AS BIGINT) AS DOUBLE) / 1.0e12, 6) AS psi_term,
-             |  n_ref = 0 AS is_new,
-             |  n_cur = 0 AS is_gone
-             |FROM counts, totals ORDER BY event_type""".stripMargin)
+      Some(DriftReports.Sql.typeCounts("n_ref", "n_cur") +
+        """
+          |SELECT event_type, n_ref, n_cur,
+          |  round(CAST(n_ref AS DOUBLE) / t_ref, 6) AS share_ref,
+          |  round(CAST(n_cur AS DOUBLE) / t_cur, 6) AS share_cur,
+          |  round(CAST(CAST(round(
+          |    ((CAST(n_ref AS DOUBLE) + 0.5) / (CAST(t_ref AS DOUBLE) + 0.5 * k)
+          |     - (CAST(n_cur AS DOUBLE) + 0.5) / (CAST(t_cur AS DOUBLE) + 0.5 * k))
+          |    * ln(((CAST(n_ref AS DOUBLE) + 0.5) / (CAST(t_ref AS DOUBLE) + 0.5 * k))
+          |         / ((CAST(n_cur AS DOUBLE) + 0.5) / (CAST(t_cur AS DOUBLE) + 0.5 * k)))
+          |    * 1.0e12) AS BIGINT) AS DOUBLE) / 1.0e12, 6) AS psi_term,
+          |  n_ref = 0 AS is_new,
+          |  n_cur = 0 AS is_gone
+          |FROM counts, totals ORDER BY event_type""".stripMargin)
     ),
 
     // Chi-square categorical drift (r16 — the classic two-sample
@@ -1053,49 +985,18 @@ object AnalyticQueries {
     // rollup + a 1-row report: flat at any volume.
     Q(
       "q_drift_chi2",
-      (s, d) => {
-        val ev = events(s, d).select(col("event_type"), unix_micros(col("ts")).as("us"))
-        val med = ev.agg(expr("percentile(us, 0.5)").as("med"))
-        val counts = ev
-          .crossJoin(broadcast(med))
-          .groupBy("event_type")
-          .agg(
-            sum(when(col("us") <= col("med"), 1L).otherwise(0L)).as("c_ref"),
-            sum(when(col("us") > col("med"), 1L).otherwise(0L)).as("c_cur"))
-        DriftReports.chi2(counts)
-      },
+      (s, d) =>
+        DriftReports.chi2(
+          DriftReports.refCurCounts(DriftReports.halves(events(s, d), "event_type"), "event_type")),
       Some(driftChi2Oracle)
     ),
 
     Q(
       "q_drift_psi",
       (s, d) => {
-        val ev = events(s, d)
-          .select(col("event_type"), col("value"), unix_micros(col("ts")).as("us"))
-        val med = ev.agg(expr("percentile(us, 0.5)").as("med"))
-        val half = ev
-          .crossJoin(broadcast(med))
-          .withColumn("is_ref", col("us") <= col("med"))
-          .select("event_type", "value", "is_ref")
-        // Cuts rounded to 6 dp on BOTH engines before binning (r14 advice):
-        // Spark's percentile and DuckDB's quantile_cont interpolate in
-        // potentially different fp evaluation order, and the bin rule
-        // x <= cut is ulp-sensitive — rounding makes the boundaries
-        // bit-identical so a value landing exactly on a cut bins the same.
-        val cuts = half
-          .filter(col("is_ref"))
-          .groupBy("event_type")
-          .agg(transform(
-            expr("percentile(value, array(0.1D,0.2D,0.3D,0.4D,0.5D,0.6D,0.7D,0.8D,0.9D))"),
-            c => round(c, 6)).as("cuts"))
-        val counts = half
-          .join(broadcast(cuts), Seq("event_type"))
-          .withColumn("bin", size(filter(col("cuts"), c => c <= col("value"))))
-          .groupBy(col("event_type"), col("bin"))
-          .agg(
-            sum(when(col("is_ref"), 1L).otherwise(0L)).as("c_ref"),
-            sum(when(!col("is_ref"), 1L).otherwise(0L)).as("c_cur"))
-        DriftReports.psi(cuts, Seq(counts))
+        val half = DriftReports.halves(events(s, d), "event_type", "value")
+        val cuts = DriftReports.decileCuts(half.filter(col("is_ref")))
+        DriftReports.psi(cuts, Seq(DriftReports.binCounts(half, cuts)))
           .drop("psi_fp")
           .orderBy("event_type")
       },
@@ -1125,41 +1026,31 @@ object AnalyticQueries {
     Q(
       "q_drift_psi_approx",
       (s, d) => {
-        val ev = events(s, d)
-          .select(col("event_type"), col("value"), unix_micros(col("ts")).as("us"))
-        val med = ev.agg(expr("percentile(us, 0.5)").as("med"))
-        val half = ev
-          .crossJoin(broadcast(med))
-          .withColumn("is_ref", col("us") <= col("med"))
-          .select("event_type", "value", "is_ref")
+        val half = DriftReports.halves(events(s, d), "event_type", "value")
         val decileRanks = (1 to 9).map(k => k / 10.0)
         val bandRanks = (1 to 9).flatMap(k => Seq(k / 10.0 - 0.02, k / 10.0 + 0.02))
         val exactRanks = (decileRanks ++ bandRanks).map(r => s"${r}D").mkString(",")
-        val r6 = (c: org.apache.spark.sql.Column) => transform(c, x => round(x, 6))
         val stats = half
           .filter(col("is_ref"))
           .groupBy("event_type")
           .agg(
             expr(s"percentile(value, array($exactRanks))").as("qe"),
-            expr(s"approx_percentile(value, array(${decileRanks.map(r => s"${r}D").mkString(",")}), 10000)")
-              .as("qa"))
+            expr(s"approx_percentile(value, ${DriftReports.decileRanks}, 10000)").as("qa"))
           .select(
             col("event_type"),
-            r6(slice(col("qe"), 1, 9)).as("cuts_e"),
-            r6(col("qa")).as("cuts_a"),
+            DriftReports.round6(slice(col("qe"), 1, 9)).as("cuts_e"),
+            DriftReports.round6(col("qa")).as("cuts_a"),
             // Band edges stay unrounded: they bound the ROUNDED sketch cut
             // only through the flag, never through a bin rule. qe lays out
             // as [9 deciles, then (lo, hi) per decile] — lo at 10,12,..,26.
             array((10 to 27 by 2).map(i => element_at(col("qe"), i)): _*).as("lo"),
             array((11 to 27 by 2).map(i => element_at(col("qe"), i)): _*).as("hi"))
-        val counts = half
-          .join(broadcast(stats), Seq("event_type"))
-          .withColumn("bin_e", size(filter(col("cuts_e"), c => c <= col("value"))))
-          .withColumn("bin_a", size(filter(col("cuts_a"), c => c <= col("value"))))
-          .groupBy(col("event_type"), col("bin_e"), col("bin_a"))
-          .agg(
-            sum(when(col("is_ref"), 1L).otherwise(0L)).as("c_ref"),
-            sum(when(!col("is_ref"), 1L).otherwise(0L)).as("c_cur"))
+        val counts = DriftReports.refCurCounts(
+          half
+            .join(broadcast(stats), Seq("event_type"))
+            .withColumn("bin_e", DriftReports.bin(col("cuts_e")))
+            .withColumn("bin_a", DriftReports.bin(col("cuts_a"))),
+          "event_type", "bin_e", "bin_a")
         // The q_drift_psi report over either bin axis.
         def psiOn(binCol: String): org.apache.spark.sql.DataFrame =
           DriftReports.psi(stats, Seq(counts
@@ -1186,49 +1077,10 @@ object AnalyticQueries {
             (abs(col("psi_fp_a") - col("psi_fp")) <= lit(50000000000L)).as("psi_in_band"))
           .orderBy("event_type")
       },
-      Some("""WITH ev AS (
-             |  SELECT event_type, value, epoch_us(ts) AS us FROM events),
-             |med AS (SELECT quantile_cont(us, 0.5) AS med FROM ev),
-             |half AS (
-             |  SELECT event_type, value, us <= (SELECT med FROM med) AS is_ref FROM ev),
-             |cuts AS (
-             |  SELECT event_type,
-             |    list_transform(
-             |      quantile_cont(value, [0.1,0.2,0.3,0.4,0.5,0.6,0.7,0.8,0.9]),
-             |      x -> round(x, 6)) AS cuts
-             |  FROM half WHERE is_ref GROUP BY 1),
-             |counts AS (
-             |  SELECT h.event_type,
-             |    CAST(len(list_filter(c.cuts, x -> x <= h.value)) AS INT) AS bin,
-             |    CAST(SUM(CASE WHEN h.is_ref THEN 1 ELSE 0 END) AS BIGINT) AS c_ref,
-             |    CAST(SUM(CASE WHEN h.is_ref THEN 0 ELSE 1 END) AS BIGINT) AS c_cur
-             |  FROM half h JOIN cuts c USING (event_type)
-             |  GROUP BY 1, 2),
-             |domain AS (
-             |  SELECT c.event_type, CAST(r.range AS INT) AS bin FROM cuts c, range(10) r),
-             |filled AS (
-             |  SELECT d.event_type, d.bin,
-             |    COALESCE(c.c_ref, 0) AS c_ref, COALESCE(c.c_cur, 0) AS c_cur
-             |  FROM domain d LEFT JOIN counts c USING (event_type, bin)),
-             |totals AS (
-             |  SELECT event_type, CAST(SUM(c_ref) AS BIGINT) AS n_ref,
-             |    CAST(SUM(c_cur) AS BIGINT) AS n_cur
-             |  FROM filled GROUP BY 1),
-             |terms AS (
-             |  SELECT f.event_type, t.n_ref, t.n_cur,
-             |    CAST(round(
-             |      ((CAST(f.c_ref AS DOUBLE) + 0.5) / (CAST(t.n_ref AS DOUBLE) + 5.0)
-             |       - (CAST(f.c_cur AS DOUBLE) + 0.5) / (CAST(t.n_cur AS DOUBLE) + 5.0))
-             |      * ln(((CAST(f.c_ref AS DOUBLE) + 0.5) / (CAST(t.n_ref AS DOUBLE) + 5.0))
-             |           / ((CAST(f.c_cur AS DOUBLE) + 0.5) / (CAST(t.n_cur AS DOUBLE) + 5.0)))
-             |      * 1.0e12) AS BIGINT) AS term_fp
-             |  FROM filled f JOIN totals t USING (event_type))
-             |SELECT event_type, n_ref, n_cur,
-             |  round(CAST(CAST(SUM(term_fp) AS BIGINT) AS DOUBLE) / 1.0e12, 6) AS psi,
-             |  CAST(SUM(term_fp) AS BIGINT) > 200000000000 AS drift_alert,
-             |  TRUE AS cuts_in_band,
-             |  TRUE AS psi_in_band
-             |FROM terms GROUP BY 1, 2, 3 ORDER BY event_type""".stripMargin)
+      Some(DriftReports.Sql.psi(selectCols =
+        """,
+          |  TRUE AS cuts_in_band,
+          |  TRUE AS psi_in_band""".stripMargin))
     ),
 
     // Kolmogorov-Smirnov drift monitor — the drift family's BINNING-FREE
@@ -1241,84 +1093,21 @@ object AnalyticQueries {
     // (type, value) partial-agg'd rollup (duplicate values combine
     // map-side — the window never sees raw event rows) + one per-type
     // cumulative window over the distinct-value domain; the alert is the
-    // standard α=0.05 two-sample threshold 1.358·√((n₁+n₂)/(n₁·n₂)).
-    // Determinism: cumulative counts are exact integers; each engine
-    // derives F-diffs through the same double expression tree, so the max
-    // is bit-identical — no fixed-point machinery needed (unlike PSI's
-    // term SUM, a MAX is order-free). Scale: the exact statistic costs a
-    // per-type distinct-value sort (the known exactness cost, the
-    // q_drift_psi percentile story); at 100 TB the CDFs evaluate on
-    // q_drift_psi_approx's certified sketch grid instead — a binned KS
-    // over K×10 rows.
+    // standard α=0.05 two-sample threshold (DriftReports.ks). Scale: the
+    // exact statistic costs a per-type distinct-value sort (the known
+    // exactness cost, the q_drift_psi percentile story); at 100 TB the
+    // CDFs evaluate on q_drift_psi_approx's certified sketch grid instead
+    // — a binned KS over K×10 rows.
     Q(
       "q_drift_ks",
       (s, d) => {
-        val ev = events(s, d)
-          .select(col("event_type"), col("value"), unix_micros(col("ts")).as("us"))
-        val med = ev.agg(expr("percentile(us, 0.5)").as("med"))
-        val half = ev
-          .crossJoin(broadcast(med))
-          .withColumn("is_ref", col("us") <= col("med"))
-          .select("event_type", "value", "is_ref")
-        val counts = half
-          .groupBy("event_type", "value")
-          .agg(
-            sum(when(col("is_ref"), 1L).otherwise(0L)).as("c_ref"),
-            sum(when(!col("is_ref"), 1L).otherwise(0L)).as("c_cur"))
-        val totals = counts
-          .groupBy("event_type")
-          .agg(sum(col("c_ref")).as("n_ref"), sum(col("c_cur")).as("n_cur"))
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("event_type"))
-          .orderBy(col("value"))
-          .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-            org.apache.spark.sql.expressions.Window.currentRow)
-        val diff = abs(
-          sum(col("c_ref")).over(w).cast("double") / col("n_ref").cast("double") -
-            sum(col("c_cur")).over(w).cast("double") / col("n_cur").cast("double"))
-        counts
-          .join(broadcast(totals), Seq("event_type"))
-          .withColumn("dd", diff)
-          .groupBy("event_type")
-          .agg(
-            max(col("n_ref")).as("n_ref"),
-            max(col("n_cur")).as("n_cur"),
-            max(col("dd")).as("ks_raw"))
-          .select(
-            col("event_type"),
-            col("n_ref"),
-            col("n_cur"),
-            round(col("ks_raw"), 6).as("ks"),
-            (col("ks_raw") > lit(1.358) *
-              sqrt((col("n_ref") + col("n_cur")).cast("double") /
-                (col("n_ref") * col("n_cur")).cast("double"))).as("drift_alert"))
+        val half = DriftReports.halves(events(s, d), "event_type", "value")
+        DriftReports
+          .ks(DriftReports.refCurCounts(half, "event_type", "value"), "value")
+          .select("event_type", "n_ref", "n_cur", "ks", "drift_alert")
           .orderBy("event_type")
       },
-      Some("""WITH ev AS (
-             |  SELECT event_type, value, epoch_us(ts) AS us FROM events),
-             |med AS (SELECT quantile_cont(us, 0.5) AS med FROM ev),
-             |half AS (
-             |  SELECT event_type, value, us <= (SELECT med FROM med) AS is_ref FROM ev),
-             |counts AS (
-             |  SELECT event_type, value,
-             |    CAST(SUM(CASE WHEN is_ref THEN 1 ELSE 0 END) AS BIGINT) AS c_ref,
-             |    CAST(SUM(CASE WHEN is_ref THEN 0 ELSE 1 END) AS BIGINT) AS c_cur
-             |  FROM half GROUP BY 1, 2),
-             |totals AS (
-             |  SELECT event_type, CAST(SUM(c_ref) AS BIGINT) AS n_ref,
-             |    CAST(SUM(c_cur) AS BIGINT) AS n_cur
-             |  FROM counts GROUP BY 1),
-             |cum AS (
-             |  SELECT c.event_type, t.n_ref, t.n_cur,
-             |    abs(CAST(SUM(c.c_ref) OVER (PARTITION BY c.event_type ORDER BY c.value
-             |               ROWS UNBOUNDED PRECEDING) AS DOUBLE) / CAST(t.n_ref AS DOUBLE)
-             |      - CAST(SUM(c.c_cur) OVER (PARTITION BY c.event_type ORDER BY c.value
-             |               ROWS UNBOUNDED PRECEDING) AS DOUBLE) / CAST(t.n_cur AS DOUBLE)) AS dd
-             |  FROM counts c JOIN totals t USING (event_type))
-             |SELECT event_type, n_ref, n_cur, round(MAX(dd), 6) AS ks,
-             |  MAX(dd) > 1.358 * sqrt(CAST(n_ref + n_cur AS DOUBLE)
-             |                         / CAST(n_ref * n_cur AS DOUBLE)) AS drift_alert
-             |FROM cum GROUP BY 1, 2, 3 ORDER BY event_type""".stripMargin)
+      Some(DriftReports.Sql.ks())
     ),
 
     // The KS monitor's 100 TB form (q_drift_ks's registered sketch twin —
@@ -1344,106 +1133,36 @@ object AnalyticQueries {
     Q(
       "q_drift_ks_approx",
       (s, d) => {
-        val ev = events(s, d)
-          .select(col("event_type"), col("value"), unix_micros(col("ts")).as("us"))
-        val med = ev.agg(expr("percentile(us, 0.5)").as("med"))
-        val half = ev
-          .crossJoin(broadcast(med))
-          .withColumn("is_ref", col("us") <= col("med"))
-          .select("event_type", "value", "is_ref")
-        // Exact arm (q_drift_ks verbatim): distinct-value CDF diffs.
-        val counts = half
-          .groupBy("event_type", "value")
-          .agg(
-            sum(when(col("is_ref"), 1L).otherwise(0L)).as("c_ref"),
-            sum(when(!col("is_ref"), 1L).otherwise(0L)).as("c_cur"))
-        val totals = counts
-          .groupBy("event_type")
-          .agg(sum(col("c_ref")).as("n_ref"), sum(col("c_cur")).as("n_cur"))
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("event_type"))
-          .orderBy(col("value"))
-          .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-            org.apache.spark.sql.expressions.Window.currentRow)
-        val diff = abs(
-          sum(col("c_ref")).over(w).cast("double") / col("n_ref").cast("double") -
-            sum(col("c_cur")).over(w).cast("double") / col("n_cur").cast("double"))
-        val exact = counts
-          .join(broadcast(totals), Seq("event_type"))
-          .withColumn("dd", diff)
-          .groupBy("event_type")
-          .agg(
-            max(col("n_ref")).as("n_ref"),
-            max(col("n_cur")).as("n_cur"),
-            max(col("dd")).as("ks_raw"))
+        val half = DriftReports.halves(events(s, d), "event_type", "value")
+        // Exact arm (the q_drift_ks report): distinct-value CDF gaps.
+        val counts = DriftReports.refCurCounts(half, "event_type", "value")
+        val totals = DriftReports.totals(counts)
+        val exact = DriftReports.ks(counts, "value", totals)
         // Sketch arm: CDFs at the certified decile-grid boundaries.
         val cuts = half
           .filter(col("is_ref"))
           .groupBy("event_type")
-          .agg(transform(
-            expr("approx_percentile(value, array(0.1D,0.2D,0.3D,0.4D,0.5D,0.6D,0.7D,0.8D,0.9D), 10000)"),
-            c => round(c, 6)).as("cuts"))
-        val binned = half
-          .join(broadcast(cuts), Seq("event_type"))
-          .withColumn("bin", size(filter(col("cuts"), c => c <= col("value"))))
-          .groupBy("event_type", "bin")
-          .agg(
-            sum(when(col("is_ref"), 1L).otherwise(0L)).as("b_ref"),
-            sum(when(!col("is_ref"), 1L).otherwise(0L)).as("b_cur"))
-        val wb = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("event_type"))
-          .orderBy(col("bin"))
-          .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-            org.apache.spark.sql.expressions.Window.currentRow)
-        val bdiff = abs(
-          sum(col("b_ref")).over(wb).cast("double") / col("n_ref").cast("double") -
-            sum(col("b_cur")).over(wb).cast("double") / col("n_cur").cast("double"))
-        val sketch = binned
-          .join(broadcast(totals), Seq("event_type"))
-          .withColumn("bd", bdiff)
-          .groupBy("event_type")
-          .agg(max(col("bd")).as("ks_binned"))
+          .agg(DriftReports.round6(
+            expr(s"approx_percentile(value, ${DriftReports.decileRanks}, 10000)")).as("cuts"))
+        val sketch = DriftReports
+          .ks(DriftReports.binCounts(half, cuts), "bin", totals)
+          .select(col("event_type"), col("ks_raw").as("ks_binned"))
         exact
           .join(sketch, Seq("event_type"))
           .select(
             col("event_type"),
             col("n_ref"),
             col("n_cur"),
-            round(col("ks_raw"), 6).as("ks"),
-            (col("ks_raw") > lit(1.358) *
-              sqrt((col("n_ref") + col("n_cur")).cast("double") /
-                (col("n_ref") * col("n_cur")).cast("double"))).as("drift_alert"),
+            col("ks"),
+            col("drift_alert"),
             (col("ks_binned") <= col("ks_raw") + lit(1e-12)).as("binned_le_exact"),
             (col("ks_raw") - col("ks_binned") <= lit(0.05)).as("gap_in_band"))
           .orderBy("event_type")
       },
-      Some("""WITH ev AS (
-             |  SELECT event_type, value, epoch_us(ts) AS us FROM events),
-             |med AS (SELECT quantile_cont(us, 0.5) AS med FROM ev),
-             |half AS (
-             |  SELECT event_type, value, us <= (SELECT med FROM med) AS is_ref FROM ev),
-             |counts AS (
-             |  SELECT event_type, value,
-             |    CAST(SUM(CASE WHEN is_ref THEN 1 ELSE 0 END) AS BIGINT) AS c_ref,
-             |    CAST(SUM(CASE WHEN is_ref THEN 0 ELSE 1 END) AS BIGINT) AS c_cur
-             |  FROM half GROUP BY 1, 2),
-             |totals AS (
-             |  SELECT event_type, CAST(SUM(c_ref) AS BIGINT) AS n_ref,
-             |    CAST(SUM(c_cur) AS BIGINT) AS n_cur
-             |  FROM counts GROUP BY 1),
-             |cum AS (
-             |  SELECT c.event_type, t.n_ref, t.n_cur,
-             |    abs(CAST(SUM(c.c_ref) OVER (PARTITION BY c.event_type ORDER BY c.value
-             |               ROWS UNBOUNDED PRECEDING) AS DOUBLE) / CAST(t.n_ref AS DOUBLE)
-             |      - CAST(SUM(c.c_cur) OVER (PARTITION BY c.event_type ORDER BY c.value
-             |               ROWS UNBOUNDED PRECEDING) AS DOUBLE) / CAST(t.n_cur AS DOUBLE)) AS dd
-             |  FROM counts c JOIN totals t USING (event_type))
-             |SELECT event_type, n_ref, n_cur, round(MAX(dd), 6) AS ks,
-             |  MAX(dd) > 1.358 * sqrt(CAST(n_ref + n_cur AS DOUBLE)
-             |                         / CAST(n_ref * n_cur AS DOUBLE)) AS drift_alert,
-             |  TRUE AS binned_le_exact,
-             |  TRUE AS gap_in_band
-             |FROM cum GROUP BY 1, 2, 3 ORDER BY event_type""".stripMargin)
+      Some(DriftReports.Sql.ks(
+        """,
+          |  TRUE AS binned_le_exact,
+          |  TRUE AS gap_in_band""".stripMargin))
     ),
 
     // Watermark-tuning lateness profile — the planning artifact behind
@@ -1820,48 +1539,19 @@ object AnalyticQueries {
       "q_anomaly_zscore",
       (s, d) => {
         val ev = events(s, d)
-        val stats = ev
-          .groupBy(col("event_type"))
-          .agg(
-            count(lit(1)).as("n"),
-            sum(col("value").cast("decimal(25,10)")).as("sx"),
-            sum((col("value") * col("value")).cast("decimal(25,10)")).as("sxx")
-          )
-          .select(
-            col("event_type"),
-            (col("sx").cast("double") / col("n").cast("double")).as("mean"),
-            // greatest(·,0): double cancellation can push Σx²/n − mean² a
-            // hair negative (Spark sqrt → NaN, DuckDB raises); NULLIF at
-            // the division keeps a zero-variance type NULL on BOTH
-            // engines instead of Inf/NaN-vs-error (ZeroVarianceSpec).
-            sqrt(greatest(
-              col("sxx").cast("double") / col("n").cast("double") -
-                (col("sx").cast("double") / col("n").cast("double")) *
-                (col("sx").cast("double") / col("n").cast("double")),
-              lit(0.0)
-            )).as("sd")
-          )
         ev.select(col("event_id"), col("event_type"), col("value"))
-          .join(broadcast(stats), Seq("event_type"))
+          .join(broadcast(DriftReports.zStats(ev)), Seq("event_type"))
           .select(
             col("event_id"),
             col("event_type"),
             col("value"),
-            round((col("value") - col("mean")) / nullif(col("sd"), lit(0.0)), 4).as("z"),
-            (abs((col("value") - col("mean")) / nullif(col("sd"), lit(0.0))) > lit(3.0)).as("is_outlier")
-          )
+            round(DriftReports.z, 4).as("z"),
+            (abs(DriftReports.z) > lit(3.0)).as("is_outlier"))
       },
-      Some("""WITH stats AS (
-             |  SELECT event_type,
-             |    CAST(SUM(CAST(value AS DECIMAL(25,10))) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS mean,
-             |    sqrt(greatest(CAST(SUM(CAST(value * value AS DECIMAL(25,10))) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)
-             |      - (CAST(SUM(CAST(value AS DECIMAL(25,10))) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE))
-             |      * (CAST(SUM(CAST(value AS DECIMAL(25,10))) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)), 0.0)) AS sd
-             |  FROM events GROUP BY event_type)
-             |SELECT event_id, e.event_type, value,
-             |  round((value - mean) / NULLIF(sd, 0.0), 4) AS z,
-             |  abs((value - mean) / NULLIF(sd, 0.0)) > 3.0 AS is_outlier
-             |FROM events e JOIN stats USING (event_type)""".stripMargin)
+      Some(DriftReports.Sql.zScores +
+        s""",
+           |  abs(${DriftReports.Sql.z}) > 3.0 AS is_outlier
+           |FROM events e JOIN stats USING (event_type)""".stripMargin)
     ),
 
     // Record linkage / entity resolution: near-identical dimension rows by

@@ -49,22 +49,14 @@ object SimilarityQueries {
     * catalog (ANALYZE stats); here it is one parquet metadata-only count
     * per path per JVM, cached so repeated query builds (bench reruns,
     * verify) don't re-issue the job inside the measured region. Like any
-    * catalog statistic it can go stale if the table at the path is
-    * REWRITTEN within one JVM — call [[clearStatsCache]] after such a
-    * rewrite (plane counts sized from a stale n degrade bucket occupancy
-    * silently).
+    * catalog statistic it can go stale: a table REWRITTEN at the same path
+    * within one JVM keeps its first count, and plane counts sized from a
+    * stale n degrade bucket occupancy silently. [[documentsCount]] and
+    * [[maxDocId]] share that limitation; nothing clears these caches.
     */
   private val embCountCache = scala.collection.concurrent.TrieMap.empty[String, Long]
   private def embeddingsCount(s: SparkSession, d: String): Long =
     embCountCache.getOrElseUpdate(d, embeddings(s, d).count())
-
-  /** Drop memoized table statistics (see [[embeddingsCount]] and
-    * [[documentsCount]] — both caches share the staleness remedy).
-    */
-  private[graft] def clearStatsCache(): Unit = {
-    embCountCache.clear()
-    docCountCache.clear()
-  }
 
   /** Sign-LSH ANN candidate pipeline (production plan): top-3 per query
     * from multi-probe hamming≤2 buckets. See the q_ann_lsh registration
@@ -867,38 +859,76 @@ object SimilarityQueries {
   private[graft] def inSampleBase(mod: Long, offset: Long = 1000000L): Column => Column = c =>
     pmod(when(c >= offset, c - offset).otherwise(c), lit(mod)) === 0
 
-  /** Shared sampled brute-force ball audit for the byte-banded sketch
-    * reports (simhash, image dHash): the banded pair set restricted to
-    * the sample must EQUAL the brute-force hamming≤7 ball over the
-    * sampled signatures, both directions. Returns the 1-row mismatch
-    * count. The crossJoin is bounded by the fixed-size sample
-    * (sampleModulus), and with base-id sampling the ball genuinely
-    * contains planted near-pairs, so a loosened hamming cut or broken
-    * banding flips the flag.
+  /** The banded audit report of the perceptual near-dup rows
+    * (q_dedup_simhash, q_dedup_images, q_dedup_audio, q_phash_images;
+    * oracle [[bandedAuditOracle]]). The pair tables themselves are
+    * spec-consumed; the report carries:
+    *  - `n_docs`, cross-engine exact;
+    *  - `planted_recall_band`: `recallOk(n_planted_found, n_docs)`, the
+    *    planted variants (at doc_id + `offset`) the byte-banded pairs of
+    *    `sigs` find, each driven through the row's full sketch path;
+    *  - `ball_band`: on a fixed-size base-id sample (sampleModulus), the
+    *    banded pair set restricted to the sample EQUALS the brute-force
+    *    hamming≤7 ball over the sampled signatures, both directions
+    *    (DedupRecallSpec proves the same equality exhaustively at spec
+    *    scale). With base-id sampling the ball genuinely contains planted
+    *    near-pairs, so a loosened hamming cut or broken banding flips it.
+    *    `sampled(sigs, inSample)` gives the sample's signatures: a filter
+    *    of `sigs`, or a fresh sketch pass over only the sampled documents
+    *    (~500 docs at any corpus size).
+    *
+    * `sigs` are materialized ONCE (localCheckpoint, bounded: 2 longs per
+    * document): the recall and ball branches rewrite the pair subtree
+    * under different pushed filters, so no exchange reuse spans them, and
+    * without the checkpoint the whole sketch pass (render or synth, codec,
+    * hash) ran twice (StageProbe r17: two identical full-corpus codec
+    * stages).
     */
-  private def sampledBallAudit(
-      sampledSigs: DataFrame,
-      pairs: DataFrame,
-      mod: Long,
-      offset: Long = 1000000L
+  private def bandedAudit(s: SparkSession, d: String, sigs: DataFrame, offset: Long)(
+      sampled: (DataFrame, Column => Column) => DataFrame,
+      recallOk: (Column, Column) => Column
   ): DataFrame = {
-    val ball = sampledSigs
+    val corpus = sigs.localCheckpoint()
+    val pairs = DedupOps.byteBandPairsUnsorted(corpus)
+    val mod = sampleModulus(documentsCount(s, d))
+    val inS = inSampleBase(mod, offset)
+    val sample = sampled(corpus, inS)
+    val ball = sample
       .as("a")
-      .crossJoin(sampledSigs.as("b"))
+      .crossJoin(sample.as("b"))
       .filter(
         col("a.doc_id") < col("b.doc_id") &&
           hammingPacked(col("a.sig"), col("b.sig")) <= 7
       )
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"), lit(true).as("in_ball"))
-    val inS = inSampleBase(mod, offset)
     val bandedSample = pairs
       .filter(inS(col("doc_a")) && inS(col("doc_b")))
       .select(col("doc_a"), col("doc_b"), lit(true).as("in_band"))
-    ball
+    val mismatch = ball
       .join(bandedSample, Seq("doc_a", "doc_b"), "full_outer")
       .filter(col("in_ball").isNull || col("in_band").isNull)
       .agg(count(lit(1)).as("n_mismatch"))
+    val recall = pairs
+      .filter(col("doc_b") === col("doc_a") + offset)
+      .agg(count(lit(1)).as("n_planted_found"))
+    documents(s, d)
+      .agg(count(lit(1)).as("n_docs"))
+      .crossJoin(broadcast(recall))
+      .crossJoin(broadcast(mismatch))
+      .select(
+        col("n_docs"),
+        recallOk(col("n_planted_found"), col("n_docs")).as("planted_recall_band"),
+        (col("n_mismatch") === 0L).as("ball_band")
+      )
   }
+
+  /** The oracle of every [[bandedAudit]] report: the flags are claims the
+    * Spark side checks, stated TRUE.
+    */
+  private val bandedAuditOracle: String =
+    """SELECT COUNT(*) AS n_docs, TRUE AS planted_recall_band,
+      |  TRUE AS ball_band
+      |FROM documents""".stripMargin
 
   /** The production SimHash near-dup pair table: packed 64-bit sketch,
     * 8 byte-bands via posexplode, popcount-of-xor hamming verify — every
@@ -1703,42 +1733,19 @@ object SimilarityQueries {
     ),
 
     // SimHash near-dup — see simhashPairs for the sketch/banding story.
-    // Registered form = the banded audit report (the pair table is
-    // simhashPairs, spec-consumed): n_docs is cross-engine exact,
-    // planted_recall_band tracks the 15%-truncation recall regime the
-    // spec gates (simhash's sweet spot is boilerplate-level edits —
-    // truncation is HEAVY for it, so the floor is honest, not slack),
-    // and ball_band re-asserts pigeonhole completeness at gate time on a
-    // deterministic ~2% signature sample: banded pairs restricted to the
-    // sample must EQUAL the brute-force hamming≤7 ball, both directions
-    // (the spec proves the same equality exhaustively at spec scale).
+    // Registered form = the banded audit report (bandedAudit; the pair
+    // table is simhashPairs, spec-consumed). planted_recall_band tracks
+    // the 15%-truncation recall regime the spec gates (simhash's sweet
+    // spot is boilerplate-level edits — truncation is HEAVY for it, so
+    // the 0.6 floor is honest, not slack); the ball sample is a filter of
+    // the signature table itself.
     Q(
       "q_dedup_simhash",
-      (s, d) => {
-        // r17: unsorted pairs over a checkpointed sig table — the report
-        // only aggregates, so the production table's output sort (and the
-        // sketch pipeline's re-evaluation per report branch) was overhead.
-        val sigs = simhashSigs(s, d).localCheckpoint()
-        val pairs = DedupOps.byteBandPairsUnsorted(sigs)
-        val mod = sampleModulus(documentsCount(s, d))
-        val mismatch =
-          sampledBallAudit(sigs.filter(inSampleBase(mod)(col("doc_id"))), pairs, mod)
-        val recall = pairs
-          .filter(col("doc_b") === col("doc_a") + 1000000L)
-          .agg(count(lit(1)).as("n_planted_found"))
-        documents(s, d)
-          .agg(count(lit(1)).as("n_docs"))
-          .crossJoin(broadcast(recall))
-          .crossJoin(broadcast(mismatch))
-          .select(
-            col("n_docs"),
-            (col("n_planted_found") >= col("n_docs") * 0.6).as("planted_recall_band"),
-            (col("n_mismatch") === 0L).as("ball_band")
-          )
-      },
-      Some("""SELECT COUNT(*) AS n_docs, TRUE AS planted_recall_band,
-             |  TRUE AS ball_band
-             |FROM documents""".stripMargin)
+      (s, d) =>
+        bandedAudit(s, d, simhashSigs(s, d), 1000000L)(
+          (sigs, inSample) => sigs.filter(inSample(col("doc_id"))),
+          (found, n) => found >= n * 0.6),
+      Some(bandedAuditOracle)
     ),
 
     // n-gram Jaccard via inverted index: explode hashed shingles (long keys
@@ -2399,60 +2406,22 @@ object SimilarityQueries {
     // (codec + pixels); DedupRecallSpec brute-forces the hamming ball on
     // the same sketch table and asserts exact set equality, plus planted
     // recall through the full render→decode→hash→band path.
-    // Registered form = the banded perceptual-dedup audit (the pair table
-    // is imageDedupPairs, spec-consumed): n_docs is cross-engine exact,
-    // planted_recall_band drives every planted ±3-luma ripple variant
-    // through the REAL render→ImageIO-decode→dHash→band path (a codec or
-    // kernel break collapses it), and ball_band re-asserts the
-    // pigeonhole-completeness claim at gate time — on a deterministic
-    // ~2% doc sample, the banded pair set restricted to the sample must
-    // EQUAL the brute-force hamming≤7 ball over the sampled signatures,
-    // both directions (the sample keeps the quadratic check O((n/53)²),
-    // affordable at any bench SF; the spec proves the same equality
-    // exhaustively at spec scale).
+    // Registered form = the banded audit report (bandedAudit; the pair
+    // table is imageDedupPairs, spec-consumed): planted_recall_band drives
+    // every planted ±3-luma ripple variant through the REAL
+    // render→ImageIO-decode→dHash→band path (a codec or kernel break
+    // collapses it), and only the sampled documents are rendered again
+    // for the ball.
     Q(
       "q_dedup_images",
-      (s, d) => {
-        // Materialize the corpus signature table ONCE (localCheckpoint —
-        // bounded: 2 longs per image, within the timed query). The report
-        // consumes the pair table along two branches (planted recall +
-        // sampled ball) whose pushed-down filters rewrite the pair subtree
-        // differently, so no exchange reuse is possible across them and
-        // without this the whole render→ImageIO-decode→dHash pass ran
-        // TWICE (StageProbe r17: two identical full-corpus codec stages).
-        val pairs = DedupOps.byteBandPairsUnsorted(imageSigs(s, d).localCheckpoint())
-        // Render only the fixed-size sample for the ball branch (base-id
-        // sampling via inSampleBase keeps each sampled original's
-        // planted variant, and the second render pass costs ~500 docs
-        // at ANY corpus size, not a fixed fraction of it).
-        val mod = sampleModulus(documentsCount(s, d))
-        // Same inSampleBase predicate as the band side — a raw pmod here
-        // would disagree with it if base ids ever reached the 1e6
-        // planted-id offset (the planted convention assumes base ids
-        // below 1e6; keeping both sides on one predicate means they can
-        // never diverge regardless).
-        val sampled =
-          imageSigsFrom(documents(s, d).filter(inSampleBase(mod)(col("doc_id"))))(s)
-        val mismatch = sampledBallAudit(sampled, pairs, mod)
-        val recall = pairs
-          .filter(col("doc_b") === col("doc_a") + 1000000L)
-          .agg(count(lit(1)).as("n_planted_found"))
-        documents(s, d)
-          .agg(count(lit(1)).as("n_docs"))
-          .crossJoin(broadcast(recall))
-          .crossJoin(broadcast(mismatch))
-          .select(
-            col("n_docs"),
-            // STRICT > 0.9, matching DedupRecallSpec's gate on the same
-            // quantity exactly (>= would let the two gates disagree when
-            // recall lands precisely on the floor).
-            (col("n_planted_found") > col("n_docs") * 0.9).as("planted_recall_band"),
-            (col("n_mismatch") === 0L).as("ball_band")
-          )
-      },
-      Some("""SELECT COUNT(*) AS n_docs, TRUE AS planted_recall_band,
-             |  TRUE AS ball_band
-             |FROM documents""".stripMargin)
+      (s, d) =>
+        bandedAudit(s, d, imageSigs(s, d), 1000000L)(
+          (_, inSample) => imageSigsFrom(documents(s, d).filter(inSample(col("doc_id"))))(s),
+          // STRICT > 0.9, matching DedupRecallSpec's gate on the same
+          // quantity exactly (>= would let the two gates disagree when
+          // recall lands precisely on the floor).
+          (found, n) => found > n * 0.9),
+      Some(bandedAuditOracle)
     ),
 
     // Audio near-dup by volume-invariant fingerprint — the audio arm of
@@ -2465,50 +2434,19 @@ object SimilarityQueries {
     // to its 64-bit fingerprint, then pairing is EXACTLY the shared
     // byteBandPairs machinery (8 byte-bands, pigeonhole-complete for
     // hamming ≤ 7, merge-hinted self-join with the hamming cut inside the
-    // band join). Registered form = the banded audit report (the pair
-    // table is audioDedupPairs, spec-consumed): n_docs cross-engine
-    // exact, planted_recall_band drives every planted re-levelled variant
-    // through the full synth→decode→fingerprint→band path, and ball_band
-    // re-asserts pigeonhole-completeness at gate time — on the fixed-size
-    // doc sample, the banded pair set restricted to the sample must EQUAL
-    // the brute-force hamming≤7 ball over the sampled fingerprints, both
-    // directions (DedupRecallSpec proves the same equality exhaustively
-    // at spec scale).
+    // band join). Registered form = the banded audit report (bandedAudit;
+    // the pair table is audioDedupPairs, spec-consumed):
+    // planted_recall_band drives every planted re-levelled variant
+    // through the full synth→decode→fingerprint→band path.
     Q(
       "q_dedup_audio",
       (s, d) => {
-        // Same single-codec-pass materialization as q_dedup_images: the
-        // recall and ball branches duplicate the pair subtree under
-        // different pushed filters, so without the localCheckpoint the
-        // synth→encode→decode→fingerprint pass ran TWICE (StageProbe r17:
-        // two identical ~4 s 32-task codec stages at sf0.1).
-        val pairs = DedupOps.byteBandPairsUnsorted(audioSigs(s, d).localCheckpoint())
-        // Synthesize only the fixed-size sample for the ball branch —
-        // base-id sampling keeps each sampled original's planted variant,
-        // and the second codec pass costs ~500 docs at ANY corpus size.
         val off = plantedOffset(s, d)
-        val mod = sampleModulus(documentsCount(s, d))
-        val sampled =
-          audioSigsFrom(documents(s, d).filter(inSampleBase(mod, off)(col("doc_id"))), off)(s)
-        val mismatch = sampledBallAudit(sampled, pairs, mod, off)
-        val recall = pairs
-          .filter(col("doc_b") === col("doc_a") + off)
-          .agg(count(lit(1)).as("n_planted_found"))
-        documents(s, d)
-          .agg(count(lit(1)).as("n_docs"))
-          .crossJoin(broadcast(recall))
-          .crossJoin(broadcast(mismatch))
-          .select(
-            col("n_docs"),
-            // STRICT > 0.9, matching DedupRecallSpec's gate on the same
-            // quantity exactly.
-            (col("n_planted_found") > col("n_docs") * 0.9).as("planted_recall_band"),
-            (col("n_mismatch") === 0L).as("ball_band")
-          )
+        bandedAudit(s, d, audioSigs(s, d), off)(
+          (_, inSample) => audioSigsFrom(documents(s, d).filter(inSample(col("doc_id"))), off)(s),
+          (found, n) => found > n * 0.9) // strict, as DedupRecallSpec's gate
       },
-      Some("""SELECT COUNT(*) AS n_docs, TRUE AS planted_recall_band,
-             |  TRUE AS ball_band
-             |FROM documents""".stripMargin)
+      Some(bandedAuditOracle)
     ),
 
     // Noise-robust image near-dup by DCT pHash — the crop+dither
@@ -2526,47 +2464,19 @@ object SimilarityQueries {
     // EXACTLY the shared byteBandPairs machinery (8 byte-bands,
     // pigeonhole-complete for hamming ≤ 7, merge-hinted self-join,
     // hamming cut inside the band join). Registered form = the banded
-    // audit report (the pair table is phashDedupPairs, spec-consumed):
-    // n_docs cross-engine exact, planted_recall_band drives every planted
-    // variant through the full render→decode→crop→dither→re-encode→
-    // decode→DCT→band path, and ball_band re-asserts
-    // pigeonhole-completeness at gate time on the fixed-size doc sample
-    // (both directions, the q_dedup_images shape).
+    // audit report (bandedAudit; the pair table is phashDedupPairs,
+    // spec-consumed): planted_recall_band drives every planted variant
+    // through the full render→decode→crop→dither→re-encode→decode→DCT→
+    // band path.
     Q(
       "q_phash_images",
       (s, d) => {
-        // Same single-codec-pass materialization as q_dedup_images: the
-        // recall and ball branches duplicate the pair subtree under
-        // different pushed filters, so without the localCheckpoint the
-        // render→encode→decode→crop→dither→re-encode→decode→DCT pass ran
-        // TWICE (StageProbe r17: two identical ~12 s 32-task codec stages
-        // at sf0.1 — the query's entire cost, doubled).
-        val pairs = DedupOps.byteBandPairsUnsorted(phashSigs(s, d).localCheckpoint())
-        // Render only the fixed-size sample for the ball branch — the
-        // second render+crop pass costs ~500 docs at ANY corpus size.
         val off = plantedOffset(s, d)
-        val mod = sampleModulus(documentsCount(s, d))
-        val sampled =
-          phashSigsFrom(documents(s, d).filter(inSampleBase(mod, off)(col("doc_id"))), off)(s)
-        val mismatch = sampledBallAudit(sampled, pairs, mod, off)
-        val recall = pairs
-          .filter(col("doc_b") === col("doc_a") + off)
-          .agg(count(lit(1)).as("n_planted_found"))
-        documents(s, d)
-          .agg(count(lit(1)).as("n_docs"))
-          .crossJoin(broadcast(recall))
-          .crossJoin(broadcast(mismatch))
-          .select(
-            col("n_docs"),
-            // STRICT > 0.9, matching DedupRecallSpec's gate on the same
-            // quantity exactly.
-            (col("n_planted_found") > col("n_docs") * 0.9).as("planted_recall_band"),
-            (col("n_mismatch") === 0L).as("ball_band")
-          )
+        bandedAudit(s, d, phashSigs(s, d), off)(
+          (_, inSample) => phashSigsFrom(documents(s, d).filter(inSample(col("doc_id"))), off)(s),
+          (found, n) => found > n * 0.9) // strict, as DedupRecallSpec's gate
       },
-      Some("""SELECT COUNT(*) AS n_docs, TRUE AS planted_recall_band,
-             |  TRUE AS ball_band
-             |FROM documents""".stripMargin)
+      Some(bandedAuditOracle)
     ),
 
     // Incremental dedup — the production shape at 100 TB: the corpus is

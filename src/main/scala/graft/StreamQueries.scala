@@ -59,24 +59,17 @@ object StreamQueries {
   private case class DriftStream(cuts: DataFrame, refBins: DataFrame, curBins: DataFrame)
 
   private def driftStream(s: SparkSession, d: String): DriftStream = {
-    val ev = events(s, d)
-      .select(col("event_type"), col("value"), unix_micros(col("ts")).as("us"))
-    val med = ev.agg(expr("percentile(us, 0.5)")).head().getDouble(0)
-    val refHalf = ev.filter(col("us") <= med)
-    val cuts = refHalf
-      .groupBy("event_type")
-      .agg(transform(
-        expr("percentile(value, array(0.1D,0.2D,0.3D,0.4D,0.5D,0.6D,0.7D,0.8D,0.9D))"),
-        c => round(c, 6)).as("cuts"))
-    def binned(df: DataFrame, countCol: String): DataFrame = df
-      .join(broadcast(cuts), Seq("event_type"))
-      .withColumn("bin", size(filter(col("cuts"), c => c <= col("value"))))
+    val ev = DriftReports.withUs(events(s, d), "event_type", "value")
+    val med = lit(DriftReports.medianValue(ev))
+    val refHalf = ev.filter(DriftReports.isRef(med))
+    val cuts = DriftReports.decileCuts(refHalf)
+    def binned(df: DataFrame, countCol: String): DataFrame = DriftReports
+      .binned(df, cuts)
       .groupBy(col("event_type"), col("bin"))
       .agg(count(lit(1)).as(countCol))
-    val cur = eventsStream(s, d)
-      .transform(Tables.normalizeTs(_))
-      .filter(unix_micros(col("ts")) > med)
-      .select(col("event_type"), col("value"))
+    val cur = DriftReports
+      .withUs(eventsStream(s, d).transform(Tables.normalizeTs(_)), "event_type", "value")
+      .filter(!DriftReports.isRef(med))
     DriftStream(cuts, binned(refHalf, "c_ref"), binned(cur, "c_cur"))
   }
 
@@ -333,52 +326,26 @@ object StreamQueries {
     Q(
       "q_stream_anomaly",
       (s, d) => {
-        val stats = events(s, d)
-          .groupBy(col("event_type"))
-          .agg(
-            count(lit(1)).as("n"),
-            sum(col("value").cast("decimal(25,10)")).as("sx"),
-            sum((col("value") * col("value")).cast("decimal(25,10)")).as("sxx")
-          )
-          .select(
-            col("event_type"),
-            (col("sx").cast("double") / col("n").cast("double")).as("mean"),
-            // Same zero-variance guards as q_anomaly_zscore: greatest(·,0)
-            // against cancellation-negative variance, NULLIF(sd,0) so a
-            // constant type yields NULL z (filtered out) on both engines.
-            sqrt(greatest(
-              col("sxx").cast("double") / col("n").cast("double") -
-                (col("sx").cast("double") / col("n").cast("double")) *
-                (col("sx").cast("double") / col("n").cast("double")),
-              lit(0.0)
-            )).as("sd")
-          )
+        val stats = DriftReports.zStats(events(s, d))
         bounded(s, d, "sanom") { out =>
           fileSink(
             eventsStream(s, d)
               .select(col("event_id"), col("event_type"), col("value"))
               .join(broadcast(stats), Seq("event_type"))
-              .filter(abs((col("value") - col("mean")) / nullif(col("sd"), lit(0.0))) > lit(3.0))
+              .filter(abs(DriftReports.z) > lit(3.0))
               .select(
                 col("event_id"),
                 col("event_type"),
                 col("value"),
-                round((col("value") - col("mean")) / nullif(col("sd"), lit(0.0)), 4).as("z")
+                round(DriftReports.z, 4).as("z")
               ),
             out)
         }
       },
-      Some("""WITH stats AS (
-             |  SELECT event_type,
-             |    CAST(SUM(CAST(value AS DECIMAL(25,10))) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS mean,
-             |    sqrt(greatest(CAST(SUM(CAST(value * value AS DECIMAL(25,10))) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)
-             |      - (CAST(SUM(CAST(value AS DECIMAL(25,10))) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE))
-             |      * (CAST(SUM(CAST(value AS DECIMAL(25,10))) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)), 0.0)) AS sd
-             |  FROM events GROUP BY event_type)
-             |SELECT event_id, e.event_type, value,
-             |  round((value - mean) / NULLIF(sd, 0.0), 4) AS z
-             |FROM events e JOIN stats USING (event_type)
-             |WHERE abs((value - mean) / NULLIF(sd, 0.0)) > 3.0""".stripMargin)
+      Some(DriftReports.Sql.zScores +
+        s"""
+           |FROM events e JOIN stats USING (event_type)
+           |WHERE abs(${DriftReports.Sql.z}) > 3.0""".stripMargin)
     ),
 
     Q(
@@ -550,15 +517,9 @@ object StreamQueries {
         val ref = driftStream(s, d)
         bounded(s, d, "sdks") { out =>
           overwriteSink(ref.curBins, out) { batch =>
-            val wb = Window
-              .partitionBy(col("event_type"))
-              .orderBy(col("bin"))
-              .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-            val bd = abs(
-              sum(col("c_ref")).over(wb).cast("double") / col("n_ref").cast("double") -
-                sum(col("c_cur")).over(wb).cast("double") / col("n_cur").cast("double"))
             DriftReports
-              .psi(ref.cuts, Seq(ref.refBins, batch), Seq("bd" -> bd), Seq(max(col("bd")).as("ks_raw")))
+              .psi(ref.cuts, Seq(ref.refBins, batch),
+                Seq("bd" -> DriftReports.cdfGap(col("bin"))), Seq(max(col("bd")).as("ks_raw")))
               .select(
                 col("event_type"),
                 col("n_ref"),
@@ -566,60 +527,17 @@ object StreamQueries {
                 col("psi"),
                 col("drift_alert").as("psi_alert"),
                 round(col("ks_raw"), 6).as("ks_binned"),
-                (col("ks_raw") > lit(1.358) *
-                  sqrt((col("n_ref") + col("n_cur")).cast("double") /
-                    (col("n_ref") * col("n_cur")).cast("double"))).as("ks_alert"))
+                DriftReports.ksAlert(col("ks_raw")).as("ks_alert"))
           }
         }.orderBy("event_type")
       },
-      Some("""WITH ev AS (
-             |  SELECT event_type, value, epoch_us(ts) AS us FROM events),
-             |med AS (SELECT quantile_cont(us, 0.5) AS med FROM ev),
-             |half AS (
-             |  SELECT event_type, value, us <= (SELECT med FROM med) AS is_ref FROM ev),
-             |cuts AS (
-             |  SELECT event_type,
-             |    list_transform(
-             |      quantile_cont(value, [0.1,0.2,0.3,0.4,0.5,0.6,0.7,0.8,0.9]),
-             |      x -> round(x, 6)) AS cuts
-             |  FROM half WHERE is_ref GROUP BY 1),
-             |counts AS (
-             |  SELECT h.event_type,
-             |    CAST(len(list_filter(c.cuts, x -> x <= h.value)) AS INT) AS bin,
-             |    CAST(SUM(CASE WHEN h.is_ref THEN 1 ELSE 0 END) AS BIGINT) AS c_ref,
-             |    CAST(SUM(CASE WHEN h.is_ref THEN 0 ELSE 1 END) AS BIGINT) AS c_cur
-             |  FROM half h JOIN cuts c USING (event_type)
-             |  GROUP BY 1, 2),
-             |domain AS (
-             |  SELECT c.event_type, CAST(r.range AS INT) AS bin FROM cuts c, range(10) r),
-             |filled AS (
-             |  SELECT d.event_type, d.bin,
-             |    COALESCE(c.c_ref, 0) AS c_ref, COALESCE(c.c_cur, 0) AS c_cur
-             |  FROM domain d LEFT JOIN counts c USING (event_type, bin)),
-             |totals AS (
-             |  SELECT event_type, CAST(SUM(c_ref) AS BIGINT) AS n_ref,
-             |    CAST(SUM(c_cur) AS BIGINT) AS n_cur
-             |  FROM filled GROUP BY 1),
-             |terms AS (
-             |  SELECT f.event_type, t.n_ref, t.n_cur,
-             |    CAST(round(
-             |      ((CAST(f.c_ref AS DOUBLE) + 0.5) / (CAST(t.n_ref AS DOUBLE) + 5.0)
-             |       - (CAST(f.c_cur AS DOUBLE) + 0.5) / (CAST(t.n_cur AS DOUBLE) + 5.0))
-             |      * ln(((CAST(f.c_ref AS DOUBLE) + 0.5) / (CAST(t.n_ref AS DOUBLE) + 5.0))
-             |           / ((CAST(f.c_cur AS DOUBLE) + 0.5) / (CAST(t.n_cur AS DOUBLE) + 5.0)))
-             |      * 1.0e12) AS BIGINT) AS term_fp,
-             |    abs(CAST(SUM(f.c_ref) OVER (PARTITION BY f.event_type ORDER BY f.bin
-             |               ROWS UNBOUNDED PRECEDING) AS DOUBLE) / CAST(t.n_ref AS DOUBLE)
-             |      - CAST(SUM(f.c_cur) OVER (PARTITION BY f.event_type ORDER BY f.bin
-             |               ROWS UNBOUNDED PRECEDING) AS DOUBLE) / CAST(t.n_cur AS DOUBLE)) AS bd
-             |  FROM filled f JOIN totals t USING (event_type))
-             |SELECT event_type, n_ref, n_cur,
-             |  round(CAST(CAST(SUM(term_fp) AS BIGINT) AS DOUBLE) / 1.0e12, 6) AS psi,
-             |  CAST(SUM(term_fp) AS BIGINT) > 200000000000 AS psi_alert,
+      Some(DriftReports.Sql.psi(
+        termCols = ",\n    " + DriftReports.Sql.cdfGap("f", "f.bin", "bd"),
+        alert = "psi_alert",
+        selectCols =
+          s""",
              |  round(MAX(bd), 6) AS ks_binned,
-             |  MAX(bd) > 1.358 * sqrt(CAST(n_ref + n_cur AS DOUBLE)
-             |                         / CAST(n_ref * n_cur AS DOUBLE)) AS ks_alert
-             |FROM terms GROUP BY 1, 2, 3 ORDER BY event_type""".stripMargin)
+             |  ${DriftReports.Sql.ksAlert("MAX(bd)")} AS ks_alert""".stripMargin))
     ),
 
     // Streaming χ² — the drift family's third monitor deployed (with
@@ -632,17 +550,16 @@ object StreamQueries {
     Q(
       "q_stream_chi2",
       (s, d) => {
-        val ev = events(s, d)
-          .select(col("event_type"), unix_micros(col("ts")).as("us"))
-        val med = ev.agg(expr("percentile(us, 0.5)")).head().getDouble(0)
+        val ev = DriftReports.withUs(events(s, d), "event_type")
+        val med = lit(DriftReports.medianValue(ev))
         val refCounts = ev
-          .filter(col("us") <= med)
+          .filter(DriftReports.isRef(med))
           .groupBy("event_type")
           .agg(count(lit(1)).as("c_ref"))
         bounded(s, d, "schi2") { out =>
-          val curCounts = eventsStream(s, d)
-            .transform(Tables.normalizeTs(_))
-            .filter(unix_micros(col("ts")) > med)
+          val curCounts = DriftReports
+            .withUs(eventsStream(s, d).transform(Tables.normalizeTs(_)), "event_type")
+            .filter(!DriftReports.isRef(med))
             .groupBy(col("event_type"))
             .agg(count(lit(1)).as("c_cur"))
           overwriteSink(curCounts, out) { batch =>

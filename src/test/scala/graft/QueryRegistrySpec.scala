@@ -191,6 +191,48 @@ class QueryRegistrySpec extends AnyFunSuite with SparkSpec {
     assert(out(1).getAs[Boolean]("drift_alert"))
   }
 
+  test("KS hand case: a type with an empty half gets NULL ks and alert in all three KS rows") {
+    import spark.implicits._
+    // Median of us over ts 1..8 (type 'a'), 1,2 ('r') and 7,8 ('c') is
+    // 4.5: 'r' lies wholly in the reference half (n_cur = 0) and 'c'
+    // wholly in the current half (n_ref = 0). 'a' is the overlap case of
+    // the hand case above, D = 0.5.
+    val rows = Seq(
+      ("a", (1 to 8).map(_.toLong), Seq(1.0, 2.0, 3.0, 4.0, 3.0, 4.0, 5.0, 6.0)),
+      ("r", Seq(1L, 2L), Seq(1.0, 2.0)),
+      ("c", Seq(7L, 8L), Seq(1.0, 2.0)))
+      .flatMap { case (t, secs, vals) => secs.zip(vals).map { case (sec, v) => (t, sec, v) } }
+      .zipWithIndex
+      .map { case ((t, sec, v), i) =>
+        (i.toLong, new java.sql.Timestamp(1700000000000L + sec * 1000L), i.toLong, t, v)
+      }
+    // One file named events.parquet: the event stream's glob reads only it.
+    val dir = java.nio.file.Files.createTempDirectory("ks_empty_half")
+    val tmp = dir.resolve("tmp").toString
+    rows.toDF("event_id", "ts", "user_id", "event_type", "value")
+      .coalesce(1).write.parquet(tmp)
+    val part = new java.io.File(tmp).listFiles().find(_.getName.endsWith(".parquet")).get
+    java.nio.file.Files.move(part.toPath, dir.resolve("events.parquet"))
+    def byType(name: String, ks: String, alert: String): Map[String, (Long, Long, Any, Any)] =
+      QueryRegistry.queries(name)(spark, dir.toString).collect()
+        .map(r => r.getAs[String]("event_type") ->
+          ((r.getAs[Long]("n_ref"), r.getAs[Long]("n_cur"), r.getAs[Any](ks), r.getAs[Any](alert))))
+        .toMap
+    val exact = byType("q_drift_ks", "ks", "drift_alert")
+    assert(exact("a") == ((4L, 4L, 0.5, false)))
+    assert(exact("r") == ((2L, 0L, null, null)))
+    assert(exact("c") == ((0L, 2L, null, null)))
+    // The binned rows keep only types with reference deciles, so 'c' drops.
+    for ((name, ks, alert) <- Seq(
+        ("q_drift_ks_approx", "ks", "drift_alert"),
+        ("q_stream_drift_ks", "ks_binned", "ks_alert"))) {
+      val got = byType(name, ks, alert)
+      assert(got.keySet == Set("a", "r"), name)
+      assert(got("r") == ((2L, 0L, null, null)), name)
+      assert(got("a")._4 == false, name)
+    }
+  }
+
   test("pack_context shards respect the budget and are contiguous per stream") {
     // Greedy exclusive-prefix packing invariants: within every (lang,
     // source) stream, shard ids start at 0 and never decrease in doc_id
