@@ -1127,9 +1127,10 @@ object AnalyticQueries {
     // diagnose a flip as drift in the data, not a regression. Exact
     // columns (n_ref / n_cur / ks / drift_alert — identical machinery to
     // q_drift_ks) stay cross-engine hash-checked; the sketch claims ride
-    // the flags. ONE (type, value-bin) rollup serves the binned CDFs;
-    // the exact arm pays its documented distinct-value window and drops
-    // away at scale — this report certifies that swap.
+    // the flags (NULL, as KS is, for a type with an empty half). ONE
+    // (type, value-bin) rollup serves the binned CDFs; the exact arm pays
+    // its documented distinct-value window and drops away at scale — this
+    // report certifies that swap.
     Q(
       "q_drift_ks_approx",
       (s, d) => {
@@ -1160,9 +1161,9 @@ object AnalyticQueries {
           .orderBy("event_type")
       },
       Some(DriftReports.Sql.ks(
-        """,
-          |  TRUE AS binned_le_exact,
-          |  TRUE AS gap_in_band""".stripMargin))
+        s""",
+          |  ${DriftReports.Sql.bothHalves("TRUE")} AS binned_le_exact,
+          |  ${DriftReports.Sql.bothHalves("TRUE")} AS gap_in_band""".stripMargin))
     ),
 
     // Watermark-tuning lateness profile — the planning artifact behind

@@ -5,10 +5,10 @@ import org.apache.spark.sql.execution.FormattedMode
 /** Plan inspector: prints the formatted physical plan
   * (`explainString(FormattedMode)`: the operator tree, then each operator's
   * inputs, outputs and arguments) of the named queries, all of them with
-  * no args — the quick companion to [[Plans]]' committed PLANS.md for the
-  * "explain, then iterate until it's the plan you'd want" loop, and the
-  * before/after plan artifact of a change (redirect stdout to a file and
-  * diff two checkouts).
+  * no args — the "explain, then iterate until it's the plan you'd want"
+  * loop, and the before/after plan artifact of a change (redirect stdout
+  * to a file and diff two checkouts). Plans are printed on demand, not
+  * committed; PlanAuditSpec pins the load-bearing shapes.
   * `sbt "runMain graft.Explain q_oov_rate q_corr_stats"`; pass `-x` to
   * EXECUTE each query first and print the final adaptive plan (stage
   * reuse and AQE re-plans only appear there); `-l` alone lists the

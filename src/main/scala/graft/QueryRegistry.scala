@@ -15,7 +15,7 @@ final case class Q(
 
 object QueryRegistry {
   // lazy vals, not defs: construction is pure but builds every closure and
-  // oracle string — callers hit these inside timed loops (Bench, Plans,
+  // oracle string — callers hit these inside timed loops (Bench, Explain,
   // ScaleGrowth) and a def would rebuild the whole registry per access.
   lazy val all: Seq[Q] = {
     val qs = EtlQueries.all ++ AnalyticQueries.all ++ TextQueries.all ++

@@ -189,6 +189,37 @@ object TextQueries {
       .select("host", "url", "n_refs", "rk")
   }
 
+  /** The hex digits, as the SQL literal both engines' [[md5Digit]] reads. */
+  private val hexDigits = "'0123456789abcdef'"
+
+  /** Digit `i` (1-based) of the md5 hex of column `c`, as 0..15: the crawl
+    * fixtures' deterministic per-host and per-url dice. [[duckMd5Digit]]
+    * is the DuckDB spelling.
+    */
+  private def md5Digit(c: String, i: Int): org.apache.spark.sql.Column =
+    expr(s"locate(substring(md5($c), $i, 1), $hexDigits) - 1")
+
+  private def duckMd5Digit(c: String, i: Int): String =
+    s"strpos($hexDigits, substr(md5($c), $i, 1)) - 1"
+
+  /** A url's path (group 1: from the first `/` after the authority, up to
+    * the query or fragment). Both engines extract it with this one regex.
+    */
+  private val urlPathRegex = "^[a-z]+://[^/]+(/[^?#]*)"
+
+  /** The source hosts, `<lower(source)>.example.com`, one row each:
+    * lowercased because candidate hosts come out of canonicalizeUrl
+    * lowercased, and a mixed-case source would otherwise miss its own
+    * fixture rows.
+    */
+  private def sourceHosts(
+      s: org.apache.spark.sql.SparkSession,
+      d: String
+  ): org.apache.spark.sql.DataFrame =
+    documents(s, d)
+      .select(concat(lower(col("source")), lit(".example.com")).as("host"))
+      .distinct()
+
   /** Robots longest-match-wins decision kernel (Google robots.txt
     * semantics): over a host's rule array (structs with string `prefix`
     * and boolean `allow`), return the struct of the BEST rule matching
@@ -221,13 +252,6 @@ object TextQueries {
       filter(rules, r => regexp_like(path, r("rx"))),
       r => struct(length(r("prefix")).as("l"), r("allow").as("allow"), r("prefix").as("prefix"))))
 
-  /** The parsed sitemap ENTRY TABLE (host, url, lastmod, priority,
-    * changefreq) — deterministic per-host sitemaps.org bodies through the
-    * real JDK DOM parser (sources.SitemapXml), shared by q_sitemap_ingest
-    * (discovery vs the frontier) and q_recrawl_schedule (lastmod vs the
-    * crawl ledger) the way frontierCandidates backs the frontier family.
-    * Parse cost is host-cardinality: one typed map over the source hosts.
-    */
   /** The deterministic `<url>` entry for index `p` on the current `host`
     * column — the ONE entry grammar shared by the flat sitemap fixture
     * ([[sitemapEntries]]) and the sitemapindex children (q_sitemap_index),
@@ -235,10 +259,8 @@ object TextQueries {
     * generator drift between them is impossible.
     */
   private def sitemapEntryXml(p: Int): org.apache.spark.sql.Column = {
-    def digit(i: Int) =
-      expr(s"locate(substring(md5(host), $i, 1), '0123456789abcdef') - 1")
-    val seg = pmod(digit(4) + lit(p), lit(5)).cast("int").cast("string")
-    val prioDigit = (lit(5) + pmod(lit(p) + digit(5), lit(5))).cast("int").cast("string")
+    val seg = pmod(md5Digit("host", 4) + lit(p), lit(5)).cast("int").cast("string")
+    val prioDigit = (lit(5) + pmod(lit(p) + md5Digit("host", 5), lit(5))).cast("int").cast("string")
     concat(
       lit("  <url>\n    <loc>http://"), col("host"),
       lit("/docs/"), seg, lit(s"/sub/page$p.html</loc>\n"),
@@ -274,25 +296,25 @@ object TextQueries {
     struct(bom.as("bom"), valid.as("valid_utf8"), charset.as("charset"))
   }
 
+  /** The parsed sitemap ENTRY TABLE (host, url, lastmod, priority,
+    * changefreq) — deterministic per-host sitemaps.org bodies through the
+    * real JDK DOM parser (sources.SitemapXml), shared by q_sitemap_ingest
+    * (discovery vs the frontier) and q_recrawl_schedule (lastmod vs the
+    * crawl ledger) the way frontierCandidates backs the frontier family.
+    * Parse cost is host-cardinality: one typed map over the source hosts.
+    */
   private[graft] def sitemapEntries(
       s: org.apache.spark.sql.SparkSession,
       d: String
   ): org.apache.spark.sql.DataFrame = {
     import s.implicits._
-    val hosts = documents(s, d)
-      .select(concat(lower(col("source")), lit(".example.com")).as("host"))
-      .distinct()
-    val entryXml: Seq[org.apache.spark.sql.Column] = (0 to 8).map(sitemapEntryXml)
-    val xml = concat(
-      lit("<?xml version=\"1.0\" encoding=\"UTF-8\"?>\n" +
-        "<!-- synthetic sitemap fixture -->\n" +
-        "<urlset xmlns=\"http://www.sitemaps.org/schemas/sitemap/0.9\">\n") +:
-        entryXml :+
+    val xml = urlset(
+      "<!-- synthetic sitemap fixture -->\n",
+      (0 to 8).map(sitemapEntryXml) :+
         concat(
           lit("  <url>\n    <loc>http://"), col("host"),
-          lit("/search?q=1&amp;x=2</loc>\n    <priority>0.9</priority>\n  </url>\n" +
-            "</urlset>\n")): _*)
-    hosts
+          lit("/search?q=1&amp;x=2</loc>\n    <priority>0.9</priority>\n  </url>\n")))
+    sourceHosts(s, d)
       .select(col("host"), xml.as("sitemap_xml"))
       .as[(String, String)]
       .map { case (h, x) => (h, graft.sources.SitemapXml.parse(x)) }
@@ -303,6 +325,20 @@ object TextQueries {
         col("e.priority").as("priority"), col("e.changefreq").as("changefreq"))
   }
 
+  /** A sitemaps.org `<urlset>` document: the XML declaration, `preamble`,
+    * then `entries` inside the namespaced envelope. Shared by the flat
+    * fixture ([[sitemapEntries]]) and q_sitemap_index's child documents.
+    */
+  private def urlset(
+      preamble: String,
+      entries: Seq[org.apache.spark.sql.Column]
+  ): org.apache.spark.sql.Column =
+    concat(
+      lit("<?xml version=\"1.0\" encoding=\"UTF-8\"?>\n" + preamble +
+        "<urlset xmlns=\"http://www.sitemaps.org/schemas/sitemap/0.9\">\n") +:
+        entries :+
+        lit("</urlset>\n"): _*)
+
   /** The robots fixture's host population: every frontier host (sources +
     * the external and CDN hosts the link fixture references).
     */
@@ -311,10 +347,7 @@ object TextQueries {
       d: String
   ): org.apache.spark.sql.DataFrame = {
     import s.implicits._
-    documents(s, d)
-      .select(concat(lower(col("source")), lit(".example.com")).as("host"))
-      .distinct()
-      .unionAll(Seq("ext.example.org", "cdn.example.net").toDF("host"))
+    sourceHosts(s, d).unionAll(Seq("ext.example.org", "cdn.example.net").toDF("host"))
   }
 
   /** Deterministic per-host robots.txt BODY (expects a `host` column) —
@@ -326,8 +359,6 @@ object TextQueries {
     * presence (absent ⇒ the consumer's default rate) and value.
     */
   private[graft] def robotsFixtureBody: org.apache.spark.sql.Column = {
-    def digit(i: Int) =
-      expr(s"locate(substring(md5(host), $i, 1), '0123456789abcdef') - 1")
     def line(t: String) = lit(t + "\n")
     def maybe(cond: org.apache.spark.sql.Column, t: String) =
       when(cond, lit(t + "\n")).otherwise(lit(""))
@@ -338,18 +369,87 @@ object TextQueries {
       line("User-agent: graftbot-images"), line("Disallow: /"), lit("\n"),
       line("User-agent: graftbot"),
       line("User-agent: otherbot"),
-      when(digit(6) < 12,
+      when(md5Digit("host", 6) < 12,
         concat(lit("Crawl-delay: "),
-          (lit(1) + pmod(digit(6), lit(5))).cast("int").cast("string"), lit("\n")))
+          (lit(1) + pmod(md5Digit("host", 6), lit(5))).cast("int").cast("string"), lit("\n")))
         .otherwise(lit("")),
       line("Allow:"),
       line("Disallow: /search"),
-      maybe(digit(1) < 9, "Disallow: /lib"),
-      maybe(digit(2) < 9, "Allow: /lib/p*.html$"),
-      maybe(digit(3) < 12, "Disallow: /docs/up"),
+      maybe(md5Digit("host", 1) < 9, "Disallow: /lib"),
+      maybe(md5Digit("host", 2) < 9, "Allow: /lib/p*.html$"),
+      maybe(md5Digit("host", 3) < 12, "Disallow: /docs/up"),
       line("Allow: /*.js$"), lit("\n"),
       line("User-agent: *"), line("Disallow: /"))
   }
+
+  /** q_robots_filter's per-host prefix rules `(host, rules)`: a row-local
+    * ≤4-element array of `prefix`/`allow` structs (no per-rule explode).
+    * Thresholds chosen against the fixture's md5 digits so every decision
+    * arm is EXERCISED, not just stated: ext.example.org (digits 3,8,2)
+    * gets both /lib AND /lib/p → its /lib/p*.html candidates are
+    * re-allowed through the longest match; cdn.example.net (8,13,2) gets
+    * /lib only → /lib.js disallowed; /docs/up splits the source hosts
+    * (digits 1,13,11,1). Shared by q_robots_filter and q_crawl_e2e, so the
+    * two rows cannot disagree on a verdict.
+    */
+  private def robotsPrefixRules(
+      s: org.apache.spark.sql.SparkSession,
+      d: String
+  ): org.apache.spark.sql.DataFrame = {
+    def rule(prefix: String, allow: Boolean, live: org.apache.spark.sql.Column) =
+      struct(lit(prefix).as("prefix"), lit(allow).as("allow"), live.as("live"))
+    robotsFixtureHosts(s, d).select(
+      col("host"),
+      filter(
+        array(
+          rule("/search", allow = false, lit(true)),
+          rule("/lib", allow = false, md5Digit("host", 1) < 9),
+          rule("/lib/p", allow = true, md5Digit("host", 2) < 9),
+          rule("/docs/up", allow = false, md5Digit("host", 3) < 12)),
+        r => r("live")).as("rules"))
+  }
+
+  /** Each robots fixture host's [[robotsFixtureBody]] through `parse`, as
+    * `(host, <name>)`: one typed map over the host table, the way a
+    * crawler parses a fetched robots.txt once per host.
+    */
+  private def parsedRobots[T: scala.reflect.runtime.universe.TypeTag](
+      s: org.apache.spark.sql.SparkSession,
+      d: String,
+      name: String
+  )(parse: String => T): org.apache.spark.sql.DataFrame = {
+    import s.implicits._
+    robotsFixtureHosts(s, d)
+      .select(col("host"), robotsFixtureBody.as("robots_txt"))
+      .as[(String, String)]
+      .map { case (h, txt) => (h, parse(txt)) }
+      .toDF("host", name)
+  }
+
+  /** The robots decision over the frontier candidates: the per-host
+    * `rules` (host, rules) BROADCAST-joined onto the candidates, each url's
+    * path extracted, and `elect(rules, path)` picking the best rule —
+    * [[robotsBestMatch]] or the native TextFunctions.robotsMatch. Returns
+    * (host, url, n_refs, rk, matched_rule, allowed). The join is LEFT: a
+    * candidate whose host has no robots entry passes as allowed (the
+    * robots default; its null rules elect a null best), where an inner
+    * join would silently DROP it from the fetch plan. Shared by
+    * q_robots_filter, q_robots_parse and q_crawl_e2e.
+    */
+  private def robotsDecision(
+      s: org.apache.spark.sql.SparkSession,
+      d: String,
+      rules: org.apache.spark.sql.DataFrame,
+      elect: (org.apache.spark.sql.Column, org.apache.spark.sql.Column) => org.apache.spark.sql.Column
+  ): org.apache.spark.sql.DataFrame =
+    frontierCandidates(s, d, 10)
+      .join(broadcast(rules), Seq("host"), "left")
+      .withColumn("path", regexp_extract(col("url"), urlPathRegex, 1))
+      .withColumn("best", elect(col("rules"), col("path")))
+      .select(
+        col("host"), col("url"), col("n_refs"), col("rk"),
+        col("best.prefix").as("matched_rule"),
+        coalesce(col("best.allow"), lit(true)).as("allowed"))
 
   /** Shared DuckDB restatement of [[frontierCandidates]] (the `r` CTE in
     * both frontier oracles): rollup + ledger filter + per-host rank.
@@ -401,6 +501,84 @@ object TextQueries {
       |    'http://cdn.example.net/lib.js',
       |    'cdn.example.net'
       |  FROM documents)""".stripMargin
+
+  /** [[sourceHosts]] in DuckDB. */
+  private val duckSourceHosts = "SELECT DISTINCT lower(source) || '.example.com' AS host FROM documents"
+
+  /** The `hosts` CTE: [[sourceHosts]]. */
+  private val duckSourceHostsCte = s"hosts AS (\n  $duckSourceHosts)"
+
+  /** The `hosts` CTE: [[robotsFixtureHosts]]. */
+  private val duckRobotsHostsCte =
+    s"hosts AS (\n  $duckSourceHosts\n  UNION ALL SELECT 'ext.example.org'\n  UNION ALL SELECT 'cdn.example.net')"
+
+  /** [[robotsPrefixRules]] as a `rules` CTE of (host, prefix, allow) rows. */
+  private val duckPrefixRulesCte: String =
+    s"""rules AS (
+       |  SELECT host, '/search' AS prefix, FALSE AS allow FROM hosts
+       |  UNION ALL
+       |  SELECT host, '/lib', FALSE FROM hosts
+       |  WHERE ${duckMd5Digit("host", 1)} < 9
+       |  UNION ALL
+       |  SELECT host, '/lib/p', TRUE FROM hosts
+       |  WHERE ${duckMd5Digit("host", 2)} < 9
+       |  UNION ALL
+       |  SELECT host, '/docs/up', FALSE FROM hosts
+       |  WHERE ${duckMd5Digit("host", 3)} < 12)""".stripMargin
+
+  /** The robots election after [[duckFrontierCte]]: `cand` (the capped
+    * frontier, each url with its path), the robots `hosts`, the given
+    * `rules` CTE, and `m`, every rule whose `matches` predicate holds for
+    * a candidate ranked longest prefix, then allow, then prefix (`mrk` 1
+    * is the best), projecting `cols` next to `c.url`.
+    */
+  private def duckRobotsElection(rulesCte: String, cols: String, matches: String): String =
+    s"""
+       |, cand AS (
+       |  SELECT host, url, n_refs, rk,
+       |         regexp_extract(url, '$urlPathRegex', 1) AS path
+       |  FROM r WHERE rk <= 10),
+       |$duckRobotsHostsCte,
+       |$rulesCte,
+       |m AS (
+       |  SELECT c.url, $cols,
+       |    row_number() OVER (PARTITION BY c.url
+       |      ORDER BY length(ru.prefix) DESC, ru.allow DESC, ru.prefix DESC) AS mrk
+       |  FROM cand c JOIN rules ru
+       |    ON ru.host = c.host AND $matches)""".stripMargin
+
+  /** [[robotsDecision]] in DuckDB over [[duckRobotsElection]]. */
+  private def duckRobotsDecision(rulesCte: String, matches: String): String =
+    duckLinkCte + duckFrontierCte + duckRobotsElection(rulesCte, "ru.prefix, ru.allow", matches) +
+      """,
+        |best AS (SELECT url, prefix AS matched_rule, allow FROM m WHERE mrk = 1)
+        |SELECT c.host, c.url, c.n_refs, c.rk, b.matched_rule,
+        |       COALESCE(b.allow, TRUE) AS allowed
+        |FROM cand c LEFT JOIN best b USING (url)
+        |ORDER BY c.host, c.rk""".stripMargin
+
+  /** The `hosts` and `ps` (entry index 0..8) CTEs the sitemap oracles
+    * cross-join.
+    */
+  private val duckSitemapHostsCte =
+    s"$duckSourceHostsCte,\nps AS (SELECT CAST(r.range AS INT) AS p FROM range(9) r),"
+
+  /** The `url` and `lastmod` of entry `p` on `host` ([[sitemapEntryXml]]). */
+  private val duckSitemapUrlLastmod: String =
+    s"""    'http://' || host || '/docs/' ||
+       |      CAST((${duckMd5Digit("host", 4)} + p) % 5 AS VARCHAR) ||
+       |      '/sub/page' || CAST(p AS VARCHAR) || '.html' AS url,
+       |    CASE WHEN p % 4 = 0 THEN NULL
+       |         ELSE '2024-01-0' || CAST(1 + p % 7 AS VARCHAR) END AS lastmod""".stripMargin
+
+  /** Every column of entry `p` on `host` ([[sitemapEntryXml]]). */
+  private val duckSitemapEntry: String =
+    duckSitemapUrlLastmod +
+      s""",
+         |    CASE WHEN p % 3 = 0 THEN NULL
+         |         ELSE CAST('0.' || CAST(5 + (p + ${duckMd5Digit("host", 5)}) % 5 AS VARCHAR) AS DOUBLE)
+         |         END AS priority,
+         |    CASE WHEN p % 2 = 0 THEN 'weekly' ELSE NULL END AS changefreq""".stripMargin
 
   /** DuckDB-side marker score, kept textually in lockstep with
     * TextFunctions.markerScore.
@@ -1709,88 +1887,13 @@ object TextQueries {
     // host-cardinality-sized, joined the same way; the match decision is
     // one row-local array filter + array_max(struct) — no window, no
     // second shuffle. Output = the full decision table a fetcher
-    // consumes (candidate + matched rule + verdict).
+    // consumes (candidate + matched rule + verdict): [[robotsDecision]]
+    // over [[robotsPrefixRules]].
     Q(
       "q_robots_filter",
-      (s, d) => {
-        import s.implicits._
-        def digit(i: Int) =
-          expr(s"locate(substring(md5(host), $i, 1), '0123456789abcdef') - 1")
-        def rule(prefix: String, allow: Boolean, live: org.apache.spark.sql.Column) =
-          struct(lit(prefix).as("prefix"), lit(allow).as("allow"), live.as("live"))
-        val cands = frontierCandidates(s, d, 10)
-        // Decision kernel factored as robotsBestMatch (hand-case spec'd in
-        // RetrievalSpec: longest wins, allow wins same-length ties, no
-        // match => null => allowed).
-        val rules = documents(s, d)
-          // lower(): candidate hosts come out of canonicalizeUrl lowercased;
-          // a mixed-case source would otherwise miss its own rules row.
-          .select(concat(lower(col("source")), lit(".example.com")).as("host"))
-          .distinct()
-          .unionAll(Seq("ext.example.org", "cdn.example.net").toDF("host"))
-          .select(
-            col("host"),
-            // Thresholds chosen against the fixture's md5 digits so every
-            // decision arm is EXERCISED, not just stated: ext.example.org
-            // (digits 3,8,2) gets both /lib AND /lib/p → its /lib/p*.html
-            // candidates are re-allowed through the longest match;
-            // cdn.example.net (8,13,2) gets /lib only → /lib.js disallowed;
-            // /docs/up splits the source hosts (digits 1,13,11,1).
-            filter(
-              array(
-                rule("/search", allow = false, lit(true)),
-                rule("/lib", allow = false, digit(1) < 9),
-                rule("/lib/p", allow = true, digit(2) < 9),
-                rule("/docs/up", allow = false, digit(3) < 12)),
-              r => r("live")).as("rules"))
-        val best = robotsBestMatch(col("rules"), col("path"))
-        // LEFT join: a candidate whose host has no robots entry must pass
-        // through as allowed (the robots default), exactly as the oracle's
-        // closing LEFT JOIN keeps it — an inner join would silently DROP
-        // such candidates from the fetch plan (null rules propagate through
-        // robotsBestMatch to a null best → allowed=true below).
-        cands
-          .join(broadcast(rules), Seq("host"), "left")
-          .withColumn("path", regexp_extract(col("url"), "^[a-z]+://[^/]+(/[^?#]*)", 1))
-          .withColumn("best", best)
-          .select(
-            col("host"), col("url"), col("n_refs"), col("rk"),
-            col("best.prefix").as("matched_rule"),
-            coalesce(col("best.allow"), lit(true)).as("allowed"))
-          .orderBy("host", "rk")
-      },
-      Some(duckLinkCte + duckFrontierCte +
-        """
-          |, cand AS (
-          |  SELECT host, url, n_refs, rk,
-          |         regexp_extract(url, '^[a-z]+://[^/]+(/[^?#]*)', 1) AS path
-          |  FROM r WHERE rk <= 10),
-          |hosts AS (
-          |  SELECT DISTINCT lower(source) || '.example.com' AS host FROM documents
-          |  UNION ALL SELECT 'ext.example.org'
-          |  UNION ALL SELECT 'cdn.example.net'),
-          |rules AS (
-          |  SELECT host, '/search' AS prefix, FALSE AS allow FROM hosts
-          |  UNION ALL
-          |  SELECT host, '/lib', FALSE FROM hosts
-          |  WHERE strpos('0123456789abcdef', substr(md5(host), 1, 1)) - 1 < 9
-          |  UNION ALL
-          |  SELECT host, '/lib/p', TRUE FROM hosts
-          |  WHERE strpos('0123456789abcdef', substr(md5(host), 2, 1)) - 1 < 9
-          |  UNION ALL
-          |  SELECT host, '/docs/up', FALSE FROM hosts
-          |  WHERE strpos('0123456789abcdef', substr(md5(host), 3, 1)) - 1 < 12),
-          |m AS (
-          |  SELECT c.url, ru.prefix, ru.allow,
-          |    row_number() OVER (PARTITION BY c.url
-          |      ORDER BY length(ru.prefix) DESC, ru.allow DESC, ru.prefix DESC) AS mrk
-          |  FROM cand c JOIN rules ru
-          |    ON ru.host = c.host AND starts_with(c.path, ru.prefix)),
-          |best AS (SELECT url, prefix AS matched_rule, allow FROM m WHERE mrk = 1)
-          |SELECT c.host, c.url, c.n_refs, c.rk, b.matched_rule,
-          |       COALESCE(b.allow, TRUE) AS allowed
-          |FROM cand c LEFT JOIN best b USING (url)
-          |ORDER BY c.host, c.rk""".stripMargin)
+      (s, d) =>
+        robotsDecision(s, d, robotsPrefixRules(s, d), robotsBestMatch).orderBy("host", "rk"),
+      Some(duckRobotsDecision(duckPrefixRulesCte, "starts_with(c.path, ru.prefix)"))
     ),
 
     // Robots filtering over PARSED robots.txt — the q_robots_filter chain
@@ -1821,64 +1924,28 @@ object TextQueries {
     Q(
       "q_robots_parse",
       (s, d) => {
-        import s.implicits._
-        val cands = frontierCandidates(s, d, 10)
-        val rules = robotsFixtureHosts(s, d)
-          .select(col("host"), robotsFixtureBody.as("robots_txt"))
-          .as[(String, String)]
-          .map { case (h, txt) =>
-            (h, graft.sources.RobotsTxt.parsedRulesFor(txt, "graftbot"))
-          }
-          .toDF("host", "rules")
+        val rules = parsedRobots(s, d, "rules")(graft.sources.RobotsTxt.parsedRulesFor(_, "graftbot"))
         // The NATIVE election kernel (one compiled loop + shared pattern
         // cache); the HOF form robotsBestMatchRx stays the reference —
         // RobotsTxtSpec pins all three kernels (Scala, HOF, native) to
         // identical elections over the same grid.
-        val best = TextFunctions.robotsMatch(col("rules"), col("path"))
-        cands
-          .join(broadcast(rules), Seq("host"), "left")
-          .withColumn("path", regexp_extract(col("url"), "^[a-z]+://[^/]+(/[^?#]*)", 1))
-          .withColumn("best", best)
-          .select(
-            col("host"), col("url"), col("n_refs"), col("rk"),
-            col("best.prefix").as("matched_rule"),
-            coalesce(col("best.allow"), lit(true)).as("allowed"))
-          .orderBy("host", "rk")
+        robotsDecision(s, d, rules, TextFunctions.robotsMatch).orderBy("host", "rk")
       },
-      Some(duckLinkCte + duckFrontierCte +
-        """
-          |, cand AS (
-          |  SELECT host, url, n_refs, rk,
-          |         regexp_extract(url, '^[a-z]+://[^/]+(/[^?#]*)', 1) AS path
-          |  FROM r WHERE rk <= 10),
-          |hosts AS (
-          |  SELECT DISTINCT lower(source) || '.example.com' AS host FROM documents
-          |  UNION ALL SELECT 'ext.example.org'
-          |  UNION ALL SELECT 'cdn.example.net'),
-          |rules AS (
-          |  SELECT host, '/search' AS prefix, FALSE AS allow, '^/search' AS rx FROM hosts
-          |  UNION ALL
-          |  SELECT host, '/lib', FALSE, '^/lib' FROM hosts
-          |  WHERE strpos('0123456789abcdef', substr(md5(host), 1, 1)) - 1 < 9
-          |  UNION ALL
-          |  SELECT host, '/lib/p*.html$', TRUE, '^/lib/p.*\.html$' FROM hosts
-          |  WHERE strpos('0123456789abcdef', substr(md5(host), 2, 1)) - 1 < 9
-          |  UNION ALL
-          |  SELECT host, '/docs/up', FALSE, '^/docs/up' FROM hosts
-          |  WHERE strpos('0123456789abcdef', substr(md5(host), 3, 1)) - 1 < 12
-          |  UNION ALL
-          |  SELECT host, '/*.js$', TRUE, '^/.*\.js$' FROM hosts),
-          |m AS (
-          |  SELECT c.url, ru.prefix, ru.allow,
-          |    row_number() OVER (PARTITION BY c.url
-          |      ORDER BY length(ru.prefix) DESC, ru.allow DESC, ru.prefix DESC) AS mrk
-          |  FROM cand c JOIN rules ru
-          |    ON ru.host = c.host AND regexp_matches(c.path, ru.rx)),
-          |best AS (SELECT url, prefix AS matched_rule, allow FROM m WHERE mrk = 1)
-          |SELECT c.host, c.url, c.n_refs, c.rk, b.matched_rule,
-          |       COALESCE(b.allow, TRUE) AS allowed
-          |FROM cand c LEFT JOIN best b USING (url)
-          |ORDER BY c.host, c.rk""".stripMargin)
+      Some(duckRobotsDecision(
+        raw"""rules AS (
+             |  SELECT host, '/search' AS prefix, FALSE AS allow, '^/search' AS rx FROM hosts
+             |  UNION ALL
+             |  SELECT host, '/lib', FALSE, '^/lib' FROM hosts
+             |  WHERE ${duckMd5Digit("host", 1)} < 9
+             |  UNION ALL
+             |  SELECT host, '/lib/p*.html$$', TRUE, '^/lib/p.*\.html$$' FROM hosts
+             |  WHERE ${duckMd5Digit("host", 2)} < 9
+             |  UNION ALL
+             |  SELECT host, '/docs/up', FALSE, '^/docs/up' FROM hosts
+             |  WHERE ${duckMd5Digit("host", 3)} < 12
+             |  UNION ALL
+             |  SELECT host, '/*.js$$', TRUE, '^/.*\.js$$' FROM hosts)""".stripMargin,
+        "regexp_matches(c.path, ru.rx)"))
     ),
 
     // Politeness scheduling from PARSED robots.txt — the fetch-rate input
@@ -1899,14 +1966,8 @@ object TextQueries {
     Q(
       "q_politeness_parsed",
       (s, d) => {
-        import s.implicits._
-        val delays = robotsFixtureHosts(s, d)
-          .select(col("host"), robotsFixtureBody.as("robots_txt"))
-          .as[(String, String)]
-          .map { case (h, txt) =>
-            (h, graft.sources.RobotsTxt.crawlDelayFor(txt, "graftbot"))
-          }
-          .toDF("host", "declared")
+        val delays =
+          parsedRobots(s, d, "declared")(graft.sources.RobotsTxt.crawlDelayFor(_, "graftbot"))
         frontierCandidates(s, d, 10)
           .join(broadcast(delays), Seq("host"), "left")
           .select(
@@ -1921,15 +1982,12 @@ object TextQueries {
           .orderBy("host", "rk")
       },
       Some(duckLinkCte + duckFrontierCte +
-        """
-          |, hosts AS (
-          |  SELECT DISTINCT lower(source) || '.example.com' AS host FROM documents
-          |  UNION ALL SELECT 'ext.example.org'
-          |  UNION ALL SELECT 'cdn.example.net'),
+        s"""
+          |, $duckRobotsHostsCte,
           |delays AS (
           |  SELECT host,
-          |    CASE WHEN strpos('0123456789abcdef', substr(md5(host), 6, 1)) - 1 < 12
-          |         THEN CAST(1 + (strpos('0123456789abcdef', substr(md5(host), 6, 1)) - 1) % 5 AS DOUBLE)
+          |    CASE WHEN ${duckMd5Digit("host", 6)} < 12
+          |         THEN CAST(1 + (${duckMd5Digit("host", 6)}) % 5 AS DOUBLE)
           |         ELSE NULL END AS declared
           |  FROM hosts),
           |c AS (SELECT host, url, rk FROM r WHERE rk <= 10)
@@ -1980,21 +2038,11 @@ object TextQueries {
           .orderBy("host", "fetch_rank")
       },
       Some(duckLinkCte + duckFrontierCte +
-        """
-          |, hosts AS (
-          |  SELECT DISTINCT lower(source) || '.example.com' AS host FROM documents),
-          |ps AS (SELECT CAST(r.range AS INT) AS p FROM range(9) r),
+        s"""
+          |, $duckSitemapHostsCte
           |sm AS (
           |  SELECT host,
-          |    'http://' || host || '/docs/' ||
-          |      CAST((strpos('0123456789abcdef', substr(md5(host), 4, 1)) - 1 + p) % 5 AS VARCHAR) ||
-          |      '/sub/page' || CAST(p AS VARCHAR) || '.html' AS url,
-          |    CASE WHEN p % 4 = 0 THEN NULL
-          |         ELSE '2024-01-0' || CAST(1 + p % 7 AS VARCHAR) END AS lastmod,
-          |    CASE WHEN p % 3 = 0 THEN NULL
-          |         ELSE CAST('0.' || CAST(5 + (p + strpos('0123456789abcdef', substr(md5(host), 5, 1)) - 1) % 5 AS VARCHAR) AS DOUBLE)
-          |         END AS priority,
-          |    CASE WHEN p % 2 = 0 THEN 'weekly' ELSE NULL END AS changefreq
+          |$duckSitemapEntry
           |  FROM hosts, ps
           |  UNION ALL
           |  SELECT host, 'http://' || host || '/search?q=1&x=2', NULL,
@@ -2033,9 +2081,7 @@ object TextQueries {
       "q_sitemap_index",
       (s, d) => {
         import s.implicits._
-        val hosts = documents(s, d)
-          .select(concat(lower(col("source")), lit(".example.com")).as("host"))
-          .distinct()
+        val hosts = sourceHosts(s, d)
         val idxXml = concat(
           lit("<?xml version=\"1.0\" encoding=\"UTF-8\"?>\n" +
             "<sitemapindex xmlns=\"http://www.sitemaps.org/schemas/sitemap/0.9\">\n") +:
@@ -2055,11 +2101,7 @@ object TextQueries {
             col("sm.loc").as("sitemap"),
             col("sm.lastmod").as("sitemap_lastmod"))
         val childBodies = (0 to 2).map { c =>
-          val body = concat(
-            lit("<?xml version=\"1.0\" encoding=\"UTF-8\"?>\n" +
-              "<urlset xmlns=\"http://www.sitemaps.org/schemas/sitemap/0.9\">\n") +:
-              (0 to 8).filter(_ % 3 == c).map(sitemapEntryXml) :+
-              lit("</urlset>\n"): _*)
+          val body = urlset("", (0 to 8).filter(_ % 3 == c).map(sitemapEntryXml))
           hosts.select(
             col("host"),
             concat(lit("http://"), col("host"), lit(s"/sitemap-$c.xml")).as("sitemap"),
@@ -2078,22 +2120,12 @@ object TextQueries {
           .join(entries, Seq("host", "sitemap"))
           .orderBy("host", "sitemap", "url")
       },
-      Some("""WITH hosts AS (
-             |  SELECT DISTINCT lower(source) || '.example.com' AS host FROM documents),
-             |ps AS (SELECT CAST(r.range AS INT) AS p FROM range(9) r),
+      Some(s"""WITH $duckSitemapHostsCte
              |e AS (
              |  SELECT host,
              |    'http://' || host || '/sitemap-' || CAST(p % 3 AS VARCHAR) || '.xml' AS sitemap,
              |    '2024-02-0' || CAST(p % 3 + 1 AS VARCHAR) AS sitemap_lastmod,
-             |    'http://' || host || '/docs/' ||
-             |      CAST((strpos('0123456789abcdef', substr(md5(host), 4, 1)) - 1 + p) % 5 AS VARCHAR) ||
-             |      '/sub/page' || CAST(p AS VARCHAR) || '.html' AS url,
-             |    CASE WHEN p % 4 = 0 THEN NULL
-             |         ELSE '2024-01-0' || CAST(1 + p % 7 AS VARCHAR) END AS lastmod,
-             |    CASE WHEN p % 3 = 0 THEN NULL
-             |         ELSE CAST('0.' || CAST(5 + (p + strpos('0123456789abcdef', substr(md5(host), 5, 1)) - 1) % 5 AS VARCHAR) AS DOUBLE)
-             |         END AS priority,
-             |    CASE WHEN p % 2 = 0 THEN 'weekly' ELSE NULL END AS changefreq
+             |$duckSitemapEntry
              |  FROM hosts, ps)
              |SELECT host, sitemap, sitemap_lastmod, url, lastmod, priority, changefreq
              |FROM e ORDER BY host, sitemap, url""".stripMargin)
@@ -2125,23 +2157,19 @@ object TextQueries {
     Q(
       "q_redirect_resolve",
       (s, d) => {
-        val hosts = documents(s, d)
-          .select(concat(lower(col("source")), lit(".example.com")).as("host"))
-          .distinct()
         def u(path: String) = concat(lit("http://"), col("host"), lit(path))
         val shapes = Seq(
           ("/r/0", "/r/1"), ("/r/1", "/r/2"), ("/r/2", "/final.html"),
           ("/solo", "/final2.html"),
           ("/loop/a", "/loop/b"), ("/loop/b", "/loop/a"))
-        val edges = hosts
+        val edges = sourceHosts(s, d)
           .select(explode(array(shapes.map { case (a, b) =>
             struct(u(a).as("src"), u(b).as("dst"))
           }: _*)).as("e"))
           .select(col("e.src").as("src"), col("e.dst").as("dst"))
         graft.operators.EtlOps.resolveRedirects(edges, maxDepth = 8).orderBy("url")
       },
-      Some("""WITH RECURSIVE hosts AS (
-             |  SELECT DISTINCT lower(source) || '.example.com' AS host FROM documents),
+      Some(s"""WITH RECURSIVE $duckSourceHostsCte,
              |e AS (
              |  SELECT 'http://' || host || s AS src, 'http://' || host || t AS dst
              |  FROM hosts, (VALUES ('/r/0', '/r/1'), ('/r/1', '/r/2'),
@@ -2185,42 +2213,18 @@ object TextQueries {
     Q(
       "q_crawl_e2e",
       (s, d) => {
-        import s.implicits._
-        def hostDigit(i: Int) =
-          expr(s"locate(substring(md5(host), $i, 1), '0123456789abcdef') - 1")
-        def urlDigit(i: Int) =
-          expr(s"locate(substring(md5(url), $i, 1), '0123456789abcdef') - 1")
-        def rule(prefix: String, allow: Boolean, live: org.apache.spark.sql.Column) =
-          struct(lit(prefix).as("prefix"), lit(allow).as("allow"), live.as("live"))
-        val cands = frontierCandidates(s, d, 10)
-        // Permission: q_robots_filter's rules fixture verbatim (same
-        // thresholds, so the two rows can never disagree on a verdict).
-        val rules = documents(s, d)
-          .select(concat(lower(col("source")), lit(".example.com")).as("host"))
-          .distinct()
-          .unionAll(Seq("ext.example.org", "cdn.example.net").toDF("host"))
-          .select(
-            col("host"),
-            filter(
-              array(
-                rule("/search", allow = false, lit(true)),
-                rule("/lib", allow = false, hostDigit(1) < 9),
-                rule("/lib/p", allow = true, hostDigit(2) < 9),
-                rule("/docs/up", allow = false, hostDigit(3) < 12)),
-              r => r("live")).as("rules"))
-        val allowed = cands
-          .join(broadcast(rules), Seq("host"), "left")
-          .withColumn("path", regexp_extract(col("url"), "^[a-z]+://[^/]+(/[^?#]*)", 1))
-          .filter(coalesce(robotsBestMatch(col("rules"), col("path"))("allow"), lit(true)))
+        // Permission: q_robots_filter's decision over its rules fixture.
+        val allowed = robotsDecision(s, d, robotsPrefixRules(s, d), robotsBestMatch)
+          .filter(col("allowed"))
           .select("host", "url", "n_refs")
         // Fetch: urls with md5 digit 1 < 8 return a 301 whose Location is
         // messy on purpose; the real canonicalizer cleans it.
         val loc = concat(
           lit("HTTP://"), upper(col("host")), lit("/dest/"),
-          pmod(urlDigit(2), lit(4)).cast("int").cast("string"),
+          pmod(md5Digit("url", 2), lit(4)).cast("int").cast("string"),
           lit(".html?utm_source=crawl&page="),
-          pmod(urlDigit(3), lit(2)).cast("int").cast("string"))
-        val cur1 = when(urlDigit(1) < 8, graft.functions.UrlFunctions.canonicalizeUrl(loc))
+          pmod(md5Digit("url", 3), lit(2)).cast("int").cast("string"))
+        val cur1 = when(md5Digit("url", 1) < 8, graft.functions.UrlFunctions.canonicalizeUrl(loc))
           .otherwise(col("url"))
         // Hop 2: landing pages /dest/0.html and /dest/1.html moved again.
         val finalUrl = when(
@@ -2233,43 +2237,19 @@ object TextQueries {
           .orderBy("host", "final_url")
       },
       Some(duckLinkCte + duckFrontierCte +
-        """
-          |, cand AS (
-          |  SELECT host, url, n_refs, rk,
-          |         regexp_extract(url, '^[a-z]+://[^/]+(/[^?#]*)', 1) AS path
-          |  FROM r WHERE rk <= 10),
-          |hosts AS (
-          |  SELECT DISTINCT lower(source) || '.example.com' AS host FROM documents
-          |  UNION ALL SELECT 'ext.example.org'
-          |  UNION ALL SELECT 'cdn.example.net'),
-          |rules AS (
-          |  SELECT host, '/search' AS prefix, FALSE AS allow FROM hosts
-          |  UNION ALL
-          |  SELECT host, '/lib', FALSE FROM hosts
-          |  WHERE strpos('0123456789abcdef', substr(md5(host), 1, 1)) - 1 < 9
-          |  UNION ALL
-          |  SELECT host, '/lib/p', TRUE FROM hosts
-          |  WHERE strpos('0123456789abcdef', substr(md5(host), 2, 1)) - 1 < 9
-          |  UNION ALL
-          |  SELECT host, '/docs/up', FALSE FROM hosts
-          |  WHERE strpos('0123456789abcdef', substr(md5(host), 3, 1)) - 1 < 12),
-          |m AS (
-          |  SELECT c.url, ru.allow,
-          |    row_number() OVER (PARTITION BY c.url
-          |      ORDER BY length(ru.prefix) DESC, ru.allow DESC, ru.prefix DESC) AS mrk
-          |  FROM cand c JOIN rules ru
-          |    ON ru.host = c.host AND starts_with(c.path, ru.prefix)),
+        duckRobotsElection(duckPrefixRulesCte, "ru.allow", "starts_with(c.path, ru.prefix)") +
+        raw""",
           |alw AS (
           |  SELECT c.host, c.url, c.n_refs
           |  FROM cand c LEFT JOIN (SELECT url, allow FROM m WHERE mrk = 1) b USING (url)
           |  WHERE COALESCE(b.allow, TRUE)),
           |d1 AS (
           |  SELECT host, url, n_refs,
-          |    CASE WHEN strpos('0123456789abcdef', substr(md5(url), 1, 1)) - 1 < 8
+          |    CASE WHEN ${duckMd5Digit("url", 1)} < 8
           |         THEN 'http://' || host || '/dest/'
-          |           || CAST((strpos('0123456789abcdef', substr(md5(url), 2, 1)) - 1) % 4 AS VARCHAR)
+          |           || CAST((${duckMd5Digit("url", 2)}) % 4 AS VARCHAR)
           |           || '.html?page='
-          |           || CAST((strpos('0123456789abcdef', substr(md5(url), 3, 1)) - 1) % 2 AS VARCHAR)
+          |           || CAST((${duckMd5Digit("url", 3)}) % 2 AS VARCHAR)
           |         ELSE url END AS cur
           |  FROM alw),
           |d2 AS (
@@ -2422,7 +2402,7 @@ object TextQueries {
         val fetchedAt = concat(
           lit("2024-01-0"),
           (lit(1) + pmod(
-            expr("locate(substring(md5(url), 2, 1), '0123456789abcdef') - 1"),
+            md5Digit("url", 2),
             lit(7))).cast("string"))
         sm.withColumn("fetched_at", when(fetched, fetchedAt))
           .select(
@@ -2434,23 +2414,17 @@ object TextQueries {
           .withColumn("needs_fetch", col("reason").isin("new", "stale"))
           .orderBy("host", "url")
       },
-      Some("""WITH hosts AS (
-             |  SELECT DISTINCT lower(source) || '.example.com' AS host FROM documents),
-             |ps AS (SELECT CAST(r.range AS INT) AS p FROM range(9) r),
+      Some(s"""WITH $duckSitemapHostsCte
              |sm AS (
              |  SELECT host,
-             |    'http://' || host || '/docs/' ||
-             |      CAST((strpos('0123456789abcdef', substr(md5(host), 4, 1)) - 1 + p) % 5 AS VARCHAR) ||
-             |      '/sub/page' || CAST(p AS VARCHAR) || '.html' AS url,
-             |    CASE WHEN p % 4 = 0 THEN NULL
-             |         ELSE '2024-01-0' || CAST(1 + p % 7 AS VARCHAR) END AS lastmod
+             |$duckSitemapUrlLastmod
              |  FROM hosts, ps
              |  UNION ALL
              |  SELECT host, 'http://' || host || '/search?q=1&x=2', NULL FROM hosts),
              |led AS (
              |  SELECT host, url, lastmod,
              |    CASE WHEN substr(md5(url), 1, 1) IN ('0', '1', '2')
-             |         THEN '2024-01-0' || CAST(1 + (strpos('0123456789abcdef', substr(md5(url), 2, 1)) - 1) % 7 AS VARCHAR)
+             |         THEN '2024-01-0' || CAST(1 + (${duckMd5Digit("url", 2)}) % 7 AS VARCHAR)
              |         ELSE NULL END AS fetched_at
              |  FROM sm),
              |cls AS (

@@ -31,9 +31,6 @@ object SimilarityFunctions {
   def bind(e: Column)(f: Column => Column): Column =
     element_at(transform(array(e), v => f(v)), 1)
 
-  /** Whitespace tokens, evaluated once per row. */
-  def tokens(text: Column): Column = split(trim(text), "\\s+")
-
   /** Distinct word n-gram shingles of a text column, first-occurrence order.
     * Documents with fewer than n tokens yield an empty array.
     */

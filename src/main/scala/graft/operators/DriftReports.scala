@@ -26,8 +26,9 @@ import org.apache.spark.sql.functions._
   * order-free.
   *
   * Degenerate input: a report that needs both halves of a type gives
-  * NULL for it rather than a made-up number (KS and its alert when a type
-  * has n_ref = 0 or n_cur = 0; the χ² alert outside its df table). χ²
+  * NULL for it rather than a made-up number (PSI, KS and their alerts
+  * when a type has n_ref = 0 or n_cur = 0; the χ² alert outside its df
+  * table). χ²
   * over a whole empty half fails loudly on both engines instead.
   */
 object DriftReports {
@@ -107,7 +108,8 @@ object DriftReports {
     * and `aggs` aggregates per type next to the sum.
     *
     * Returns `event_type, n_ref, n_cur, psi_fp`, then `aggs`, then `psi`
-    * (6 dp) and `drift_alert` (PSI > 0.2).
+    * (6 dp) and `drift_alert` (PSI > 0.2), both NULL for a type with an
+    * empty half: smoothing alone would give it a large PSI.
     */
   def psi(
       types: DataFrame,
@@ -136,8 +138,8 @@ object DriftReports {
       .agg(
         max(col("n_ref")).as("n_ref"),
         max(col("n_cur")).as("n_cur") +: sum(col("term_fp")).as("psi_fp") +: aggs: _*)
-      .withColumn("psi", round(col("psi_fp").cast("double") / lit(1.0e12), 6))
-      .withColumn("drift_alert", col("psi_fp") > lit(200000000000L))
+      .withColumn("psi", when(bothHalves, round(col("psi_fp").cast("double") / lit(1.0e12), 6)))
+      .withColumn("drift_alert", when(bothHalves, col("psi_fp") > lit(200000000000L)))
   }
 
   private def bothHalves: Column = col("n_ref") > 0 && col("n_cur") > 0
@@ -335,10 +337,16 @@ object DriftReports {
          |      - CAST(SUM($c.c_cur) OVER (PARTITION BY $c.event_type ORDER BY $order
          |               ROWS UNBOUNDED PRECEDING) AS DOUBLE) / CAST(t.n_cur AS DOUBLE)) END AS $name""".stripMargin
 
+    /** `e` for a type with both halves (`n_ref`, `n_cur` in scope), else
+      * NULL.
+      */
+    def bothHalves(e: String): String = s"CASE WHEN n_ref > 0 AND n_cur > 0 THEN $e END"
+
     /** [[ksAlert]] on the raw statistic `d`. */
     def ksAlert(d: String): String =
-      s"""CASE WHEN n_ref > 0 AND n_cur > 0 THEN $d > 1.358 * sqrt(CAST(n_ref + n_cur AS DOUBLE)
-         |                         / CAST(n_ref * n_cur AS DOUBLE)) END""".stripMargin
+      bothHalves(
+        s"""$d > 1.358 * sqrt(CAST(n_ref + n_cur AS DOUBLE)
+           |                         / CAST(n_ref * n_cur AS DOUBLE))""".stripMargin)
 
     /** The q_drift_psi report: split, exact decile cuts, bin counts, the
       * filled K × 10 domain and the fixed-point PSI. `termCols` adds
@@ -377,8 +385,8 @@ object DriftReports {
            |      * 1.0e12) AS BIGINT) AS term_fp$termCols
            |  FROM filled f JOIN totals t USING (event_type))
            |SELECT event_type, n_ref, n_cur,
-           |  round(CAST(CAST(SUM(term_fp) AS BIGINT) AS DOUBLE) / 1.0e12, 6) AS psi,
-           |  CAST(SUM(term_fp) AS BIGINT) > 200000000000 AS $alert$selectCols
+           |  ${bothHalves("round(CAST(CAST(SUM(term_fp) AS BIGINT) AS DOUBLE) / 1.0e12, 6)")} AS psi,
+           |  ${bothHalves("CAST(SUM(term_fp) AS BIGINT) > 200000000000")} AS $alert$selectCols
            |FROM terms GROUP BY 1, 2, 3 ORDER BY event_type""".stripMargin
 
     /** The q_drift_ks report: split, per-(type, value) counts, the

@@ -151,8 +151,6 @@ object SourceRegistry {
       java.nio.charset.StandardCharsets.UTF_8)
 
   def load(path: String): Map[String, SourceConfig] = parse(read(path))
-
-  def loadWarehouse(path: String): Option[WarehouseConfig] = warehouse(read(path))
 }
 
 /** Warehouse-target coordinates — the reference externalizes these in

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -23,25 +23,75 @@ object StagingSink {
   def stage(df: DataFrame, stagingPath: String): Unit =
     df.write.mode("overwrite").parquet(stagingPath)
 
-  private def exists(spark: SparkSession, path: String): Boolean = {
+  private[graft] def exists(spark: SparkSession, path: String): Boolean = {
     val p = new Path(path)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
-  /** Whether a main table exists at `path` — the first-load check the
-    * streaming CDC upsert needs before its stale-guard scan of main.
+  /** Where [[swapIn]] parks the table it replaces. */
+  private def oldPath(p: Path): Path = new Path(p.toString + "__old")
+
+  /** Entry-time recovery for the whole-table swap, shared by compact()
+    * and the unpartitioned upsert so each recovers the other's crash: a
+    * leftover `__old` with no main means a swap died between its renames
+    * — the old dir IS the table, so restore it before anything decides
+    * on main's absence; a leftover `__old` beside main is a superseded
+    * copy (crash after the swap, before cleanup) — drop it. A stale
+    * rewrite at `tmpP` is dropped too.
     */
-  private[graft] def mainExists(spark: SparkSession, path: String): Boolean =
-    exists(spark, path)
+  private def recoverSwap(fs: FileSystem, p: Path, tmpP: Path): Unit = {
+    val oldP = oldPath(p)
+    if (fs.exists(oldP) && !fs.exists(p)) require(fs.rename(oldP, p), s"recovery rename $oldP -> $p failed")
+    else if (fs.exists(oldP)) require(fs.delete(oldP, true), s"could not delete stale $oldP")
+    if (fs.exists(tmpP)) require(fs.delete(tmpP, true), s"could not delete stale $tmpP")
+  }
+
+  /** Swaps the rewrite at `tmpP` in as the table at `p` with checked
+    * renames (Hadoop rename signals failure by RETURNING false): main
+    * moves to `__old`, the rewrite moves in (rolled back if that fails),
+    * and only then is `__old` dropped — the table is never deleted until
+    * its replacement is in place.
+    */
+  private def swapIn(fs: FileSystem, tmpP: Path, p: Path): Unit = {
+    val oldP = oldPath(p)
+    require(fs.rename(p, oldP), s"rename $p -> $oldP failed; table untouched")
+    if (!fs.rename(tmpP, p)) {
+      require(fs.rename(oldP, p), s"rollback rename $oldP -> $p failed — table is at $oldP")
+      throw new IllegalStateException(s"rename $tmpP -> $p failed; rolled back")
+    }
+    fs.delete(oldP, true) // best-effort; recoverSwap handles leftovers
+  }
+
+  /** The leaf partition directories under `root` (every nested
+    * `name=value` level), each as its directory names (e.g.
+    * `dt=2024-01-01`, `hour=3`) and its files' bytes. A dir with no
+    * `name=value` children is a leaf, so an unpartitioned root is one
+    * leaf with no names. Driver-side metadata walk, O(partitions) — the
+    * same listing partition discovery performs.
+    */
+  private def leafPartitions(fs: FileSystem, root: Path): Seq[(Seq[String], Long)] = {
+    def walk(dir: Path, names: Seq[String]): Seq[(Seq[String], Long)] = {
+      val st = fs.listStatus(dir).toSeq
+      val dirs = st.filter(s => s.isDirectory && s.getPath.getName.contains("="))
+      if (dirs.isEmpty) Seq(names -> st.filter(_.isFile).map(_.getLen).sum)
+      else dirs.flatMap(d => walk(d.getPath, names :+ d.getPath.getName))
+    }
+    walk(root, Nil)
+  }
+
+  /** The relative paths of `root`'s leaf partition directories, e.g.
+    * `dt=2024-01-01/hour=3`; none for an unpartitioned root.
+    */
+  private def leafPartitionDirs(fs: FileSystem, root: Path): Seq[String] =
+    leafPartitions(fs, root).collect { case (names, _) if names.nonEmpty => names.mkString("/") }
 
   /** Compact a parquet table's small files: incremental loads append one
     * file per batch-partition, and a year of hourly merges leaves main as
     * thousands of KB-sized files whose open/footer costs dominate every
     * scan. Rewrites to ceil(bytes / targetFileBytes) files via
-    * repartition, then swaps directories with checked renames (write to
-    * `<path>__compact`, move main to `<path>__old`, move the rewrite in,
-    * drop `__old`); a crash between the renames is recovered on the next
-    * call — the table is never deleted until its replacement is in place.
+    * repartition into `<path>__compact`, then swaps it in ([[swapIn]]); a
+    * crash between the renames is recovered on the next call
+    * ([[recoverSwap]]).
     * A Hive-partitioned main is detected automatically (every `name=value`
     * directory level) and rewritten with its layout — each partition gets
     * its own salt range sized from its OWN bytes (one metadata walk, the
@@ -69,34 +119,17 @@ object StagingSink {
   ): Int = {
     val p = new Path(path)
     val tmpP = new Path(path + "__compact")
-    val oldP = new Path(path + "__old")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // Crash recovery: a leftover __old with no main means a previous
-    // compaction died between its two renames — the old dir IS the table;
-    // restore it before anything else. A leftover __old alongside main is
-    // a superseded copy (crash after the swap, before cleanup) — drop it.
-    if (fs.exists(oldP) && !fs.exists(p)) require(fs.rename(oldP, p), s"recovery rename $oldP -> $p failed")
-    if (fs.exists(oldP)) require(fs.delete(oldP, true), s"could not delete stale $oldP")
-    if (fs.exists(tmpP)) require(fs.delete(tmpP, true), s"could not delete stale $tmpP")
+    recoverSwap(fs, p, tmpP)
 
     // A Hive-partitioned main must be rewritten partitioned, or the next
     // partitioned append produces conflicting directory depths — detect
     // the FULL layout (all `name=value` levels, e.g. date=/hour=) rather
-    // than trusting the caller to remember, and record each leaf
-    // partition's VALUES and BYTES while walking so file sizing is
-    // per-partition (same listings partition discovery performs anyway).
-    def walk(dir: Path, values: Seq[String]): (Seq[String], Seq[(Seq[String], Long)]) = {
-      val st = fs.listStatus(dir).toSeq
-      val dirs = st.filter(s => s.isDirectory && s.getPath.getName.contains("="))
-      if (dirs.isEmpty)
-        (Nil, Seq(values -> st.filter(_.isFile).map(_.getLen).sum))
-      else {
-        val level = dirs.head.getPath.getName.takeWhile(_ != '=')
-        val below = dirs.map(d => walk(d.getPath, values :+ d.getPath.getName.dropWhile(_ != '=').tail))
-        (level +: below.head._1, below.flatMap(_._2))
-      }
-    }
-    val (walked, leaves) = walk(p, Nil)
+    // than trusting the caller to remember, and keep each leaf
+    // partition's VALUES and BYTES so file sizing is per-partition.
+    val found = leafPartitions(fs, p) // never empty: an unpartitioned root is its one leaf
+    val walked = found.head._1.map(_.takeWhile(_ != '='))
+    val leaves = found.map { case (names, b) => (names.map(_.dropWhile(_ != '=').tail), b) }
     val detected = if (partitionCols.nonEmpty) partitionCols else walked
 
     val bytes = fs.getContentSummary(p).getLength
@@ -147,32 +180,8 @@ object StagingSink {
     val df = if (effectiveSort.nonEmpty) df0.sortWithinPartitions(effectiveSort: _*) else df0
     val writer = df.write.mode("overwrite")
     (if (detected.nonEmpty) writer.partitionBy(detected: _*) else writer).parquet(tmpP.toString)
-
-    // Hadoop rename signals failure by RETURNING false — check both, and
-    // never delete the old copy until the new one is in place.
-    require(fs.rename(p, oldP), s"rename $p -> $oldP failed; table untouched")
-    if (!fs.rename(tmpP, p)) {
-      require(fs.rename(oldP, p), s"rollback rename $oldP -> $p failed — table is at $oldP")
-      throw new IllegalStateException(s"rename $tmpP -> $p failed; rolled back")
-    }
-    fs.delete(oldP, true) // best-effort; recovery above handles leftovers
+    swapIn(fs, tmpP, p)
     nFiles
-  }
-
-  /** The relative paths of a partitioned table's leaf partition
-    * directories (every nested `name=value` level), e.g. `dt=2024-01-01`
-    * or `dt=2024-01-01/hour=3`. A dir with no `name=value` children is a
-    * leaf. Driver-side metadata walk, O(partitions) — the same listing
-    * partition discovery performs.
-    */
-  private def leafPartitionDirs(fs: org.apache.hadoop.fs.FileSystem, root: Path): Seq[String] = {
-    def walk(dir: Path, rel: Seq[String]): Seq[Seq[String]] = {
-      val dirs = fs.listStatus(dir).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.contains("="))
-      if (dirs.isEmpty) { if (rel.isEmpty) Nil else Seq(rel) }
-      else dirs.flatMap(d => walk(d.getPath, rel :+ d.getPath.getName))
-    }
-    walk(root, Nil).map(_.mkString("/"))
   }
 
   /** The distinct partition values of main rows whose business key matches
@@ -226,15 +235,11 @@ object StagingSink {
     * column-pruned key scan of main (keys + partition values only; the
     * staged side broadcasts). That scan is skipped when it provably
     * cannot matter (`partitionCols ⊆ keyCols`: equal keys force equal
-    * partition values) or when the caller asserts the functional
-    * dependency key → partition with `stablePartitionKeys = true` (the
-    * usual date-partitioned warehouse, where the partition column is
-    * derived from the immutable business date). Untouched history is
-    * never read or written — except by that opt-out-able key scan.
+    * partition values). Untouched history is never written, and read only
+    * by that key scan.
     *
     * An unpartitioned main is a full rewrite through a temp dir with the
-    * same checked-rename swap compact() uses (main is never deleted until
-    * its replacement is in place; a crash between the renames leaves
+    * swap compact() uses ([[swapIn]]; a crash between the renames leaves
     * `__old` as the table, recovered on the next upsert).
     */
   def upsertToMain(
@@ -243,12 +248,10 @@ object StagingSink {
       mainPath: String,
       keyCols: Seq[String],
       clock: Column = current_timestamp(),
-      partitionCols: Seq[String] = Nil,
-      stablePartitionKeys: Boolean = false
+      partitionCols: Seq[String] = Nil
   ): Unit = {
     val p = new Path(mainPath)
     val tmpP = new Path(mainPath + "__upsert")
-    val oldP = new Path(mainPath + "__old")
     // The partitioned swap parks touched dirs under its OWN suffix, not
     // __old: compact()'s recovery treats a __old alongside main as a
     // superseded whole-table copy and DELETES it — if the partitioned
@@ -257,17 +260,10 @@ object StagingSink {
     // __parked has exactly one owner and one meaning.
     val parkP = new Path(mainPath + "__parked")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // Crash recovery FIRST, before the exists check decides anything: a
-    // leftover __old with no main means a previous swap died between its
-    // renames — the old dir IS the table, and treating its absence as
-    // "first load" would clobber it.
-    if (fs.exists(oldP) && !fs.exists(p))
-      require(fs.rename(oldP, p), s"recovery rename $oldP -> $p failed")
-    else if (fs.exists(oldP))
-      // Superseded whole-table copy from a crash after the unpartitioned
-      // swap, before cleanup — same protocol (and safe mutual recovery)
-      // as compact().
-      require(fs.delete(oldP, true), s"could not delete stale $oldP")
+    // Crash recovery FIRST, before the exists check decides anything:
+    // treating a crashed swap's missing main as "first load" would
+    // clobber the table parked at __old.
+    recoverSwap(fs, p, tmpP)
     // Partitioned-swap recovery: __parked holds the moved-out copies of a
     // swap that died mid-flight. Restore any leaf main lacks (its
     // replacement never landed — conservative: never lose survivor rows;
@@ -284,7 +280,6 @@ object StagingSink {
       }
       require(fs.delete(parkP, true), s"could not delete recovered $parkP")
     }
-    if (fs.exists(tmpP)) require(fs.delete(tmpP, true), s"could not delete stale $tmpP")
 
     val staged0 = ParquetRead.load(spark, stagingPath)
     if (staged0.isEmpty) return
@@ -297,7 +292,7 @@ object StagingSink {
 
     if (partitionCols.nonEmpty) {
       val stagedParts = staged.select(partitionCols.map(col): _*).distinct().collect()
-      val keysPinPartition = partitionCols.forall(keyCols.contains) || stablePartitionKeys
+      val keysPinPartition = partitionCols.forall(keyCols.contains)
       val touched =
         if (keysPinPartition) stagedParts
         else
@@ -355,12 +350,7 @@ object StagingSink {
       val survivors = ParquetRead.load(spark, mainPath)
         .join(staged.select(keyCols.map(col): _*), keyCols, "left_anti")
       writeOut(survivors.unionByName(staged), tmpP.toString)
-      require(fs.rename(p, oldP), s"rename $p -> $oldP failed; table untouched")
-      if (!fs.rename(tmpP, p)) {
-        require(fs.rename(oldP, p), s"rollback rename $oldP -> $p failed — table is at $oldP")
-        throw new IllegalStateException(s"rename $tmpP -> $p failed; rolled back")
-      }
-      fs.delete(oldP, true)
+      swapIn(fs, tmpP, p)
     }
   }
 

@@ -271,7 +271,7 @@ object StreamingJobs {
       .agg(max(struct((seqCol +: payload.filterNot(_ == seqCol)).map(col): _*)).as("__m"))
       .select(keyCols.map(col) ++ payload.map(c => col(s"__m.$c")): _*)
     val guarded =
-      if (!graft.sources.StagingSink.mainExists(spark, mainPath)) latest
+      if (!graft.sources.StagingSink.exists(spark, mainPath)) latest
       else {
         val matchedMaxSeq = ParquetRead.load(spark, mainPath)
           .select((keyCols :+ seqCol).map(col): _*)

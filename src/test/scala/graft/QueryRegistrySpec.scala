@@ -231,6 +231,24 @@ class QueryRegistrySpec extends AnyFunSuite with SparkSpec {
       assert(got("r") == ((2L, 0L, null, null)), name)
       assert(got("a")._4 == false, name)
     }
+    // q_drift_ks_approx's band flags follow KS: NULL on the empty half.
+    val flags = QueryRegistry.queries("q_drift_ks_approx")(spark, dir.toString).collect()
+      .map(r => r.getAs[String]("event_type") ->
+        ((r.getAs[Any]("binned_le_exact"), r.getAs[Any]("gap_in_band"))))
+      .toMap
+    assert(flags == Map("a" -> ((true, true)), "r" -> ((null, null))))
+    // PSI and its alert follow the same rule: smoothing alone would give
+    // 'r' a large PSI with no current data at all.
+    for ((name, alert) <- Seq(
+        ("q_drift_psi", "drift_alert"),
+        ("q_drift_psi_approx", "drift_alert"),
+        ("q_stream_drift", "drift_alert"),
+        ("q_stream_drift_ks", "psi_alert"))) {
+      val got = byType(name, "psi", alert)
+      assert(got.keySet == Set("a", "r"), name)
+      assert(got("r") == ((2L, 0L, null, null)), name)
+      assert(got("a")._3 != null && got("a")._4 != null, name)
+    }
   }
 
   test("pack_context shards respect the budget and are contiguous per stream") {

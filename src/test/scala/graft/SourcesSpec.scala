@@ -345,6 +345,37 @@ class SourcesSpec extends AnyFunSuite with SparkSpec {
     assert(spark.read.parquet(main).count() == 5, "crashed-swap leftover must be recovered, not clobbered")
   }
 
+  test("unpartitioned upsert recovers a crashed swap: __old without main is restored, beside main dropped") {
+    val base = Files.createTempDirectory("upsert_recover").toString
+    val staging = s"$base/staging"
+    val main = s"$base/main"
+    val old = s"${main}__old"
+    val t0 = lit("2026-01-01 00:00:00").cast("timestamp")
+    val t1 = lit("2026-02-01 00:00:00").cast("timestamp")
+    val fs = new org.apache.hadoop.fs.Path(main).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def ids: Set[Long] = spark.read.parquet(main).select("id").as[Long].collect().toSet
+
+    StagingSink.stage(Seq((1L, "a"), (2L, "b")).toDF("id", "k"), staging)
+    StagingSink.mergeToMain(spark, staging, main, Seq("id"), t0)
+
+    // A swap that died between its renames: main sits at __old, no main.
+    // It is the table, so the next upsert restores it before merging.
+    require(fs.rename(new org.apache.hadoop.fs.Path(main), new org.apache.hadoop.fs.Path(old)))
+    StagingSink.stage(Seq((3L, "c")).toDF("id", "k"), staging)
+    StagingSink.upsertToMain(spark, staging, main, Seq("id"), t1)
+    assert(ids == Set(1L, 2L, 3L), "an __old left without main must be restored")
+    assert(!new java.io.File(old).exists())
+
+    // A swap that died after its renames, before cleanup: __old beside
+    // main is a superseded copy, dropped without reading it.
+    StagingSink.stage(Seq((9L, "stale")).toDF("id", "k"), s"$base/stale")
+    StagingSink.mergeToMain(spark, s"$base/stale", old, Seq("id"), t0)
+    StagingSink.stage(Seq((4L, "d")).toDF("id", "k"), staging)
+    StagingSink.upsertToMain(spark, staging, main, Seq("id"), t1)
+    assert(ids == Set(1L, 2L, 3L, 4L), "an __old left beside main must not leak into main")
+    assert(!new java.io.File(old).exists(), "an __old left beside main must be dropped")
+  }
+
   test("partitioned upsert rewrites ONLY the touched partitions (per-partition swap)") {
     val base = Files.createTempDirectory("upsert_part").toString
     val staging = s"$base/staging"
@@ -407,16 +438,6 @@ class SourcesSpec extends AnyFunSuite with SparkSpec {
     assert(!new java.io.File(s"$main/dt=2024-01-01").exists(),
       "an emptied partition directory must be removed")
     assert(!new java.io.File(s"${main}__upsert").exists() && !new java.io.File(s"${main}__parked").exists())
-
-    // `stablePartitionKeys = true` asserts key → partition and skips the
-    // key-match scan; violating the assertion is the caller's bug — the
-    // stale copy then survives (the documented contract, pinned here so a
-    // behavior change is loud).
-    StagingSink.stage(Seq((2L, "2024-01-04", 21.0)).toDF("id", "dt", "v"), staging)
-    StagingSink.upsertToMain(spark, staging, main, Seq("id"), t1,
-      partitionCols = Seq("dt"), stablePartitionKeys = true)
-    assert(spark.read.parquet(main).filter(col("id") === 2L).count() == 2,
-      "stablePartitionKeys skips the moved-key scan by contract")
   }
 
   test("upsert edge shapes: empty batch is a no-op; null partition values merge null-safely") {
