@@ -1148,8 +1148,10 @@ object AnalyticQueries {
         val sketch = DriftReports
           .ks(DriftReports.binCounts(half, cuts), "bin", totals)
           .select(col("event_type"), col("ks_raw").as("ks_binned"))
+        // Left join: a type with no reference half has no cuts, so no
+        // sketch row; it keeps its exact row with NULL flags.
         exact
-          .join(sketch, Seq("event_type"))
+          .join(sketch, Seq("event_type"), "left")
           .select(
             col("event_type"),
             col("n_ref"),

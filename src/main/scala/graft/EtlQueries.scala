@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.EtlOps
 import graft.sources.ParquetRead
@@ -17,7 +18,7 @@ object EtlQueries {
   import Tables._
 
   // Exact, order-independent aggregate of a double column.
-  private def dsum(c: org.apache.spark.sql.Column) =
+  private def dsum(c: Column) =
     sum(c.cast("decimal(25,10)")).cast("double")
 
   /** Deterministic per-(prefix, dataset-dir, JVM) scratch dir, WIPED and
@@ -36,6 +37,70 @@ object EtlQueries {
     org.apache.commons.io.FileUtils.deleteQuietly(f)
     f.toString
   }
+
+  /** The USCRN text line of an events row: its four fields joined by
+    * spaces. concat_ws silently SKIPS null fields (and an empty event_type
+    * contributes nothing), which would shift every later field one slot
+    * left and mis-parse the row instead of failing — so a null/empty field
+    * fails loudly, naming `row` and the field, before serializing.
+    */
+  private[graft] def uscrnLine(row: String): Column = {
+    def reqField(n: String) =
+      when(col(n).isNull || col(n).cast("string") === "",
+        raise_error(lit(s"$row: null/empty $n cannot round-trip a whitespace-joined line")))
+        .otherwise(col(n).cast("string"))
+    concat_ws(" ", Seq("event_id", "user_id", "event_type", "value").map(reqField): _*)
+  }
+
+  /** The USCRN parse: a (line) table split on whitespace and cast back to
+    * (event_id, user_id, event_type, value).
+    */
+  private[graft] def parseUscrnLines(lines: DataFrame): DataFrame =
+    lines
+      .select(split(col("line"), "\\s+").as("f"))
+      .select(
+        element_at(col("f"), 1).cast("long").as("event_id"),
+        element_at(col("f"), 2).cast("long").as("user_id"),
+        element_at(col("f"), 3).as("event_type"),
+        element_at(col("f"), 4).cast("double").as("value"))
+
+  /** The USCRN station dimension (n_nationkey, station). */
+  private[graft] def uscrnStations(s: SparkSession, d: String): DataFrame =
+    nation(s, d).select(col("n_nationkey"), col("n_name").as("station"))
+
+  /** The USCRN transform of parsed rows: the `stations` join (broadcast,
+    * user_id % 25 = n_nationkey), the sentinel-guarded C→F conversion and
+    * the composite-key (user_id, event_type) dedup, min event_id winning.
+    */
+  private[graft] def uscrnTransform(parsed: DataFrame, stations: DataFrame): DataFrame =
+    EtlOps.dedupByKey(
+      parsed
+        .join(broadcast(stations), col("user_id") % 25 === col("n_nationkey"))
+        .drop("n_nationkey")
+        .withColumn("value_f", EtlOps.celsiusToFahrenheit(col("value"))),
+      Seq("user_id", "event_type"),
+      "event_id")
+
+  /** The USCRN chain's end state in DuckDB — q_uscrn_e2e's oracle, and
+    * q_stream_uscrn's: four incremental merges must land on the one-shot
+    * batch table.
+    */
+  private[graft] val uscrnOracle: String =
+    """WITH parsed AS (
+      |  SELECT event_id, user_id, event_type, value FROM events),
+      |joined AS (
+      |  SELECT p.*, n.n_name AS station,
+      |    CASE WHEN p.value > -90 THEN p.value * 9 / 5 + 32 ELSE p.value END AS value_f
+      |  FROM parsed p JOIN nation n ON p.user_id % 25 = n.n_nationkey),
+      |dedup AS (
+      |  SELECT * FROM (
+      |    SELECT *, row_number() OVER (PARTITION BY user_id, event_type
+      |      ORDER BY event_id) AS rn
+      |    FROM joined) t
+      |  WHERE rn = 1)
+      |SELECT event_id, user_id, station, event_type, value, value_f,
+      |  TIMESTAMP '2026-01-01 00:00:00' AS date_added_utc
+      |FROM dedup ORDER BY event_id""".stripMargin
 
   /** Deterministic NWS forecast-page HTML for one station — the q_nws_e2e
     * fixture, built the q_sitemap_ingest way (generate the document in the
@@ -519,15 +584,7 @@ object EtlQueries {
       "q_fixed_width_parse",
       (s, d) => {
         val line = concat_ws(" ", col("event_id"), col("user_id"), col("event_type"), col("value"))
-        events(s, d)
-          .select(line.as("line"))
-          .select(split(col("line"), "\\s+").as("f"))
-          .select(
-            element_at(col("f"), 1).cast("long").as("event_id"),
-            element_at(col("f"), 2).cast("long").as("user_id"),
-            element_at(col("f"), 3).as("event_type"),
-            element_at(col("f"), 4).cast("double").as("value")
-          )
+        parseUscrnLines(events(s, d).select(line.as("line")))
       },
       Some("""SELECT event_id, user_id, event_type, value FROM events""")
     ),
@@ -720,7 +777,7 @@ object EtlQueries {
         val ev = events(s, d).select(col("user_id"), col("event_id"), col("value"), col("ts"))
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col("user_id")).orderBy(col("valid_from"), col("event_id"))
-        def build(df: org.apache.spark.sql.DataFrame) = df
+        def build(df: DataFrame) = df
           .select(col("user_id"), col("event_id"), col("value"), col("ts").as("valid_from"))
           .withColumn("valid_to", lead(col("valid_from"), 1).over(w))
           .withColumn("is_current", col("valid_to").isNull)
@@ -1073,7 +1130,7 @@ object EtlQueries {
           expr("l_partkey % 256").as("px"),
           expr("l_orderkey % 256").as("ox"),
           z.as("zval"))
-        def layoutReport(name: String, fileKey: org.apache.spark.sql.Column) = {
+        def layoutReport(name: String, fileKey: Column) = {
           val files = base
             .groupBy(fileKey.as("f"))
             .agg(
@@ -1578,35 +1635,10 @@ object EtlQueries {
         val base = EtlQueries.scratchDir("graft_uscrn_e2e", d)
         val t0 = lit("2026-01-01 00:00:00").cast("timestamp")
         // Extract: typed rows → one text line → split + cast back.
-        // concat_ws silently SKIPS null fields (and an empty event_type
-        // contributes nothing), which would shift every later field one
-        // slot left and mis-parse the row instead of failing — so a
-        // null/empty field fails loudly by name before serializing.
-        def reqField(c: org.apache.spark.sql.Column, n: String) =
-          when(c.isNull || c.cast("string") === "",
-            raise_error(lit(s"q_uscrn_e2e: null/empty $n cannot round-trip a whitespace-joined line")))
-            .otherwise(c.cast("string"))
-        val line = concat_ws(" ",
-          reqField(col("event_id"), "event_id"), reqField(col("user_id"), "user_id"),
-          reqField(col("event_type"), "event_type"), reqField(col("value"), "value"))
-        val parsed = events(s, d)
-          .select(line.as("line"))
-          .select(split(col("line"), "\\s+").as("f"))
-          .select(
-            element_at(col("f"), 1).cast("long").as("event_id"),
-            element_at(col("f"), 2).cast("long").as("user_id"),
-            element_at(col("f"), 3).as("event_type"),
-            element_at(col("f"), 4).cast("double").as("value"))
+        val parsed = parseUscrnLines(events(s, d).select(uscrnLine("q_uscrn_e2e").as("line")))
         // Transform: station dim join, sentinel-guarded unit conversion,
         // composite-key dedup.
-        val dim = nation(s, d).select(col("n_nationkey"), col("n_name").as("station"))
-        val transformed = EtlOps.dedupByKey(
-          parsed
-            .join(broadcast(dim), col("user_id") % 25 === col("n_nationkey"))
-            .drop("n_nationkey")
-            .withColumn("value_f", EtlOps.celsiusToFahrenheit(col("value"))),
-          Seq("user_id", "event_type"),
-          "event_id")
+        val transformed = uscrnTransform(parsed, uscrnStations(s, d))
         // Load: staging → MERGE into main → read back.
         graft.sources.StagingSink.stage(transformed, s"$base/staging")
         graft.sources.StagingSink
@@ -1616,21 +1648,7 @@ object EtlQueries {
             "date_added_utc")
           .orderBy("event_id")
       },
-      Some("""WITH parsed AS (
-             |  SELECT event_id, user_id, event_type, value FROM events),
-             |joined AS (
-             |  SELECT p.*, n.n_name AS station,
-             |    CASE WHEN p.value > -90 THEN p.value * 9 / 5 + 32 ELSE p.value END AS value_f
-             |  FROM parsed p JOIN nation n ON p.user_id % 25 = n.n_nationkey),
-             |dedup AS (
-             |  SELECT * FROM (
-             |    SELECT *, row_number() OVER (PARTITION BY user_id, event_type
-             |      ORDER BY event_id) AS rn
-             |    FROM joined) t
-             |  WHERE rn = 1)
-             |SELECT event_id, user_id, station, event_type, value, value_f,
-             |  TIMESTAMP '2026-01-01 00:00:00' AS date_added_utc
-             |FROM dedup ORDER BY event_id""".stripMargin)
+      Some(uscrnOracle)
     ),
 
     // The JDBC warehouse load surface under the hash gate (r17 — closes
@@ -1832,7 +1850,7 @@ object EtlQueries {
         // quarantined side — not a corpus collect).
         val nBad = bad.count()
         require(nBad > 0, s"q_wind_e2e: quarantine gate must fire on this fixture (got $nBad bad rows)")
-        def rollup(df: org.apache.spark.sql.DataFrame) = df
+        def rollup(df: DataFrame) = df
           .join(broadcast(dim), col("wbanno") % 25 === col("n_nationkey"))
           .groupBy(col("station"), col("wbanno"), date_trunc("hour", col("ts")).as("utc_hour"))
           .agg(round(dsum(col("value")) / count(lit(1)), 3).as("wind_hr_avg"))

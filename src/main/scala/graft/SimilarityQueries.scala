@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.SimilarityFunctions._
-import graft.operators.{DedupOps, GraphOps}
+import graft.operators.{DedupOps, GraphOps, VectorOps}
 import graft.sources.ParquetRead
 
 /** §2.3 dedup / similarity-search operators (SURVEY.md).
@@ -33,142 +33,20 @@ object SimilarityQueries {
     base.unionAll(planted)
   }
 
-  /** Sign-LSH plane count as a function of corpus size: enough planes that
-    * the EXPECTED bucket occupancy stays ~targetBucket, i.e.
-    * p = ⌈log₂(n / targetBucket)⌉. This is the knob that keeps within-
-    * bucket candidate pairs O(n × targetBucket) instead of O((n/2^p)²)
-    * blowing up as the corpus grows — at n = 10⁹ and target 64 it yields
-    * p = 24 (16M buckets), at the test scale it stays small enough that
-    * recall gates exercise real multi-bucket behavior.
-    */
-  private[graft] def lshPlaneCount(n: Long, targetBucket: Int): Int =
-    math.max(4, math.ceil(math.log(math.max(1.0, n.toDouble / targetBucket)) / math.log(2.0))).toInt
+  /** [[corpusWithDups]] in DuckDB: the CTE `corpus(doc_id, text)`. */
+  def corpusWithDupsSql(keepFrac: Double = 0.85): String =
+    s"""corpus AS (
+       |  SELECT doc_id, text FROM documents
+       |  UNION ALL
+       |${plantedDupsSql(keepFrac)})""".stripMargin
 
-  /** Memoized embeddings row count per sf dir — the planning-time table
-    * statistic the LSH sizers need. A real deployment reads this from the
-    * catalog (ANALYZE stats); here it is one parquet metadata-only count
-    * per path per JVM, cached so repeated query builds (bench reruns,
-    * verify) don't re-issue the job inside the measured region. Like any
-    * catalog statistic it can go stale: a table REWRITTEN at the same path
-    * within one JVM keeps its first count, and plane counts sized from a
-    * stale n degrade bucket occupancy silently. [[documentsCount]] and
-    * [[maxDocId]] share that limitation; nothing clears these caches.
+  /** The planted half of [[corpusWithDupsSql]]: the truncated copies of
+    * the documents `where` keeps, at doc_id + 1e6.
     */
-  private val embCountCache = scala.collection.concurrent.TrieMap.empty[String, Long]
-  private def embeddingsCount(s: SparkSession, d: String): Long =
-    embCountCache.getOrElseUpdate(d, embeddings(s, d).count())
-
-  /** Sign-LSH ANN candidate pipeline (production plan): top-3 per query
-    * from multi-probe hamming≤2 buckets. See the q_ann_lsh registration
-    * for the plane-count scaling story. Spec-gated (DedupRecallSpec mean
-    * top-1 quality) and plan-pinned (no cross join) on THIS function; the
-    * registered query wraps it in annBandedReport for the hash gate.
-    */
-  private[graft] def annLshNeighbors(s: SparkSession, d: String): DataFrame = {
-    val n = embeddingsCount(s, d)
-    val p = lshPlaneCount(n, targetBucket = 256)
-    val planes = hyperplanes(p, 64)
-    val e = embeddings(s, d).withColumn("bucket", lshBucket(col("embedding"), planes))
-    val masks: Seq[Long] = 0L +:
-      ((0 until p).map(1L << _) ++
-        (for { i <- 0 until p; j <- (i + 1) until p } yield (1L << i) | (1L << j)))
-    val probes = array(masks.map(lit): _*)
-    val q = e.filter(col("vec_id") < 10)
-      .select(
-        col("vec_id").as("query_id"),
-        col("embedding").as("qv"),
-        explode(transform(probes, m => col("bucket").bitwiseXOR(m))).as("bucket")
-      )
-    val c = e.select(col("vec_id").as("neighbor_id"), col("embedding").as("cv"), col("bucket"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cos_sim").desc, col("neighbor_id"))
-    broadcast(q)
-      .join(c, Seq("bucket"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"), cosine(col("qv"), col("cv")).as("cos_sim"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 3)
-      .select("query_id", "neighbor_id", "cos_sim", "rn")
-  }
-
-  /** IVF ANN candidate pipeline (production plan): spherical-k-means coarse
-    * quantizer, queries probe their top-4 cells, exact rank within probed
-    * cells only. See the q_ann_ivf registration for the scale story.
-    */
-  private[graft] def annIvfNeighbors(s: SparkSession, d: String): DataFrame = {
-    val e = embeddings(s, d)
-    val cents = trainIvfCentroids(e, k = 16, iters = 3)
-    def cosArr(v: Column) = array(cents.map(c => cosine(v, typedLit(c))).toIndexedSeq: _*)
-    def cell(v: Column) =
-      bind(cosArr(v))(a => (array_position(a, array_max(a)) - 1).cast("int"))
-    val corpus = e
-      .select(col("vec_id").as("neighbor_id"), col("embedding").as("cv"))
-      .withColumn("cell", cell(col("cv")))
-    val wProbe = Window.partitionBy(col("query_id")).orderBy(col("qcos").desc, col("cell"))
-    val probes = e
-      .filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-      .select(col("query_id"), col("qv"), posexplode(cosArr(col("qv"))).as(Seq("cell", "qcos")))
-      .withColumn("pr", row_number().over(wProbe))
-      .filter(col("pr") <= 4)
-      .select("query_id", "qv", "cell")
-    val wTop = Window.partitionBy(col("query_id")).orderBy(col("cos_sim").desc, col("neighbor_id"))
-    broadcast(probes)
-      .join(corpus, Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"), cosine(col("qv"), col("cv")).as("cos_sim"))
-      .withColumn("rn", row_number().over(wTop))
-      .filter(col("rn") <= 3)
-      .select("query_id", "neighbor_id", "cos_sim", "rn")
-  }
-
-  /** IVF-PQ ANN candidate pipeline (production plan): 32-bit PQ codes rank
-    * the cell-bounded candidates, top-10 shortlist refines exactly via a
-    * join-back fetch. See the q_ann_ivfpq registration for the memory
-    * story (8 bytes/candidate vs 256 bytes/finalist).
-    */
-  private[graft] def annIvfPqNeighbors(s: SparkSession, d: String): DataFrame = {
-    val (m, ksub, dsub) = (8, 16, 8)
-    val e = embeddings(s, d)
-    val books = trainPqCodebooks(e, m, ksub, dsub)
-    val cents = trainIvfCentroids(e, k = 16, iters = 3)
-    def cosArr(v: Column) = array(cents.map(c => cosine(v, typedLit(c))).toIndexedSeq: _*)
-    def cell(v: Column) =
-      bind(cosArr(v))(a => (array_position(a, array_max(a)) - 1).cast("int"))
-    val index = e
-      .select(col("vec_id").as("neighbor_id"), col("embedding").as("cv"))
-      .select(
-        col("neighbor_id"),
-        cell(col("cv")).as("cell"),
-        pqEncode(col("cv"), books, m, ksub, dsub).as("code")
-      )
-    val wProbe = Window.partitionBy(col("query_id")).orderBy(col("qcos").desc, col("cell"))
-    val probes = e
-      .filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-      .select(col("query_id"), col("qv"), posexplode(cosArr(col("qv"))).as(Seq("cell", "qcos")))
-      .withColumn("pr", row_number().over(wProbe))
-      .filter(col("pr") <= 4)
-      .select("query_id", "qv", "cell")
-    val wPq = Window.partitionBy(col("query_id")).orderBy(col("pq_sim").desc, col("neighbor_id"))
-    val shortlist = broadcast(probes)
-      .join(index, Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(
-        col("query_id"),
-        col("qv"),
-        col("neighbor_id"),
-        pqCosine(col("qv"), col("code"), books, m, ksub, dsub).as("pq_sim")
-      )
-      .withColumn("prn", row_number().over(wPq))
-      .filter(col("prn") <= 10)
-    val wTop = Window.partitionBy(col("query_id")).orderBy(col("cos_sim").desc, col("neighbor_id"))
-    shortlist
-      .join(e.select(col("vec_id").as("neighbor_id"), col("embedding").as("cv")), Seq("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"), cosine(col("qv"), col("cv")).as("cos_sim"))
-      .withColumn("rn", row_number().over(wTop))
-      .filter(col("rn") <= 3)
-      .select("query_id", "neighbor_id", "cos_sim", "rn")
-  }
+  def plantedDupsSql(keepFrac: Double, where: String = ""): String =
+    s"""  SELECT doc_id + 1000000 AS doc_id,
+       |         substr(text, 1, CAST(trunc(n_chars * $keepFrac) AS INT)) AS text
+       |  FROM documents$where""".stripMargin
 
   /** Banded ANN quality report (the hash-gate wrapper for the three ANN
     * paths): per query, the EXACT brute-force top-1 cosine (cross-engine
@@ -197,16 +75,8 @@ object SimilarityQueries {
       meanFloor: Double,
       recallFloor: Int
   ): DataFrame = {
-    val e = embeddings(s, d)
-    val q = e.filter(col("vec_id") < 10).select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    val c = e.select(col("vec_id").as("neighbor_id"), col("embedding").as("cv"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cos_sim").desc, col("neighbor_id"))
-    val exact = broadcast(q)
-      .join(c, col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"), cosine(col("qv"), col("cv")).as("cos_sim"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 3)
-    val exactAgg = exact
+    val exactAgg = VectorOps
+      .topByCosine(VectorOps.exactPairs(embeddings(s, d)), 3)
       .groupBy("query_id")
       .agg(
         collect_set(col("neighbor_id")).as("exact_ids"),
@@ -248,420 +118,12 @@ object SimilarityQueries {
     * as literal TRUE.
     */
   private val annBandedOracleSql: String =
-    """SELECT query_id, 3 AS k, MAX(cos_sim) AS best_cos,
-      |  TRUE AS top1_band, TRUE AS mean_band, TRUE AS recall_band
-      |FROM (
-      |  SELECT a.vec_id AS query_id,
-      |    list_cosine_similarity(list_transform(a.embedding, x -> CAST(x AS DOUBLE)),
-      |                           list_transform(b.embedding, x -> CAST(x AS DOUBLE))) AS cos_sim
-      |  FROM embeddings a, embeddings b
-      |  WHERE a.vec_id < 10 AND a.vec_id <> b.vec_id) p
-      |GROUP BY query_id
-      |ORDER BY query_id""".stripMargin
-
-  /** Embedding cell → Seq[Double], tolerant of FLOAT or DOUBLE element
-    * parquet/derived types (spec corpora built with `transform` promote to
-    * double; the stored tables are float).
-    */
-  private def vecToDouble(r: org.apache.spark.sql.Row, i: Int): Seq[Double] =
-    r.getSeq[Any](i).map {
-      case f: java.lang.Float  => f.toDouble
-      case d: java.lang.Double => d.doubleValue
-      case x: java.lang.Number => x.doubleValue
-    }
-
-  /** Spherical k-means coarse quantizer for IVF: a few Lloyd iterations run
-    * as Spark jobs. Seeded deterministically from the first k vectors; each
-    * iteration assigns every vector to its best centroid by cosine
-    * (compiled kernel per centroid, codegen) and recomputes each centroid
-    * as the per-cell mean of unit-normalized vectors — the spherical mean
-    * direction; cosine is scale-invariant so renormalizing before the next
-    * assignment is unnecessary. Driver state stays O(k × dim) doubles per
-    * iteration (never O(data)); the per-iteration update shuffles at most
-    * sampleN × dim (cell, pos, x) rows with map-side partial aggregation,
-    * combining to ≤ k × dim rows per partition before the exchange. Cells
-    * that lose all members keep their previous centroid.
-    */
-  /** The 64-ish per-position quantized-long sum columns of a Lloyd update:
-    * sum_i of (embedding[pos] / norm) on a 1e-12 integer grid — exact and
-    * order-independent (see the accumulation note in [[trainIvfCentroids]]),
-    * and element_at keeps the whole aggregate inside codegen.
-    */
-  private def posSumCols(dim: Int): Seq[Column] =
-    (0 until dim).map { i =>
-      sum(((element_at(col("embedding"), i + 1).cast("double") / col("nrm")) * 1e12).cast("long"))
-        .as(s"q$i")
-    }
-
-  /** Row (cellId, q0..q{dim-1}, cnt) → (cellId, mean vector). */
-  private def centroidFromSums(r: org.apache.spark.sql.Row, dim: Int): (Int, Seq[Double]) = {
-    val cnt = r.getLong(dim + 1)
-    r.getInt(0) -> (0 until dim).map(i => r.getLong(i + 1).toDouble / 1e12 / cnt)
-  }
-
-  private[graft] def trainIvfCentroids(
-      e0: DataFrame,
-      k: Int = 16,
-      iters: Int = 3,
-      sampleN: Int = 4096,
-      stride: Int = 10
-  ): Array[Seq[Double]] =
-    trainIvfCentroidsWithInit(e0, k, iters, sampleN, stride)._2
-
-  /** Driver-side Lloyd over ≤ 2^16 collected sample vectors (r17
-    * optimization): past this the sample no longer fits the "small driver
-    * state" budget and training falls back to the distributed Spark-job
-    * form. Registered configs are far below it (flat 4096; two-level
-    * 4·k ≤ 65536 up to k = 16384).
-    */
-  private val driverLloydMaxSample: Int = 1 << 16
-
-  private def uad(a: Array[Double]): org.apache.spark.sql.catalyst.util.ArrayData =
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(a)
-
-  /** The bounded deterministic training sample, collected in vec_id order —
-    * the same rows the distributed trainer cached (every stride-th vector
-    * plus the first k, smallest ids first, capped at sampleN), promoted to
-    * doubles exactly as the codegen kernels promote them (float→double is
-    * exact).
-    */
-  private def collectTrainSample(
-      e0: DataFrame, k: Int, sampleN: Int, stride: Int): Array[Array[Double]] =
-    e0.filter(pmod(col("vec_id"), lit(stride)) === 0 || col("vec_id") < k)
-      .orderBy("vec_id")
-      .limit(sampleN)
-      .select(col("vec_id"), col("embedding"))
-      .collect()
-      .sortBy(_.getLong(0))
-      .map(r => vecToDouble(r, 1).toArray)
-
-  /** array_max + array_position(−1) over a compiled-cosine array, replicated
-    * with Spark's SQL double ordering (SQLOrderingUtil.compareDoubles: NaN
-    * greatest and self-equal, −0.0 == 0.0) so the driver-local assignment
-    * is bit-identical to the distributed argmax it replaces.
-    */
-  private def sqlArgmax(cos: Array[Double]): Int = {
-    import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
-    var mx = cos(0)
-    var i = 1
-    while (i < cos.length) { if (compareDoubles(cos(i), mx) > 0) mx = cos(i); i += 1 }
-    var p = 0
-    while (compareDoubles(cos(p), mx) != 0) p += 1
-    p
-  }
-
-  /** Flat argmax-cosine assignment of one sample vector — the SAME
-    * SketchImpl.cosine kernel the codegen'd distributed assignment invokes
-    * (identical arithmetic by construction), then [[sqlArgmax]].
-    */
-  private def argmaxCosCell(x: Array[Double], cents: Array[Seq[Double]]): Int = {
-    val cos = new Array[Double](cents.length)
-    val xv = uad(x)
-    var c = 0
-    while (c < cents.length) {
-      cos(c) = graft.functions.SketchImpl.cosine(xv, uad(cents(c).toArray), false, false)
-      c += 1
-    }
-    sqlArgmax(cos)
-  }
-
-  /** One driver-local Lloyd update with the exact distributed arithmetic:
-    * per-vector norm = sqrt of the IN-ORDER Σx² fold (the aggregate-HOF
-    * fold order), per-position addend ((x/nrm)·1e12).toLong (the JVM d2l
-    * cast — what Spark's non-ANSI double→long cast compiles to, NaN→0),
-    * LONG sums (order-free, so driver order ≡ any shuffle order), mean =
-    * (sum.toDouble/1e12)/cnt — [[centroidFromSums]] verbatim. Returns only
-    * non-empty cells; callers keep the previous centroid for empty ones.
-    */
-  private def lloydQuantizedUpdate(
-      xs: Array[Array[Double]],
-      cells: Array[Int],
-      nCells: Int,
-      dim: Int): Map[Int, Seq[Double]] = {
-    val sums = Array.ofDim[Long](nCells, dim)
-    val counts = new Array[Long](nCells)
-    var r = 0
-    while (r < xs.length) {
-      val x = xs(r)
-      val c = cells(r)
-      if (c >= 0 && c < nCells) {
-        var acc = 0.0
-        var j = 0
-        while (j < dim) { acc += x(j) * x(j); j += 1 }
-        val nrm = math.sqrt(acc)
-        counts(c) += 1
-        j = 0
-        while (j < dim) { sums(c)(j) += ((x(j) / nrm) * 1e12).toLong; j += 1 }
-      }
-      r += 1
-    }
-    (0 until nCells).iterator.filter(counts(_) > 0).map { c =>
-      c -> (0 until dim).map(j => sums(c)(j).toDouble / 1e12 / counts(c))
-    }.toMap
-  }
-
-  /** [[trainIvfCentroids]], also returning the pre-Lloyd INIT centroids
-    * (the first k sample members) from the same sample materialization —
-    * callers that need both (the kmeans audit's Lloyd-beats-init flag)
-    * would otherwise pay a second full sample pipeline for a byproduct
-    * the training computes anyway.
-    *
-    * r17 optimization (guide §1.2/§5: the training sample is BOUNDED, so
-    * the iteration belongs on the driver, not in iters Spark jobs): the
-    * sample is collected ONCE (one TakeOrdered job — the same rows the
-    * old form cached) and the Lloyd iterations run driver-locally through
-    * the SAME SketchImpl.cosine kernel and the same quantized-long update
-    * arithmetic, so the centroids are bit-identical to the distributed
-    * form's (TrainerEquivalenceSpec asserts exact equality; the kmeans
-    * audit's determinism flag and every ANN/semdedup oracle hash ride on
-    * it). This removed ~25 driver-blocking jobs per registered training
-    * query (StageProbe r17: q_kmeans_clusters build 4.3 s → sub-second).
-    * Samples past [[driverLloydMaxSample]] stay on the distributed path.
-    */
-  private[graft] def trainIvfCentroidsWithInit(
-      e0: DataFrame,
-      k: Int = 16,
-      iters: Int = 3,
-      sampleN: Int = 4096,
-      stride: Int = 10
-  ): (Array[Seq[Double]], Array[Seq[Double]]) = {
-    if (sampleN > driverLloydMaxSample)
-      return trainIvfCentroidsWithInitDistributed(e0, k, iters, sampleN, stride)
-    val xs = collectTrainSample(e0, k, sampleN, stride)
-    val init: Array[Seq[Double]] = xs.take(k).map(x => x.toIndexedSeq: Seq[Double])
-    var cents = init
-    val dim = if (cents.nonEmpty) cents.head.length else 0
-    for (_ <- 1 to iters if dim > 0) {
-      val cells = xs.map(argmaxCosCell(_, cents))
-      val updated = lloydQuantizedUpdate(xs, cells, cents.length, dim)
-      cents = cents.indices.map(i => updated.getOrElse(i, cents(i))).toArray
-    }
-    (init, cents)
-  }
-
-  /** The pre-r17 Spark-job Lloyd trainer, kept as the scale fallback for
-    * samples past [[driverLloydMaxSample]] AND as the equivalence
-    * reference: TrainerEquivalenceSpec asserts this and the driver-local
-    * form produce bit-identical centroids on the registered corpora.
-    */
-  private[graft] def trainIvfCentroidsWithInitDistributed(
-      e0: DataFrame,
-      k: Int = 16,
-      iters: Int = 3,
-      sampleN: Int = 4096,
-      stride: Int = 10
-  ): (Array[Seq[Double]], Array[Seq[Double]]) = {
-    // Standard IVF/faiss practice: train the coarse quantizer on a BOUNDED
-    // sample — centroid quality converges on a few thousand vectors, so
-    // training cost is O(sampleN × dim) per iteration, independent of
-    // corpus size (a fractional sample would still be O(data) at 100 TB).
-    // Deterministic: every-stride-th vector by id, smallest ids first,
-    // capped at sampleN; the cap is a TakeOrdered (per-partition top-N, no
-    // full sort), and the bounded result is cached for the Lloyd
-    // iterations. Callers that know the corpus size pick stride ≈
-    // n / sampleN so the sample spans the corpus instead of its prefix.
-    // The limit collapses to ONE partition; repartition by id so every
-    // Lloyd job runs wide (hash placement — deterministic, and the
-    // quantized-long sums below are order-independent anyway). One shuffle
-    // at cache materialization, not per iteration.
-    val e = e0
-      .filter(pmod(col("vec_id"), lit(stride)) === 0 || col("vec_id") < k)
-      .orderBy("vec_id")
-      .limit(sampleN)
-      .repartition(col("vec_id"))
-      .cache()
-    val init: Array[Seq[Double]] = e
-      .orderBy("vec_id")
-      .limit(k)
-      .select("embedding")
-      .collect()
-      .map(vecToDouble(_, 0))
-    var cents = init
-    val dim = if (cents.nonEmpty) cents.head.length else 0
-    for (_ <- 1 to iters if dim > 0) {
-      val cs = cents
-      val cosArr = array(cs.map(c => cosine(col("embedding"), typedLit(c))).toIndexedSeq: _*)
-      val cell = bind(cosArr)(a => (array_position(a, array_max(a)) - 1).cast("int"))
-      val norm = sqrt(aggregate(col("embedding"), lit(0.0d), (acc, x) =>
-        acc + x.cast("double") * x.cast("double")))
-      // QUANTIZED-INTEGER accumulation: double addition is not associative,
-      // so an avg(double) over a shuffled groupBy can drift at the ULP
-      // level with reduce-side combine order — enough to flip a near-tie
-      // argmax on the next assignment and make training non-deterministic
-      // run to run. Quantizing each addend to a 1e-12 grid and summing
-      // LONGS is exact and order-independent (per-value truncation is
-      // deterministic), so centroids are bit-identical across runs on any
-      // executor count. The per-iteration job aggregates 64 per-position
-      // sums WITHOUT exploding (element_at stays codegen; a posexplode of
-      // sampleN × dim rows through this stage's interpreted HOF columns
-      // was measured at 1.5 s/iteration on one core — this form is
-      // milliseconds). Overflow bound: |x/nrm| ≤ 1 ⇒ |addend| ≤ 1e12; a
-      // cell would need > 9·10⁶ sample members to overflow — sampleN is
-      // capped orders of magnitude below that.
-      val aggs = posSumCols(dim) :+ count(lit(1)).as("cnt")
-      val updated = e
-        .select(cell.as("cell"), norm.as("nrm"), col("embedding"))
-        .groupBy("cell")
-        .agg(aggs.head, aggs.tail: _*)
-        .collect()
-        .map(centroidFromSums(_, dim))
-        .toMap
-      cents = cents.indices.map(i => updated.getOrElse(i, cents(i))).toArray
-    }
-    e.unpersist()
-    (init, cents)
-  }
-
-  /** Two-level centroid forest for scale-unbounded cell counts: √k coarse
-    * centroids (flat Lloyd, [[trainIvfCentroids]]), then ~√k sub-centroids
-    * per coarse cell, Lloyd-refined against the composed two-level
-    * assignment ([[graft.functions.IvfAssign]]). This removes the flat
-    * trainer's ceiling — a flat argmax compiles one cosine kernel per cell
-    * (O(k) per row AND O(k) codegen), which stops scaling near k ≈ 10³;
-    * the two-level form trains and assigns at O(2√k · dim) per row for any
-    * k, so k can track n/256 to ~10⁶ cells at 100 TB. Sample size scales
-    * with k (≥ 4k vectors — the trainer must outnumber the centroids) and
-    * stays bounded and deterministic; driver state is O(k · dim) doubles,
-    * the accepted budget for centroid state (same as PQ codebooks).
-    * Sub-centroid init: the first ⌈k/√k⌉ sample members of each coarse
-    * cell (row_number by vec_id — deterministic); a coarse cell with no
-    * sample members keeps its coarse centroid as its single sub, so every
-    * cell has ≥ 1 sub-centroid (the [[graft.functions.IvfAssign]]
-    * invariant). Updates accumulate through quantized-long sums like the
-    * flat trainer — bit-deterministic across runs and executor counts.
-    */
-  private[graft] def trainTwoLevelCentroids(
-      e0: DataFrame,
-      k: Int,
-      itersCoarse: Int = 3,
-      itersFine: Int = 2,
-      stride: Int = 10
-  ): (Array[Seq[Double]], Array[Array[Seq[Double]]]) = {
-    require(k >= 4, s"two-level training needs k >= 4, got $k")
-    val kc = math.max(2, math.ceil(math.sqrt(k.toDouble)).toInt)
-    val fsub = math.max(1, math.ceil(k.toDouble / kc).toInt)
-    val sampleN = math.max(1024, 4 * k)
-    if (sampleN > driverLloydMaxSample)
-      return trainTwoLevelCentroidsDistributed(e0, k, itersCoarse, itersFine, stride)
-    // r17: same driver-local move as trainIvfCentroidsWithInit — the
-    // sample is bounded (4·k vectors), so coarse training, the coarse
-    // assignment, sub-centroid init, and the fine Lloyd iterations all
-    // run on ONE collected sample through the same SketchImpl kernels
-    // (cosine for the flat coarse argmax, ivfAssign with the IvfAssign
-    // expression's own precomputed-norm arithmetic for the fine update).
-    // TrainerEquivalenceSpec asserts bit-identical output vs the
-    // distributed form below.
-    val coarse = trainIvfCentroids(e0, k = kc, iters = itersCoarse, sampleN = sampleN, stride = stride)
-    val rows = e0
-      .filter(pmod(col("vec_id"), lit(stride)) === 0 || col("vec_id") < kc)
-      .orderBy("vec_id")
-      .limit(sampleN)
-      .select(col("vec_id"), col("embedding"))
-      .collect()
-      .sortBy(_.getLong(0))
-    val xs: Array[Array[Double]] = rows.map(r => vecToDouble(r, 1).toArray)
-    // Coarse assignment of the sample: the flat argmax the distributed
-    // form's cosArr/cell columns computed.
-    val cells: Array[Int] = xs.map(argmaxCosCell(_, coarse))
-    // Sub-centroid init: per coarse cell, the first fsub sample members by
-    // vec_id (rows are already vec_id-sorted, so in-order grouping IS the
-    // row_number-by-vec_id window).
-    val byCell: Map[Int, Array[Seq[Double]]] = cells.zipWithIndex
-      .groupBy(_._1)
-      .map { case (c, members) =>
-        c -> members.map(_._2).sorted.take(fsub).map(i => xs(i).toIndexedSeq: Seq[Double])
-      }
-    var fine: Array[Array[Seq[Double]]] =
-      (0 until kc).map(c => byCell.getOrElse(c, Array(coarse(c)))).toArray
-    val dim = coarse.head.length
-    for (_ <- 1 to itersFine) {
-      val starts = fine.scanLeft(0)((a, cell) => a + cell.length)
-      // EXACTLY the IvfAssign expression's precomputed constants: norms via
-      // the same Seq fold and 1e-12 floor, flat row-major layouts.
-      val coarseFlat = coarse.flatMap(identity)
-      val coarseNorm = coarse.map(c => math.max(math.sqrt(c.map(x => x * x).sum), 1e-12))
-      val fineSeq: Array[Seq[Double]] = fine.flatten
-      val fineFlat = fineSeq.flatMap(identity)
-      val fineNorm = fineSeq.map(c => math.max(math.sqrt(c.map(x => x * x).sum), 1e-12))
-      val fineStart = starts
-      val fids = xs.map(x =>
-        graft.functions.SketchImpl.ivfAssign(
-          uad(x), dim, coarseFlat, coarseNorm, fineFlat, fineNorm, fineStart, false))
-      val updated = lloydQuantizedUpdate(xs, fids, starts.last, dim)
-      fine = fine.zipWithIndex.map { case (cell, c) =>
-        cell.zipWithIndex.map { case (old, j) => updated.getOrElse(starts(c) + j, old) }
-      }
-    }
-    (coarse, fine)
-  }
-
-  /** The pre-r17 Spark-job two-level trainer — scale fallback past
-    * [[driverLloydMaxSample]] and the TrainerEquivalenceSpec reference.
-    */
-  private[graft] def trainTwoLevelCentroidsDistributed(
-      e0: DataFrame,
-      k: Int,
-      itersCoarse: Int = 3,
-      itersFine: Int = 2,
-      stride: Int = 10
-  ): (Array[Seq[Double]], Array[Array[Seq[Double]]]) = {
-    require(k >= 4, s"two-level training needs k >= 4, got $k")
-    val kc = math.max(2, math.ceil(math.sqrt(k.toDouble)).toInt)
-    val fsub = math.max(1, math.ceil(k.toDouble / kc).toInt)
-    // dim resolves from the trained coarse centroids below.
-    // ≥ 4 sample vectors per fine cell, floored at 1024 — scales with k
-    // (the trainer must outnumber the centroids) without dragging the
-    // whole corpus through the Lloyd jobs at small k.
-    val sampleN = math.max(1024, 4 * k)
-    // Stay on the distributed coarse trainer here: this variant exists as
-    // the all-Spark-jobs reference the equivalence spec compares against.
-    val coarse =
-      trainIvfCentroidsWithInitDistributed(e0, k = kc, iters = itersCoarse, sampleN = sampleN, stride = stride)._2
-    val e = e0
-      .filter(pmod(col("vec_id"), lit(stride)) === 0 || col("vec_id") < kc)
-      .orderBy("vec_id")
-      .limit(sampleN)
-      .repartition(col("vec_id")) // the limit collapses to one partition; run the Lloyd jobs wide
-      .cache()
-    // Coarse assignment of the sample: √k compiled kernels, one pass.
-    val cosC = array(coarse.map(c => cosine(col("embedding"), typedLit(c))).toIndexedSeq: _*)
-    val cellCol = bind(cosC)(a => (array_position(a, array_max(a)) - 1).cast("int"))
-    val assigned = e.select(cellCol.as("cell"), col("vec_id"), col("embedding")).cache()
-    val wCell = Window.partitionBy(col("cell")).orderBy(col("vec_id"))
-    val initRows = assigned
-      .withColumn("rn", row_number().over(wCell))
-      .filter(col("rn") <= fsub)
-      .select("cell", "rn", "embedding")
-      .collect()
-    val byCell = initRows.groupBy(_.getInt(0)).map { case (c, rs) =>
-      c -> rs.sortBy(_.getInt(1)).map(r => vecToDouble(r, 2))
-    }
-    var fine: Array[Array[Seq[Double]]] =
-      (0 until kc).map(c => byCell.getOrElse(c, Array(coarse(c)))).toArray
-    val dim = coarse.head.length
-    for (_ <- 1 to itersFine) {
-      val starts = fine.scanLeft(0)((a, cell) => a + cell.length)
-      val fid = ivfAssign(col("embedding"), coarse.toSeq, fine.toSeq.map(_.toSeq))
-      val norm = sqrt(aggregate(col("embedding"), lit(0.0d), (acc, x) =>
-        acc + x.cast("double") * x.cast("double")))
-      // Same no-explode quantized-long accumulation as the flat trainer
-      // (exact, order-independent, codegen'd — see trainIvfCentroids).
-      val aggs = posSumCols(dim) :+ count(lit(1)).as("cnt")
-      val updated = assigned
-        .select(fid.as("fid"), norm.as("nrm"), col("embedding"))
-        .groupBy("fid")
-        .agg(aggs.head, aggs.tail: _*)
-        .collect()
-        .map(centroidFromSums(_, dim))
-        .toMap
-      fine = fine.zipWithIndex.map { case (cell, c) =>
-        cell.zipWithIndex.map { case (old, j) => updated.getOrElse(starts(c) + j, old) }
-      }
-    }
-    assigned.unpersist()
-    e.unpersist()
-    (coarse, fine)
-  }
+    s"""SELECT query_id, 3 AS k, MAX(cos_sim) AS best_cos,
+       |  TRUE AS top1_band, TRUE AS mean_band, TRUE AS recall_band
+       |FROM (
+       |${VectorOps.Sql.exactPairs("a.vec_id AS query_id", 2)}) p
+       |GROUP BY query_id
+       |ORDER BY query_id""".stripMargin
 
   /** Cyclic Jacobi eigendecomposition of a small symmetric matrix (the
     * driver-side step of PCA — dim ≤ a few hundred, cost dim³ per sweep,
@@ -762,14 +224,6 @@ object SimilarityQueries {
     (mean, vecs.take(nComponents), eig)
   }
 
-  /** The SemDeDup pipeline body, parameterized on the corpus and cell count
-    * so the scale spec can force k past the old flat-assignment ceiling
-    * (k = 1024) on a corpus it controls. Input: (vec_id, embedding).
-    * Output: the DROPPED vectors with their keeper and cosine. The
-    * within-cell self-join carries identical subtrees on both sides (merge
-    * hints) so the two-level assignment computes ONCE via ReusedExchange —
-    * pinned in PlanAuditSpec.
-    */
   /** The production PCA projection table: every vector's top-8 principal
     * coordinates (one compiled map pass, zero shuffles — plan-pinned with
     * the other map-only operators) plus the var_explained budget number.
@@ -796,8 +250,9 @@ object SimilarityQueries {
       .withColumn("sig", simhash64(col("text")))
       .select(col("doc_id"), col("sig"))
 
-  /** Memoized documents row count per sf dir (same catalog-statistic role
-    * as [[embeddingsCount]]) — sizes the ball-audit sample modulus.
+  /** Memoized documents row count per sf dir (the catalog-statistic role,
+    * and staleness, of [[VectorOps.embeddingsCount]]; so is [[maxDocId]])
+    * — sizes the ball-audit sample modulus.
     */
   private val docCountCache = scala.collection.concurrent.TrieMap.empty[String, Long]
   private[graft] def documentsCount(s: SparkSession, d: String): Long =
@@ -1091,82 +546,6 @@ object SimilarityQueries {
   private[graft] def phashDedupPairs(s: SparkSession, d: String): DataFrame =
     DedupOps.byteBandPairs(phashSigs(s, d))
 
-  /** The production per-vector topic-assignment table: spherical k-means
-    * trained on a bounded deterministic sample (trainIvfCentroids — driver
-    * state O(k·dim), never O(data)), then one codegen'd argmax pass over
-    * the full corpus (k compiled cosine kernels per row, zero shuffles).
-    * The registered q_kmeans_clusters wraps this in the banded clustering
-    * audit for the driver hash gate; DedupRecallSpec (determinism /
-    * coverage / Lloyd-objective), LlmPipelineSpec (topic-chain use), and
-    * PlanAuditSpec (map-only pin) consume this table directly.
-    */
-  private[graft] def kmeansAssignments(s: SparkSession, d: String, iters: Int = 5): DataFrame = {
-    val e = embeddings(s, d)
-    val cents = trainIvfCentroids(e, k = 10, iters = iters)
-    def cosArr(v: Column) = array(cents.map(c => cosine(v, typedLit(c))).toIndexedSeq: _*)
-    e.select(
-        col("vec_id"),
-        bind(cosArr(col("embedding"))) { a =>
-          struct(
-            (array_position(a, array_max(a)) - 1).cast("int").as("cluster"),
-            round(array_max(a), 6).as("cos_to_centroid")
-          )
-        }.as("o")
-      )
-      .select(col("vec_id"), col("o.cluster").as("cluster"), col("o.cos_to_centroid").as("cos_to_centroid"))
-      .orderBy("vec_id")
-  }
-
-  /** The production SemDeDup drop table over the planted-twin corpus:
-    * (vec_id dropped, keeper, cos_to_keeper). The registered q_semdedup
-    * wraps this in the banded audit report for the driver hash gate;
-    * DedupRecallSpec and LlmPipelineSpec consume this table directly.
-    */
-  private[graft] def semdedupProduction(s: SparkSession, d: String): DataFrame = {
-    val base = embeddings(s, d).select(col("vec_id"), col("embedding"))
-    val planted = embeddings(s, d).select(
-      (col("vec_id") + 1000000L).as("vec_id"),
-      transform(col("embedding"), (x, i) => when(i === 0, x + lit(0.05f)).otherwise(x))
-        .as("embedding")
-    )
-    val corpus = base.unionAll(planted)
-    val n = 2L * embeddingsCount(s, d)
-    val k = math.max(16, (n / 256).toInt)
-    val sampleN = math.max(1024, 4 * k)
-    val stride = math.max(1, (n / sampleN).toInt)
-    semdedupDrops(corpus, k, stride)
-  }
-
-  private[graft] def semdedupDrops(corpus: DataFrame, k: Int, stride: Int = 10): DataFrame = {
-    val (coarse, fine) = trainTwoLevelCentroids(corpus, k, stride = stride)
-    val assigned = corpus.select(
-      col("vec_id"),
-      col("embedding"),
-      ivfAssign(col("embedding"), coarse.toSeq, fine.toSeq.map(_.toSeq)).as("cell")
-    )
-    assigned
-      .as("a")
-      .hint("merge")
-      .join(
-        assigned.as("b").hint("merge"),
-        col("a.cell") === col("b.cell") && col("a.vec_id") < col("b.vec_id")
-      )
-      .select(
-        col("a.vec_id").as("vec_a"),
-        col("b.vec_id").as("vec_b"),
-        cosine(col("a.embedding"), col("b.embedding")).as("cos_sim")
-      )
-      .filter(col("cos_sim") >= 0.995)
-      .groupBy(col("vec_b"))
-      .agg(min(struct(col("vec_a"), col("cos_sim"))).as("k"))
-      .select(
-        col("vec_b").as("vec_id"),
-        col("k.vec_a").as("keeper"),
-        round(col("k.cos_sim"), 6).as("cos_to_keeper")
-      )
-      .orderBy("vec_id")
-  }
-
   /** Verified MinHash near-dup pairs (doc_a < doc_b, exact Jaccard ≥ 0.5)
     * over the planted-duplicate corpus: the pair table behind
     * q_dedup_minhash.
@@ -1251,12 +630,7 @@ object SimilarityQueries {
     * exactly like the Spark generator (truncation depth, verify floor).
     */
   private def ngramPairsSqlCtes(keepFrac: Double = 0.85, jaccardMin: Double = 0.4): String =
-    raw"""corpus AS (
-      |  SELECT doc_id, text FROM documents
-      |  UNION ALL
-      |  SELECT doc_id + 1000000 AS doc_id,
-      |         substr(text, 1, CAST(trunc(n_chars * $keepFrac) AS INT)) AS text
-      |  FROM documents),
+    raw"""${corpusWithDupsSql(keepFrac)},
       |w AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w FROM corpus),
       |g AS (
       |  SELECT DISTINCT doc_id, array_to_string(w[i:i+2], ' ') AS gram
@@ -1283,59 +657,6 @@ object SimilarityQueries {
       |  JOIN sz sa ON sa.doc_id = doc_a
       |  JOIN sz sb ON sb.doc_id = doc_b
       |  WHERE CAST(nc AS DOUBLE) / (sa.n + sb.n - nc) >= $jaccardMin)""".stripMargin
-
-  /** Product-quantization codebooks: per-subspace k-means (Lloyd) trained
-    * driver-side on a bounded deterministic sample — the faiss shape:
-    * codebooks converge on a few hundred vectors, so the train step is
-    * O(sample × ksub), never O(data), and the result is m × ksub × dsub
-    * doubles of driver state (8 KB here).
-    */
-  private[graft] def trainPqCodebooks(
-      e: DataFrame,
-      m: Int,
-      ksub: Int,
-      dsub: Int,
-      sampleN: Int = 512,
-      iters: Int = 10
-  ): Seq[Double] = {
-    val sample: Array[Array[Double]] = e
-      .filter(pmod(col("vec_id"), lit(10)) === 0)
-      .orderBy("vec_id")
-      .limit(sampleN)
-      .select("embedding")
-      .collect()
-      .map(_.getSeq[Float](0).map(_.toDouble).toArray)
-    require(sample.length >= ksub, s"PQ training needs >= $ksub sample vectors")
-    val books = new Array[Double](m * ksub * dsub)
-    for (sub <- 0 until m) {
-      val xs = sample.map(v => java.util.Arrays.copyOfRange(v, sub * dsub, (sub + 1) * dsub))
-      val cents = xs.take(ksub).map(_.clone)
-      for (_ <- 1 to iters) {
-        val sums = Array.fill(ksub)(new Array[Double](dsub))
-        val counts = new Array[Int](ksub)
-        for (x <- xs) {
-          var best = 0
-          var bd = Double.MaxValue
-          var c = 0
-          while (c < ksub) {
-            var d = 0.0
-            var j = 0
-            while (j < dsub) { val df = x(j) - cents(c)(j); d += df * df; j += 1 }
-            if (d < bd) { bd = d; best = c }
-            c += 1
-          }
-          counts(best) += 1
-          var j = 0
-          while (j < dsub) { sums(best)(j) += x(j); j += 1 }
-        }
-        for (c <- 0 until ksub if counts(c) > 0; j <- 0 until dsub)
-          cents(c)(j) = sums(c)(j) / counts(c)
-      }
-      for (c <- 0 until ksub; j <- 0 until dsub)
-        books((sub * ksub + c) * dsub + j) = cents(c)(j)
-    }
-    books.toIndexedSeq
-  }
 
   /** The containment pipeline behind q_dedup_containment, parameterized on
     * the planted truncation depth so the recall spec can exercise the
@@ -1520,12 +841,7 @@ object SimilarityQueries {
           .withColumnRenamed("n_shared", "n_shared_windows")
           .orderBy(col("doc_a"), col("doc_b"))
       },
-      Some("""WITH corpus AS (
-             |  SELECT doc_id, text FROM documents
-             |  UNION ALL
-             |  SELECT doc_id + 1000000 AS doc_id,
-             |         substr(text, 1, CAST(trunc(n_chars * 0.85) AS INT)) AS text
-             |  FROM documents),
+      Some(raw"""WITH ${corpusWithDupsSql()},
              |w AS (
              |  SELECT DISTINCT doc_id, substr(text, CAST(i AS INT), 32) AS win
              |  FROM corpus, unnest(range(1, length(text) - 30)) AS t(i)
@@ -1793,27 +1109,12 @@ object SimilarityQueries {
     // against the corpus; double accumulation matches the DuckDB oracle.
     Q(
       "q_embed_cosine_knn",
-      (s, d) => {
-        val e = embeddings(s, d)
-        val q = e.filter(col("vec_id") < 10).select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-        val c = e.select(col("vec_id").as("neighbor_id"), col("embedding").as("cv"))
-        val w = Window.partitionBy(col("query_id")).orderBy(col("cos_sim").desc, col("neighbor_id"))
-        broadcast(q)
-          .join(c, col("query_id") =!= col("neighbor_id"))
-          .select(col("query_id"), col("neighbor_id"), cosine(col("qv"), col("cv")).as("cos_sim"))
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= 5)
-          .select("query_id", "neighbor_id", "cos_sim", "rn")
-      },
-      Some("""SELECT query_id, neighbor_id, cos_sim, rn FROM (
+      (s, d) => VectorOps.topByCosine(VectorOps.exactPairs(embeddings(s, d)), 5),
+      Some(s"""SELECT query_id, neighbor_id, cos_sim, rn FROM (
              |  SELECT query_id, neighbor_id, cos_sim,
              |    row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id) AS rn
              |  FROM (
-             |    SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-             |      list_cosine_similarity(list_transform(a.embedding, x -> CAST(x AS DOUBLE)),
-             |                             list_transform(b.embedding, x -> CAST(x AS DOUBLE))) AS cos_sim
-             |    FROM embeddings a, embeddings b
-             |    WHERE a.vec_id < 10 AND a.vec_id <> b.vec_id) p) r
+             |${VectorOps.Sql.exactPairs("a.vec_id AS query_id, b.vec_id AS neighbor_id", 4)}) p) r
              |WHERE rn <= 5""".stripMargin)
     ),
 
@@ -1830,19 +1131,19 @@ object SimilarityQueries {
     // candidate pipeline is annLshNeighbors, spec- and plan-pinned.
     Q(
       "q_ann_lsh",
-      (s, d) => annBandedReport(s, d, annLshNeighbors(s, d), meanFloor = 0.9, recallFloor = 12),
+      (s, d) => annBandedReport(s, d, VectorOps.annLshNeighbors(s, d), meanFloor = 0.9, recallFloor = 12),
       Some(annBandedOracleSql)
     ),
 
     // IVF ANN (the other scale path): a spherical-k-means coarse quantizer
-    // (trainIvfCentroids above — Lloyd iterations as Spark jobs, O(centroids)
+    // (VectorOps.trainIvfCentroids — Lloyd on a bounded sample, O(centroids)
     // driver state, never O(data)) assigns every vector to its best cell by
     // cosine (compiled kernel per centroid, codegen). Queries probe their
     // top-4 cells and rank exactly within the probed cells only: the
     // candidate set is cell-bounded, no full scan per query.
     Q(
       "q_ann_ivf",
-      (s, d) => annBandedReport(s, d, annIvfNeighbors(s, d), meanFloor = 0.9, recallFloor = 15),
+      (s, d) => annBandedReport(s, d, VectorOps.annIvfNeighbors(s, d), meanFloor = 0.9, recallFloor = 15),
       Some(annBandedOracleSql)
     ),
 
@@ -1863,7 +1164,7 @@ object SimilarityQueries {
       // total hits 10-14 of 30 across sf dirs) — its floor is honest, not
       // slack; the value it buys is the 32× scan-size reduction, and the
       // per-query exact-refined quality still clears the same 0.6 floor.
-      (s, d) => annBandedReport(s, d, annIvfPqNeighbors(s, d), meanFloor = 0.85, recallFloor = 6),
+      (s, d) => annBandedReport(s, d, VectorOps.annIvfPqNeighbors(s, d), meanFloor = 0.85, recallFloor = 6),
       Some(annBandedOracleSql)
     ),
 
@@ -1881,22 +1182,13 @@ object SimilarityQueries {
     Q(
       "q_dedup_embedding",
       (s, d) => {
-        val base = embeddings(s, d).select(col("vec_id"), col("embedding"))
-        val planted = embeddings(s, d).select(
-          (col("vec_id") + 1000000L).as("vec_id"),
-          transform(
-            col("embedding"),
-            (x, i) => when(i === 0, x + lit(0.05f)).otherwise(x)
-          ).as("embedding")
-        )
-        val n = 2L * embeddingsCount(s, d)
-        val p = lshPlaneCount(n, targetBucket = 64)
+        val twins = VectorOps.plantedTwins(s, d)
+        val p = VectorOps.lshPlaneCount(2L * VectorOps.embeddingsCount(s, d), targetBucket = 64)
         val nTables = 6
         val bands = array(
           (0 until nTables).map(t => lshBucket(col("embedding"), hyperplanes(p, 64, seed = 42L + t))): _*
         )
-        val corpus = base.unionAll(planted)
-          .select(col("vec_id").as("doc_id"), col("embedding"), bands.as("bands"))
+        val corpus = twins.select(col("vec_id").as("doc_id"), col("embedding"), bands.as("bands"))
         val cand = DedupOps.bandedPairs(corpus.select("doc_id", "bands"))
         val vecs = corpus.select(col("doc_id"), col("embedding"))
         cand
@@ -1912,7 +1204,7 @@ object SimilarityQueries {
       },
       // EXACT oracle, not banded: DuckDB enumerates the ground truth — the
       // planted (i, i+1e6) pairs, rebuilt with the identical float32
-      // perturbation (+0.05f on dim 0; REAL arithmetic matches Spark's
+      // perturbation (VectorOps.Sql.pert: REAL arithmetic matches Spark's
       // FloatType add bit-for-bit) — and hash equality asserts the banded
       // pipeline surfaces EXACTLY that set. That claim is deterministic
       // here, not probabilistic hand-waving: with 6 independent plane
@@ -1921,14 +1213,10 @@ object SimilarityQueries {
       // the data (verified found==truth, zero extras, at sf0.001/0.01/0.1);
       // random 64-dim embeddings never reach cos 0.995, so no organic pair
       // can add rows.
-      Some("""WITH pert AS (
-             |  SELECT vec_id + 1000000 AS vec_id,
-             |    list_concat([CAST(embedding[1] + CAST(0.05 AS REAL) AS REAL)], embedding[2:]) AS embedding
-             |  FROM embeddings),
+      Some(s"""WITH ${VectorOps.Sql.pert},
              |pairs AS (
              |  SELECT a.vec_id AS vec_a, p.vec_id AS vec_b,
-             |    list_cosine_similarity(list_transform(a.embedding, x -> CAST(x AS DOUBLE)),
-             |                           list_transform(p.embedding, x -> CAST(x AS DOUBLE))) AS cos_sim
+             |    ${VectorOps.Sql.cosine("a.embedding", VectorOps.Sql.dbl("p.embedding"), 4)} AS cos_sim
              |  FROM embeddings a JOIN pert p ON p.vec_id = a.vec_id + 1000000)
              |SELECT vec_a, vec_b, cos_sim FROM pairs WHERE cos_sim >= 0.995
              |ORDER BY vec_a, vec_b""".stripMargin)
@@ -1981,8 +1269,8 @@ object SimilarityQueries {
           .filter(col("max_cos") >= 0.95)
           .orderBy("vec_id")
       },
-      Some("""WITH e AS (
-             |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cv
+      Some(s"""WITH e AS (
+             |  SELECT vec_id, ${VectorOps.Sql.dbl("embedding")} AS cv
              |  FROM embeddings),
              |ev AS (
              |  SELECT vec_id AS eval_id, list_transform(cv, x -> x * 1.02 + 0.01) AS evv
@@ -2031,21 +1319,16 @@ object SimilarityQueries {
         // TWO independent trainings (the determinism flag's whole point);
         // the Lloyd baseline rides the first one's init centroids rather
         // than paying a third sample pipeline for a byproduct.
-        val (c0, c1) = trainIvfCentroidsWithInit(e, k = 10, iters = 5)
-        val (i2, c2) = trainIvfCentroidsWithInit(e, k = 10, iters = 5)
+        val (c0, c1) = VectorOps.trainIvfCentroidsWithInit(e, k = 10, iters = 5)
+        val (i2, c2) = VectorOps.trainIvfCentroidsWithInit(e, k = 10, iters = 5)
         val deterministic = c1.length == c2.length &&
           c1.zip(c2).forall { case (x, y) => x == y } &&
           c0.length == i2.length && c0.zip(i2).forall { case (x, y) => x == y }
-        def cosArr(cents: Array[Seq[Double]], v: Column) =
-          array(cents.map(c => cosine(v, typedLit(c))).toIndexedSeq: _*)
         e.select(
-            bind(cosArr(c1, col("embedding"))) { a =>
-              struct(
-                (array_position(a, array_max(a)) - 1).cast("int").as("cluster"),
-                round(array_max(a), 6).as("cos")
-              )
-            }.as("a"),
-            bind(cosArr(c0, col("embedding")))(array_max).as("i_cos")
+            VectorOps.nearestCentroid(c1)(
+              col("embedding"),
+              (cell, cos) => struct(cell.as("cluster"), round(cos, 6).as("cos"))).as("a"),
+            VectorOps.nearestCentroid(c0)(col("embedding"), (_, cos) => cos).as("i_cos")
           )
           .agg(
             count(lit(1)).as("n_vecs"),
@@ -2100,7 +1383,7 @@ object SimilarityQueries {
     Q(
       "q_semdedup",
       (s, d) => {
-        val drops = semdedupProduction(s, d)
+        val drops = VectorOps.semdedupProduction(s, d)
         drops
           .agg(
             count(lit(1)).as("n_dropped"),
@@ -2156,8 +1439,8 @@ object SimilarityQueries {
           .select(col("vec_id"), col("o.scale").as("scale"), col("o.q_codes").as("q_codes"), col("o.max_err").as("max_err"))
           .orderBy("vec_id")
       },
-      Some("""WITH e AS (
-             |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
+      Some(s"""WITH e AS (
+             |  SELECT vec_id, ${VectorOps.Sql.dbl("embedding")} AS v FROM embeddings),
              |s AS (
              |  SELECT vec_id, v,
              |    greatest(list_aggregate(list_transform(v, x -> abs(x)), 'max'), 1e-12) / 127.0 AS sc
@@ -2379,9 +1662,9 @@ object SimilarityQueries {
           )
           .orderBy("component")
       },
-      Some("""WITH pos AS (
+      Some(s"""WITH pos AS (
              |  SELECT unnest(range(64)) AS i,
-             |         unnest(list_transform(embedding, x -> CAST(x AS DOUBLE))) AS v
+             |         unnest(${VectorOps.Sql.dbl("embedding")}) AS v
              |  FROM embeddings),
              |m AS (SELECT i, avg(v) AS mu, avg(v*v) AS m2 FROM pos GROUP BY i),
              |t AS (SELECT CAST(SUM(m2 - mu*mu) AS DOUBLE) AS total_var FROM m),
@@ -2562,9 +1845,7 @@ object SimilarityQueries {
            |batch AS (
            |  SELECT doc_id, text FROM documents WHERE doc_id % 5 = 4
            |  UNION ALL
-           |  SELECT doc_id + 1000000 AS doc_id,
-           |         substr(text, 1, CAST(trunc(n_chars * 0.85) AS INT)) AS text
-           |  FROM documents WHERE doc_id % 5 = 0),
+           |${plantedDupsSql(0.85, " WHERE doc_id % 5 = 0")}),
            |allc AS (
            |  SELECT doc_id, 'i' AS side, text FROM idx_docs
            |  UNION ALL
@@ -2610,13 +1891,8 @@ object SimilarityQueries {
     Q(
       "q_embed_norms",
       (s, d) => {
-        val normSq = aggregate(
-          col("embedding"),
-          lit(0.0),
-          (acc, x) => acc + x.cast("double") * x.cast("double")
-        )
         embeddings(s, d)
-          .select(col("label"), sqrt(normSq).as("norm"))
+          .select(col("label"), sqrt(VectorOps.sumSq(col("embedding"))).as("norm"))
           .groupBy(col("label"))
           .agg(
             count(lit(1)).as("n_vecs"),
@@ -2627,10 +1903,9 @@ object SimilarityQueries {
           )
           .orderBy("label")
       },
-      Some("""WITH norms AS (
+      Some(s"""WITH norms AS (
              |  SELECT label,
-             |    sqrt(list_sum(list_transform(embedding,
-             |      x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS norm
+             |    sqrt(${VectorOps.Sql.sumSq("embedding")}) AS norm
              |  FROM embeddings)
              |SELECT label, COUNT(*) AS n_vecs,
              |  round(CAST(SUM(CAST(norm AS DECIMAL(25,10))) AS DOUBLE)
@@ -2653,12 +1928,10 @@ object SimilarityQueries {
     Q(
       "q_embed_truncate",
       (s, d) => {
-        def ssq(c: org.apache.spark.sql.Column) =
-          aggregate(c, lit(0.0), (acc, x) => acc + x.cast("double") * x.cast("double"))
         val dims = Seq(8, 16, 32)
         val per = embeddings(s, d).select(
-          (greatest(ssq(col("embedding")), lit(1e-12)).as("full") +:
-            dims.map(k => ssq(slice(col("embedding"), 1, k)).as(s"ssq$k"))): _*
+          (greatest(VectorOps.sumSq(col("embedding")), lit(1e-12)).as("full") +:
+            dims.map(k => VectorOps.sumSq(slice(col("embedding"), 1, k)).as(s"ssq$k"))): _*
         )
         per
           .selectExpr(
@@ -2677,16 +1950,12 @@ object SimilarityQueries {
           )
           .orderBy("trunc_dim")
       },
-      Some("""WITH p AS (
+      Some(s"""WITH p AS (
              |  SELECT vec_id,
-             |    greatest(list_sum(list_transform(embedding,
-             |      x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))), 1e-12) AS fullsq,
-             |    list_sum(list_transform(embedding[1:8],
-             |      x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS s8,
-             |    list_sum(list_transform(embedding[1:16],
-             |      x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS s16,
-             |    list_sum(list_transform(embedding[1:32],
-             |      x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS s32
+             |    greatest(${VectorOps.Sql.sumSq("embedding")}, 1e-12) AS fullsq,
+             |    ${VectorOps.Sql.sumSq("embedding[1:8]")} AS s8,
+             |    ${VectorOps.Sql.sumSq("embedding[1:16]")} AS s16,
+             |    ${VectorOps.Sql.sumSq("embedding[1:32]")} AS s32
              |  FROM embeddings),
              |u AS (
              |  SELECT 8 AS trunc_dim, s8 / fullsq AS frac FROM p
@@ -2751,9 +2020,9 @@ object SimilarityQueries {
           .filter(col("rank") <= k)
           .select(col("label"), col("rank"), col("vec_id"), round(col("dist2"), 6).as("dist2"))
       },
-      Some("""WITH comp AS (
+      Some(s"""WITH comp AS (
              |  SELECT label, unnest(range(len(embedding))) AS pos,
-             |         unnest(list_transform(embedding, x -> CAST(x AS DOUBLE))) AS x
+             |         unnest(${VectorOps.Sql.dbl("embedding")}) AS x
              |  FROM embeddings),
              |cent AS (
              |  SELECT label, pos,

@@ -603,17 +603,8 @@ object StreamQueries {
         val main = s"$base/main"
         val ckpt = s"$base/ckpt"
         val t0 = lit("2026-01-01 00:00:00").cast("timestamp")
-        // Same null/empty-field guard as q_uscrn_e2e: concat_ws silently
-        // skips nulls, shifting fields — fail loudly by name instead.
-        def reqField(c: org.apache.spark.sql.Column, n: String) =
-          when(c.isNull || c.cast("string") === "",
-            raise_error(lit(s"q_stream_uscrn: null/empty $n cannot round-trip a whitespace-joined line")))
-            .otherwise(c.cast("string"))
-        val line = concat_ws(" ",
-          reqField(col("event_id"), "event_id"), reqField(col("user_id"), "user_id"),
-          reqField(col("event_type"), "event_type"), reqField(col("value"), "value"))
         events(s, d)
-          .select(col("event_id"), line.as("line"))
+          .select(col("event_id"), EtlQueries.uscrnLine("q_stream_uscrn").as("line"))
           .repartitionByRange(4, col("event_id"))
           .write.mode("overwrite").parquet(src)
         // Pin arrival order = event_id order: range part files sort by
@@ -628,7 +619,7 @@ object StreamQueries {
             require(f.setLastModified(1000000L * (i + 1)),
               s"setLastModified unsupported on ${f.getPath}: cannot pin micro-batch arrival order")
           }
-        val dim = nation(s, d).select(col("n_nationkey"), col("n_name").as("station"))
+        val stations = EtlQueries.uscrnStations(s, d)
         val stream = s.readStream
           .schema(ParquetRead.schema(s, src))
           .option("maxFilesPerTrigger", "1")
@@ -637,20 +628,7 @@ object StreamQueries {
           .writeStream
           .outputMode("append")
           .foreachBatch { (b: DataFrame, id: Long) =>
-            val parsed = b
-              .select(split(col("line"), "\\s+").as("f"))
-              .select(
-                element_at(col("f"), 1).cast("long").as("event_id"),
-                element_at(col("f"), 2).cast("long").as("user_id"),
-                element_at(col("f"), 3).as("event_type"),
-                element_at(col("f"), 4).cast("double").as("value"))
-            val transformed = graft.operators.EtlOps.dedupByKey(
-              parsed
-                .join(broadcast(dim), col("user_id") % 25 === col("n_nationkey"))
-                .drop("n_nationkey")
-                .withColumn("value_f", graft.operators.EtlOps.celsiusToFahrenheit(col("value"))),
-              Seq("user_id", "event_type"),
-              "event_id")
+            val transformed = EtlQueries.uscrnTransform(EtlQueries.parseUscrnLines(b), stations)
             val stg = s"$base/stg_$id"
             graft.sources.StagingSink.stage(transformed, stg)
             graft.sources.StagingSink
@@ -662,23 +640,9 @@ object StreamQueries {
             "date_added_utc")
           .orderBy("event_id")
       },
-      // Convergence: the oracle is q_uscrn_e2e's restatement verbatim —
-      // four incremental merges must land on the one-shot batch table.
-      Some("""WITH parsed AS (
-             |  SELECT event_id, user_id, event_type, value FROM events),
-             |joined AS (
-             |  SELECT p.*, n.n_name AS station,
-             |    CASE WHEN p.value > -90 THEN p.value * 9 / 5 + 32 ELSE p.value END AS value_f
-             |  FROM parsed p JOIN nation n ON p.user_id % 25 = n.n_nationkey),
-             |dedup AS (
-             |  SELECT * FROM (
-             |    SELECT *, row_number() OVER (PARTITION BY user_id, event_type
-             |      ORDER BY event_id) AS rn
-             |    FROM joined) t
-             |  WHERE rn = 1)
-             |SELECT event_id, user_id, station, event_type, value, value_f,
-             |  TIMESTAMP '2026-01-01 00:00:00' AS date_added_utc
-             |FROM dedup ORDER BY event_id""".stripMargin)
+      // Convergence: four incremental merges must land on the one-shot
+      // batch table.
+      Some(EtlQueries.uscrnOracle)
     ),
 
     // Watermark LATE-DATA semantics, registered under the hash gate (r16 —

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
 import graft.functions.TextFunctions._
+import graft.operators.VectorOps
 
 /** §2.3 text-analysis operators over `documents` — language ID, quality
   * scoring, token counting, fingerprinting. All pure column expressions
@@ -878,7 +879,7 @@ object TextQueries {
     * oracle layers on the IDENTICAL fusion text — two copies would drift.
     */
   private[graft] val rrfOracleCtes: String =
-    """p AS (
+    raw"""p AS (
       |  SELECT doc_id,
       |    CAST(len(list_filter(string_split_regex(lower(trim(text)), '\s+'), x -> length(x) > 0)) AS DOUBLE) AS dl,
       |    CAST(len(list_filter(string_split_regex(lower(trim(text)), '\s+'), x -> x = 'spark')) AS DOUBLE) AS tf0,
@@ -906,11 +907,11 @@ object TextQueries {
       |    CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS INT) AS r_lex
       |  FROM lexall),
       |qv AS (
-      |  SELECT list_transform(embedding, x -> CAST(x AS DOUBLE)) AS qv
+      |  SELECT ${VectorOps.Sql.dbl("embedding")} AS qv
       |  FROM embeddings WHERE vec_id = 7),
       |semall AS (
       |  SELECT vec_id AS doc_id,
-      |    list_cosine_similarity(list_transform(embedding, x -> CAST(x AS DOUBLE)), qv) AS cos_sim
+      |    ${VectorOps.Sql.cosine("embedding", "qv")} AS cos_sim
       |  FROM embeddings, qv
       |  WHERE vec_id <> 7
       |  ORDER BY cos_sim DESC, doc_id LIMIT 20),
@@ -1231,12 +1232,7 @@ object TextQueries {
           .agg(countDistinct(col("gram")).as("n_contaminated_grams"))
           .orderBy("doc_id")
       },
-      Some("""WITH corpus AS (
-             |  SELECT doc_id, text FROM documents
-             |  UNION ALL
-             |  SELECT doc_id + 1000000 AS doc_id,
-             |         substr(text, 1, CAST(trunc(n_chars * 0.85) AS INT)) AS text
-             |  FROM documents),
+      Some(raw"""WITH ${SimilarityQueries.corpusWithDupsSql()},
              |w AS (
              |  SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS w FROM corpus),
              |g AS (
@@ -1288,12 +1284,7 @@ object TextQueries {
             coalesce(col("bloom_caught"), lit(false)).as("bloom_caught"))
           .orderBy("doc_id")
       },
-      Some("""WITH corpus AS (
-             |  SELECT doc_id, text FROM documents
-             |  UNION ALL
-             |  SELECT doc_id + 1000000 AS doc_id,
-             |         substr(text, 1, CAST(trunc(n_chars * 0.85) AS INT)) AS text
-             |  FROM documents),
+      Some(raw"""WITH ${SimilarityQueries.corpusWithDupsSql()},
              |w AS (
              |  SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS w FROM corpus),
              |g AS (
@@ -1340,12 +1331,7 @@ object TextQueries {
           .agg(count(lit(1)).as("n_contaminated_windows"))
           .orderBy("doc_id")
       },
-      Some("""WITH corpus AS (
-             |  SELECT doc_id, text FROM documents
-             |  UNION ALL
-             |  SELECT doc_id + 1000000 AS doc_id,
-             |         substr(text, 1, CAST(trunc(n_chars * 0.85) AS INT)) AS text
-             |  FROM documents),
+      Some(raw"""WITH ${SimilarityQueries.corpusWithDupsSql()},
              |w AS (
              |  SELECT DISTINCT doc_id, substr(text, CAST(i AS INT), 32) AS win
              |  FROM corpus, unnest(range(1, length(text) - 30)) AS t(i)
@@ -2853,12 +2839,7 @@ object TextQueries {
           )
           .orderBy("doc_id")
       },
-      Some("""WITH corpus AS (
-             |  SELECT doc_id, text FROM documents
-             |  UNION ALL
-             |  SELECT doc_id + 1000000 AS doc_id,
-             |         substr(text, 1, CAST(trunc(n_chars * 0.85) AS INT)) AS text
-             |  FROM documents),
+      Some(raw"""WITH ${SimilarityQueries.corpusWithDupsSql()},
              |w AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS ws FROM corpus),
              |ch AS (
              |  SELECT doc_id, CAST(i AS INT) AS pos,

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.operators.VectorOps
 
 /** Ground-truth recall for the near-dup operators: every corpus plants one
   * near-duplicate per document (an 85%-truncated copy at doc_id + 1e6), so
@@ -343,7 +344,7 @@ class DedupRecallSpec extends AnyFunSuite with SparkSpec {
   test("semdedup drops most planted copies with the exact keeper and never a base vector") {
     // The production drop table — the registered q_semdedup is its banded
     // report wrapper.
-    val out = SimilarityQueries.semdedupProduction(spark, sfDir).cache()
+    val out = VectorOps.semdedupProduction(spark, sfDir).cache()
     val total = Tables.embeddings(spark, sfDir).count()
     val planted = out.filter(col("vec_id") >= 1000000L)
     val recall = planted.count().toDouble / total
@@ -393,12 +394,12 @@ class DedupRecallSpec extends AnyFunSuite with SparkSpec {
     val corpus = base.unionAll(planted)
     val total = base.count().toDouble
     val k = 1100 // > the old cap of 1024
-    val (coarse, fine) = SimilarityQueries.trainTwoLevelCentroids(corpus, k, stride = 1)
+    val (coarse, fine) = VectorOps.trainTwoLevelCentroids(corpus, k, stride = 1)
     val totalCells = fine.map(_.length).sum
     assert(totalCells > 1024, s"forced cell count $totalCells must exceed the old flat ceiling")
     assert(coarse.length <= 64,
       s"coarse level must stay O(√k) so per-row work is O(2√k·dim): ${coarse.length}")
-    val out = SimilarityQueries.semdedupDrops(corpus, k, stride = 1).cache()
+    val out = VectorOps.semdedupDrops(corpus, k, stride = 1).cache()
     out.collect()
     val plantedOut = out.filter(col("vec_id") >= 1000000L)
     val recall = plantedOut.count().toDouble / total
@@ -465,8 +466,8 @@ class DedupRecallSpec extends AnyFunSuite with SparkSpec {
   test("kmeans clustering is deterministic, covers all k clusters, and Lloyd improves on the init") {
     // Production assignment table — the registered q_kmeans_clusters is
     // its banded audit wrapper.
-    val a = SimilarityQueries.kmeansAssignments(spark, sfDir).collect()
-    val b = SimilarityQueries.kmeansAssignments(spark, sfDir).collect()
+    val a = VectorOps.kmeansAssignments(spark, sfDir).collect()
+    val b = VectorOps.kmeansAssignments(spark, sfDir).collect()
     // Strict Row equality is sound because training accumulates through
     // quantized-long sums (exact, order-independent — see
     // trainIvfCentroids): the centroids are bit-identical across runs
@@ -481,13 +482,13 @@ class DedupRecallSpec extends AnyFunSuite with SparkSpec {
     // must beat assigning against the raw init centroids (first k
     // vectors) on mean cos-to-assigned-centroid.
     val e = Tables.embeddings(spark, sfDir)
-    val init = SimilarityQueries.trainIvfCentroids(e, k = 10, iters = 0)
+    val init = VectorOps.trainIvfCentroids(e, k = 10, iters = 0)
     import graft.functions.SimilarityFunctions.{bind, cosine}
     def meanAssigned(cents: Array[Seq[Double]]): Double = {
       val arr = array(cents.map(c => cosine(col("embedding"), typedLit(c))).toIndexedSeq: _*)
       e.select(bind(arr)(a => array_max(a)).as("m")).agg(avg("m")).head().getDouble(0)
     }
-    val trained = SimilarityQueries.trainIvfCentroids(e, k = 10, iters = 5)
+    val trained = VectorOps.trainIvfCentroids(e, k = 10, iters = 5)
     val (mInit, mTrained) = (meanAssigned(init), meanAssigned(trained))
     assert(mTrained > mInit + 0.01,
       s"Lloyd iterations must materially improve the objective: init=$mInit trained=$mTrained")
@@ -551,9 +552,9 @@ class DedupRecallSpec extends AnyFunSuite with SparkSpec {
     // Gate the PRODUCTION candidate pipelines — the registered queries are
     // their banded-report wrappers (annBandedReport) for the driver gate.
     val annPipelines = Seq[(String, Double, org.apache.spark.sql.DataFrame)](
-      ("q_ann_lsh", 0.9, SimilarityQueries.annLshNeighbors(spark, sfDir)),
-      ("q_ann_ivf", 0.9, SimilarityQueries.annIvfNeighbors(spark, sfDir)),
-      ("q_ann_ivfpq", 0.9, SimilarityQueries.annIvfPqNeighbors(spark, sfDir))
+      ("q_ann_lsh", 0.9, VectorOps.annLshNeighbors(spark, sfDir)),
+      ("q_ann_ivf", 0.9, VectorOps.annIvfNeighbors(spark, sfDir)),
+      ("q_ann_ivfpq", 0.9, VectorOps.annIvfPqNeighbors(spark, sfDir))
     )
     for ((ann, meanFloor, df) <- annPipelines) {
       val approx = top1cosDf(df)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.TextFunctions._
-import graft.operators.EtlOps
+import graft.operators.{EtlOps, VectorOps}
 
 /** The full LLM training-data curation pipeline, composed end-to-end from
   * the engine's own operators — the "can a user actually run their whole
@@ -252,14 +252,14 @@ class LlmPipelineSpec extends AnyFunSuite with SparkSpec {
 
     // 1. Topic clustering: every base vector gets a cluster. (Production
     // assignment table — the registered query is its banded report.)
-    val clusters = SimilarityQueries
+    val clusters = VectorOps
       .kmeansAssignments(spark, sfDir)
       .select("vec_id", "cluster")
     assert(clusters.count() == total, "every base vector gets a topic cluster")
 
     // 2. SemDeDup over the planted corpus; survivors = corpus minus drops.
     // (Production drop table — the registered query is its banded report.)
-    val drops = SimilarityQueries.semdedupProduction(spark, sfDir).cache()
+    val drops = VectorOps.semdedupProduction(spark, sfDir).cache()
     val survivors = corpus.join(drops.select("vec_id"), Seq("vec_id"), "left_anti").cache()
     assert(survivors.count() == corpus.count() - drops.count(), "drops must partition the corpus")
     // Keeper integrity ON THIS CORPUS: drops are planted copies whose

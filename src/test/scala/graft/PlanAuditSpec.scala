@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
+import graft.operators.VectorOps
 
 /** Physical-plan audit (SURVEY.md §5): these assertions pin the *plan shape*
   * that makes each operator viable at 100 TB — filters pushed to the parquet
@@ -75,9 +76,9 @@ class PlanAuditSpec extends AnyFunSuite with SparkSpec {
     // baseline, the gate's price); the no-cross-join pin holds on the
     // PRODUCTION candidate pipelines.
     val annPipelines = Seq(
-      "annLshNeighbors" -> SimilarityQueries.annLshNeighbors(spark, sfDir),
-      "annIvfNeighbors" -> SimilarityQueries.annIvfNeighbors(spark, sfDir),
-      "annIvfPqNeighbors" -> SimilarityQueries.annIvfPqNeighbors(spark, sfDir),
+      "annLshNeighbors" -> VectorOps.annLshNeighbors(spark, sfDir),
+      "annIvfNeighbors" -> VectorOps.annIvfNeighbors(spark, sfDir),
+      "annIvfPqNeighbors" -> VectorOps.annIvfPqNeighbors(spark, sfDir),
       // The registered q_dedup_images / q_dedup_simhash reports
       // deliberately cross-join a ~2% signature sample for their
       // brute-force ball checks, and q_dedup_minhash cross-joins its
@@ -600,7 +601,7 @@ class PlanAuditSpec extends AnyFunSuite with SparkSpec {
     // tables.
     for ((label, df) <- Seq(
         "pcaProjections" -> SimilarityQueries.pcaProjections(spark, sfDir),
-        "kmeansAssignments" -> SimilarityQueries.kmeansAssignments(spark, sfDir))) {
+        "kmeansAssignments" -> VectorOps.kmeansAssignments(spark, sfDir))) {
       val p = df.queryExecution.executedPlan.toString
       assert(!p.contains("hashpartitioning"),
         s"$label is a pure per-row map; only the output orderBy may range-partition:\n$p")
@@ -612,7 +613,7 @@ class PlanAuditSpec extends AnyFunSuite with SparkSpec {
     // (same device as the LSH reuse audit above). Pin the PRODUCTION drop
     // table (the registered query is its banded report wrapper, whose
     // 1-row broadcast crossJoin would trip the no-BNLJ assertion).
-    val df = SimilarityQueries.semdedupProduction(spark, sfDir)
+    val df = VectorOps.semdedupProduction(spark, sfDir)
     df.collect()
     val p = df.queryExecution.executedPlan.toString
     assert(p.linesIterator.exists(l => l.contains("ReusedExchange") || l.contains("ReusedQueryStage")),

@@ -222,21 +222,24 @@ class QueryRegistrySpec extends AnyFunSuite with SparkSpec {
     assert(exact("a") == ((4L, 4L, 0.5, false)))
     assert(exact("r") == ((2L, 0L, null, null)))
     assert(exact("c") == ((0L, 2L, null, null)))
-    // The binned rows keep only types with reference deciles, so 'c' drops.
-    for ((name, ks, alert) <- Seq(
-        ("q_drift_ks_approx", "ks", "drift_alert"),
-        ("q_stream_drift_ks", "ks_binned", "ks_alert"))) {
-      val got = byType(name, ks, alert)
-      assert(got.keySet == Set("a", "r"), name)
-      assert(got("r") == ((2L, 0L, null, null)), name)
-      assert(got("a")._4 == false, name)
-    }
-    // q_drift_ks_approx's band flags follow KS: NULL on the empty half.
+    // q_drift_ks_approx keeps every type of its exact arm, as its oracle
+    // does; the stream row's binned report keeps only types with
+    // reference deciles, so 'c' drops there.
+    val approx = byType("q_drift_ks_approx", "ks", "drift_alert")
+    assert(approx.keySet == Set("a", "c", "r"))
+    assert(approx("r") == ((2L, 0L, null, null)))
+    assert(approx("c") == ((0L, 2L, null, null)))
+    assert(approx("a")._4 == false)
+    val stream = byType("q_stream_drift_ks", "ks_binned", "ks_alert")
+    assert(stream.keySet == Set("a", "r"))
+    assert(stream("r") == ((2L, 0L, null, null)))
+    assert(stream("a")._4 == false)
+    // q_drift_ks_approx's band flags follow KS: NULL on an empty half.
     val flags = QueryRegistry.queries("q_drift_ks_approx")(spark, dir.toString).collect()
       .map(r => r.getAs[String]("event_type") ->
         ((r.getAs[Any]("binned_le_exact"), r.getAs[Any]("gap_in_band"))))
       .toMap
-    assert(flags == Map("a" -> ((true, true)), "r" -> ((null, null))))
+    assert(flags == Map("a" -> ((true, true)), "c" -> ((null, null)), "r" -> ((null, null))))
     // PSI and its alert follow the same rule: smoothing alone would give
     // 'r' a large PSI with no current data at all.
     for ((name, alert) <- Seq(

@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import graft.operators.VectorOps
 
 /** r17 optimization gate: the Lloyd trainers moved from per-iteration Spark
   * jobs to driver-local iteration over the same bounded collected sample
@@ -23,8 +24,8 @@ class TrainerEquivalenceSpec extends AnyFunSuite with SparkSpec {
   test("flat Lloyd: driver-local ≡ distributed, bit-for-bit (init and trained)") {
     val e = Tables.embeddings(spark, sfDir)
     for ((k, iters, sampleN, stride) <- Seq((10, 5, 4096, 10), (16, 3, 4096, 10), (7, 2, 512, 3))) {
-      val (iD, cD) = SimilarityQueries.trainIvfCentroidsWithInit(e, k, iters, sampleN, stride)
-      val (iS, cS) = SimilarityQueries.trainIvfCentroidsWithInitDistributed(e, k, iters, sampleN, stride)
+      val (iD, cD) = VectorOps.trainIvfCentroidsWithInit(e, k, iters, sampleN, stride)
+      val (iS, cS) = VectorOps.trainIvfCentroidsWithInitDistributed(e, k, iters, sampleN, stride)
       assertSame(s"init k=$k", iD, iS)
       assertSame(s"trained k=$k iters=$iters", cD, cS)
     }
@@ -33,8 +34,8 @@ class TrainerEquivalenceSpec extends AnyFunSuite with SparkSpec {
   test("two-level Lloyd: driver-local ≡ distributed, bit-for-bit (coarse and fine forest)") {
     val e = Tables.embeddings(spark, sfDir)
     for (k <- Seq(16, 36)) {
-      val (cD, fD) = SimilarityQueries.trainTwoLevelCentroids(e, k, stride = 1)
-      val (cS, fS) = SimilarityQueries.trainTwoLevelCentroidsDistributed(e, k, stride = 1)
+      val (cD, fD) = VectorOps.trainTwoLevelCentroids(e, k, stride = 1)
+      val (cS, fS) = VectorOps.trainTwoLevelCentroidsDistributed(e, k, stride = 1)
       assertSame(s"coarse k=$k", cD, cS)
       assert(fD.length == fS.length, s"fine cell-group count k=$k")
       fD.zip(fS).zipWithIndex.foreach { case ((gd, gs), c) =>
